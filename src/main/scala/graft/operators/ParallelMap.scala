@@ -1,9 +1,14 @@
 package graft.operators
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+
 import scala.reflect.ClassTag
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.SparkEnv
+import org.apache.spark.rdd.RDD
+import org.apache.spark.serializer.{KryoSerializer, SerializerInstance}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 
 /** A UDF raised on a specific input. Mirrors the reference's error
   * attribution contract — the original exception is re-raised client-side
@@ -61,10 +66,10 @@ final case class InputTooBig(inputIndex: Long, estimatedBytes: Long, limitBytes:
   *   - tuple-unpack calling convention (:553-556) is native in Scala —
   *     pass `{ case (a, b) => ... }`;
   *   - first UDF exception re-raised with input attribution (UdfFailure);
-  *   - `generator=True` => `stream(...)`: a lazy iterator with
-  *     one-partition-at-a-time backpressure (toLocalIterator), the analog
-  *     of the reference's 50%-RAM result-queue backpressure
-  *     (node_service worker_client.py:28,792-793);
+  *   - `generator=True` => `stream(...)`: a lazy as-completed iterator
+  *     whose `window` bounds the slices in flight, the analog of the
+  *     reference's 50%-RAM result-queue backpressure (node_service
+  *     worker_client.py:28,792-793);
   *   - `max_parallelism` => explicit partition count.
   *
   * What Spark absorbs rather than re-implements (SURVEY.md §2.2-2.3): work
@@ -73,9 +78,17 @@ final case class InputTooBig(inputIndex: Long, estimatedBytes: Long, limitBytes:
   * adaptive RAM (E6) is JVM-managed unified memory. Nested rpm-from-UDF
   * (L4) is not expressible from executors — compose on the driver.
   *
+  * Every list mode but runWithLiveLogs runs one RDD plan (see `plan`): the
+  * driver shuffles the indexed inputs (the reference's hot-spot
+  * decorrelation, _remote_parallel_map.py:312-313), `parallelize` cuts
+  * them into contiguous slices, and one `map` applies `f` — one Spark job
+  * with one stage, no Catalyst planning and no shuffle.
+  *
   * Inputs/outputs are opaque to the engine (the reference moves pickled
-  * blobs; SURVEY.md §1.2), so encoders are Kryo — schema-free by design.
-  * For schema-ful pipelines use the DataFrame surface instead.
+  * blobs; SURVEY.md §1.2), so they travel as Kryo bytes through an explicit
+  * KryoSerializer, never the session's default Java serializer: neither
+  * needs to be java.io.Serializable. For schema-ful pipelines use the
+  * DataFrame surface instead.
   */
 object ParallelMap {
 
@@ -106,9 +119,6 @@ object ParallelMap {
     require(funcGpus >= 0 && funcRamGb >= 0, "resource amounts must be >= 0")
     def isDefault: Boolean = funcCpus == 1 && funcGpus == 0 && funcRamGb == 0
   }
-
-  private def kryoPair[T: ClassTag]: Encoder[(Long, T)] =
-    Encoders.kryo[(Long, T)]
 
   /** Concurrency cap implied by the resource request — LOCAL MODE ONLY:
     * on a cluster the request becomes a TaskResourceProfile (see
@@ -143,11 +153,7 @@ object ParallelMap {
   /** Attach a stage-level TaskResourceProfile where the cluster manager
     * supports it; identity in local mode (which cannot run task profiles —
     * there the request is enforced via the slices cap instead). */
-  private def applyResources[T: ClassTag](
-      spark: SparkSession,
-      rdd: org.apache.spark.rdd.RDD[T],
-      r: Resources
-  ): org.apache.spark.rdd.RDD[T] =
+  private def applyResources[T](spark: SparkSession, rdd: RDD[T], r: Resources): RDD[T] =
     if (r.isDefault || spark.sparkContext.isLocal) rdd
     else {
       import org.apache.spark.resource.{ResourceProfileBuilder, TaskResourceRequests}
@@ -195,30 +201,103 @@ object ParallelMap {
     )
   }
 
-  /** The indexed, repartitioned input dataset every Dataset-backed mode
-    * maps over (index rides along for error/log attribution). */
-  private def indexedDataset[I: ClassTag](
+  /** Kryo codec for payloads. One KryoSerializer per JVM, built from the
+    * conf of its SparkEnv (its Kryo pool is thread-safe); a
+    * SerializerInstance is not, so every task and every driver-side call
+    * takes its own from `codec()`. Items are written as a Kryo stream: a
+    * stream flushes as it goes, so unlike `serialize` a blob is not capped
+    * at spark.kryoserializer.buffer.max (a whole slice can exceed it). */
+  private object Payload {
+    private lazy val kryo = new KryoSerializer(SparkEnv.get.conf)
+
+    def codec(): SerializerInstance = kryo.newInstance()
+
+    def encode[T: ClassTag](c: SerializerInstance, items: Iterator[T]): Array[Byte] = {
+      val out = new ByteArrayOutputStream()
+      c.serializeStream(out).writeAll(items).close()
+      out.toByteArray
+    }
+
+    def decode[T](c: SerializerInstance, bytes: Array[Byte]): Iterator[T] =
+      c.deserializeStream(new ByteArrayInputStream(bytes)).asIterator.asInstanceOf[Iterator[T]]
+  }
+
+  /** The (index, input) pairs as one RDD element per slice: the driver
+    * shuffles them (the reference client's hot-spot decorrelation,
+    * _remote_parallel_map.py:312-313 — inputs that cost alike because they
+    * sit side by side land on different tasks), cuts the shuffled order
+    * into `slices` contiguous slices and Kryo-encodes each slice. */
+  private def sliced[I](spark: SparkSession, inputs: Seq[I], slices: Int): RDD[Array[Byte]] = {
+    val in = inputs.toIndexedSeq
+    val n = in.size
+    val order = Array.range(0, n)
+    val rnd = java.util.concurrent.ThreadLocalRandom.current()
+    for (i <- n - 1 to 1 by -1) {
+      val j = rnd.nextInt(i + 1)
+      val t = order(i); order(i) = order(j); order(j) = t
+    }
+    val codec = Payload.codec()
+    val encoded = (0 until slices).map { s =>
+      val from = (s.toLong * n / slices).toInt
+      val until = ((s + 1).toLong * n / slices).toInt
+      Payload.encode(codec, (from until until).iterator.map(k => (order(k).toLong, in(order(k)))))
+    }
+    spark.sparkContext.parallelize(encoded, slices)
+  }
+
+  /** The plan behind every list mode but runWithLiveLogs: one `map` over
+    * the driver-shuffled slices applies `g` to each (index, input) pair
+    * and yields the slice's results as Kryo bytes — one element per
+    * partition, one stage, no shuffle. */
+  private def plan[I, R: ClassTag](
+      spark: SparkSession,
+      inputs: Seq[I],
+      slices: Int,
+      resources: Resources
+  )(g: (Long, I) => R): RDD[Array[Byte]] = {
+    val rdd = sliced(spark, inputs, slices).map { bytes =>
+      val codec = Payload.codec()
+      Payload.encode(codec, Payload.decode[(Long, I)](codec, bytes).map { case (i, x) => g(i, x) })
+    }
+    applyResources(spark, rdd, resources)
+  }
+
+  /** Run `plan` as one Spark job and decode every slice's results. */
+  private def collectPlan[I, R: ClassTag](
       spark: SparkSession,
       inputs: Seq[I],
       maxParallelism: Option[Int],
       resources: Resources
-  ): Dataset[(Long, I)] =
-    spark
-      .createDataset(inputs.zipWithIndex.map { case (x, i) => (i.toLong, x) })(kryoPair[I])
-      .repartition(sliceCount(spark, inputs.size, maxParallelism, resources))
+  )(g: (Long, I) => R): Seq[R] = {
+    val slices = sliceCount(spark, inputs.size, maxParallelism, resources)
+    val parts = plan(spark, inputs, slices, resources)(g).collect()
+    val codec = Payload.codec()
+    parts.iterator.flatMap(Payload.decode[R](codec, _)).toVector
+  }
 
-  /** Build the indexed, error-attributed dataset backing all modes. */
-  private def plan[I: ClassTag, O: ClassTag](
-      spark: SparkSession,
-      inputs: Seq[I],
-      f: I => O,
-      maxParallelism: Option[Int],
-      resources: Resources = Resources()
-  ): Dataset[(Long, O)] =
-    indexedDataset(spark, inputs, maxParallelism, resources).map { case (idx, x) =>
-      try (idx, f(x))
-      catch { case e: Throwable => throw UdfFailure(idx, e) }
-    }(kryoPair[O])
+  /** `f` on `x`, an exception re-raised with the input's attribution. */
+  private def attributed[I, O](f: I => O, idx: Long, x: I): O =
+    try f(x)
+    catch { case e: Throwable => throw UdfFailure(idx, e) }
+
+  /** `f` on `x`, an exception turned into its message (never throws). */
+  private def outcome[I, O](f: I => O, x: I): Either[String, O] =
+    try Right(f(x))
+    catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
+
+  /** `outcome` plus what `f` printed through Console, capped at
+    * MaxLogBytesPerInput. The cap is BYTES: the raw buffer is truncated
+    * before decoding, so multi-byte output cannot exceed the documented
+    * limit (a chopped trailing codepoint decodes as U+FFFD, which is fine). */
+  private def outcomeWithLogs[I, O](f: I => O, x: I): (Either[String, O], String) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val r = outcome((y: I) => Console.withOut(buf)(f(y)), x)
+    val bytes = buf.toByteArray
+    (r, new String(bytes, 0, math.min(bytes.length, MaxLogBytesPerInput), "UTF-8"))
+  }
+
+  private def toTry[O](r: Either[String, O]): Try[O] =
+    r.fold(msg => Failure(new RuntimeException(msg)), Success(_))
 
   private def newGroup(): String = s"pmap-${java.util.UUID.randomUUID()}"
 
@@ -242,6 +321,43 @@ object ParallelMap {
     e
   }
 
+  /** Record a failed map on the tracker (with the input it is attributed
+    * to, if any); returns the error to re-raise. */
+  private def recordFailure(group: String, e: Throwable): Throwable = {
+    val u = unwrap(e)
+    u match {
+      case uf: UdfFailure       => JobTracker.inputError(group, uf.inputIndex, uf.getMessage)
+      case nf: NestedUdfFailure => JobTracker.inputError(group, nf.outerIndex, nf.getMessage)
+      case _                    => ()
+    }
+    JobTracker.failed(group, u)
+    u
+  }
+
+  /** One blocking list-mode call: a fresh `pmap-` job group carrying the
+    * resource request, JobTracker RUNNING -> COMPLETED (with the per-input
+    * errors `body` caught and returned) or FAILED (the attributed error
+    * re-raised). */
+  private def tracked[T](spark: SparkSession, mode: String, nInputs: Int, resources: Resources)(
+      body: => (T, Seq[(Long, String)])
+  ): T = {
+    val group = newGroup()
+    JobTracker.install(spark)
+    JobTracker.started(group, mode, nInputs)
+    try {
+      val (out, errors) = withGroup(spark, group, s"ParallelMap $mode ($group)") {
+        withResourceProps(spark, resources)(body)
+      }
+      errors.foreach { case (i, msg) => JobTracker.inputError(group, i, msg) }
+      JobTracker.completed(group, nErrors = errors.size)
+      out
+    } catch { case e: Throwable => throw recordFailure(group, e) }
+  }
+
+  /** Per-input errors of an attributed result set. */
+  private def errorsOf(raw: Seq[(Long, Either[String, _])]): Seq[(Long, String)] =
+    raw.collect { case (i, Left(msg)) => (i, msg) }
+
   /** List mode: apply f to every input in parallel, return all results
     * (unordered). Throws UdfFailure(inputIndex, cause) on first UDF error.
     */
@@ -253,30 +369,8 @@ object ParallelMap {
   )(f: I => O): Seq[O] = {
     if (inputs.isEmpty) return Nil // empty short-circuit, no cluster contact
     guardSizes(inputs, f)
-    val group = newGroup()
-    JobTracker.install(spark)
-    JobTracker.started(group, "run", inputs.size)
-    try {
-      val out = withGroup(spark, group, s"ParallelMap run ($group)") {
-        withResourceProps(spark, resources) {
-          val ds = plan(spark, inputs, f, maxParallelism, resources)
-          if (resources.isDefault || spark.sparkContext.isLocal)
-            ds.collect().toSeq.map(_._2)
-          else applyResources(spark, ds.rdd, resources).collect().toSeq.map(_._2)
-        }
-      }
-      JobTracker.completed(group)
-      out
-    } catch {
-      case e: Throwable =>
-        val u = unwrap(e)
-        u match {
-          case uf: UdfFailure =>
-            JobTracker.inputError(group, uf.inputIndex, uf.getMessage)
-          case _ => ()
-        }
-        JobTracker.failed(group, u)
-        throw u
+    tracked(spark, "run", inputs.size, resources) {
+      (collectPlan(spark, inputs, maxParallelism, resources)(attributed(f, _, _)), Nil)
     }
   }
 
@@ -292,37 +386,11 @@ object ParallelMap {
   )(f: I => O): Seq[(Long, Try[O])] = {
     if (inputs.isEmpty) return Nil
     guardSizes(inputs, f)
-    implicit val enc: Encoder[(Long, Either[String, O])] =
-      Encoders.kryo[(Long, Either[String, O])]
-    val group = newGroup()
-    JobTracker.install(spark)
-    JobTracker.started(group, "runAttributed", inputs.size)
-    try {
-      val raw = withGroup(spark, group, s"ParallelMap runAttributed ($group)") {
-        withResourceProps(spark, resources) {
-          indexedDataset(spark, inputs, maxParallelism, resources)
-            .map { case (idx, x) =>
-              val r: Either[String, O] =
-                try Right(f(x))
-                catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
-              (idx, r)
-            }
-            .collect()
-            .toSeq
-        }
+    tracked(spark, "runAttributed", inputs.size, resources) {
+      val raw = collectPlan(spark, inputs, maxParallelism, resources) { (i, x) =>
+        (i, outcome(f, x))
       }
-      raw.foreach {
-        case (i, Left(msg)) => JobTracker.inputError(group, i, msg)
-        case _              => ()
-      }
-      JobTracker.completed(group, nErrors = raw.count(_._2.isLeft))
-      raw.map {
-        case (i, Right(v))  => (i, Success(v))
-        case (i, Left(msg)) => (i, Failure(new RuntimeException(msg)))
-      }
-    } catch {
-      case e: Throwable =>
-        JobTracker.failed(group, unwrap(e)); throw unwrap(e)
+      (raw.map { case (i, r) => (i, toTry(r)) }, errorsOf(raw))
     }
   }
 
@@ -348,58 +416,44 @@ object ParallelMap {
     if (inputs.isEmpty) return Nil // no cluster contact, as in run()
     guardSizes(inputs, f)
     guardSizes(Seq.empty[J], g)
-    val defaultPar = spark.sparkContext.defaultParallelism
     val slices = sliceCount(spark, inputs.size, maxParallelism, resources)
-    val indexed = inputs.zipWithIndex.map { case (x, i) => (i.toLong, x) }
-    implicit val encJ: Encoder[(Long, Long, J)] = Encoders.kryo[(Long, Long, J)]
-    implicit val encO: Encoder[(Long, Long, O)] = Encoders.kryo[(Long, Long, O)]
-    val group = newGroup()
-    JobTracker.install(spark)
-    JobTracker.started(group, "runNested", inputs.size)
-    try {
-      val out = withGroup(spark, group, s"ParallelMap runNested ($group)") {
-        withResourceProps(spark, resources) {
-          spark
-            .createDataset(indexed)(kryoPair[I])
-            .repartition(slices)
-            .flatMap { case (oi, x) =>
-              val js =
-                try f(x)
-                catch { case e: Throwable => throw NestedUdfFailure(oi, -1L, e) }
-              js.iterator.zipWithIndex.map { case (j, ii) => (oi, ii.toLong, j) }
-            }
-            // spread the EXPANDED inner inputs; fan-out sizes are skewed by
-            // nature and the inner stage's parallelism must not inherit
-            // that — nor the OUTER input count (3 outer inputs fanning to
-            // 1M inner ones want the whole cluster). But the caller's
-            // explicit concurrency contract still binds: maxParallelism
-            // and the Resources core cap apply to the g() stage exactly
-            // as they do to the outer stage (a rate-limited or
-            // cores-per-call nested map must not run g() uncapped).
-            .repartition(math.min(
-              maxParallelism.getOrElse(defaultPar),
-              resourceSlicesCap(spark, resources)))
-            .map { case (oi, ii, j) =>
-              try (oi, ii, g(j))
-              catch { case e: Throwable => throw NestedUdfFailure(oi, ii, e) }
-            }
-            .collect()
-            .toSeq
-            .map(_._3)
+    // spread the EXPANDED inner inputs; fan-out sizes are skewed by nature
+    // and the inner stage's parallelism must not inherit that — nor the
+    // OUTER input count (3 outer inputs fanning to 1M inner ones want the
+    // whole cluster). But the caller's explicit concurrency contract still
+    // binds: maxParallelism and the Resources core cap apply to the g()
+    // stage exactly as they do to the outer stage (a rate-limited or
+    // cores-per-call nested map must not run g() uncapped).
+    val innerSlices = math.min(
+      maxParallelism.getOrElse(spark.sparkContext.defaultParallelism),
+      resourceSlicesCap(spark, resources))
+    tracked(spark, "runNested", inputs.size, resources) {
+      // inner inputs cross the shuffle as Kryo bytes, one record each
+      val fanned = sliced(spark, inputs, slices).flatMap { bytes =>
+        val codec = Payload.codec()
+        Payload.decode[(Long, I)](codec, bytes).flatMap { case (oi, x) =>
+          val js =
+            try f(x)
+            catch { case e: Throwable => throw NestedUdfFailure(oi, -1L, e) }
+          js.iterator.zipWithIndex.map { case (j, ii) =>
+            Payload.encode(codec, Iterator.single((oi, ii.toLong, j)))
+          }
         }
       }
-      JobTracker.completed(group)
-      out
-    } catch {
-      case e: Throwable =>
-        val u = unwrap(e)
-        u match {
-          case nf: NestedUdfFailure =>
-            JobTracker.inputError(group, nf.outerIndex, nf.getMessage)
-          case _ => ()
+      val mapped = applyResources(spark, fanned, resources).repartition(innerSlices)
+        .mapPartitions { records =>
+          val codec = Payload.codec()
+          val out = records.flatMap(Payload.decode[(Long, Long, J)](codec, _)).map {
+            case (oi, ii, j) =>
+              try g(j)
+              catch { case e: Throwable => throw NestedUdfFailure(oi, ii, e) }
+          }
+          Iterator.single(Payload.encode(codec, out))
         }
-        JobTracker.failed(group, u)
-        throw u
+      val codec = Payload.codec()
+      val out = applyResources(spark, mapped, resources).collect()
+        .iterator.flatMap(Payload.decode[O](codec, _)).toVector
+      (out, Nil)
     }
   }
 
@@ -423,42 +477,12 @@ object ParallelMap {
   )(f: I => O): Seq[(Long, Try[O], String)] = {
     if (inputs.isEmpty) return Nil
     guardSizes(inputs, f)
-    implicit val enc: Encoder[(Long, Either[String, O], String)] =
-      Encoders.kryo[(Long, Either[String, O], String)]
-    val cap = MaxLogBytesPerInput
-    val group = newGroup()
-    JobTracker.install(spark)
-    JobTracker.started(group, "runWithLogs", inputs.size)
-    try {
-      val raw = withGroup(spark, group, s"ParallelMap runWithLogs ($group)") {
-        indexedDataset(spark, inputs, maxParallelism, Resources())
-          .map { case (idx, x) =>
-            val buf = new java.io.ByteArrayOutputStream()
-            val r: Either[String, O] =
-              try Right(Console.withOut(buf)(f(x)))
-              catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
-            // cap is BYTES: truncate the raw buffer before decoding, so
-            // multi-byte output cannot exceed the documented 100 KB limit
-            // (a chopped trailing codepoint decodes as U+FFFD, which is fine)
-            val bytes = buf.toByteArray
-            val logs = new String(bytes, 0, math.min(bytes.length, cap), "UTF-8")
-            (idx, r, logs)
-          }
-          .collect()
-          .toSeq
+    tracked(spark, "runWithLogs", inputs.size, Resources()) {
+      val raw = collectPlan(spark, inputs, maxParallelism, Resources()) { (i, x) =>
+        (i, outcomeWithLogs(f, x))
       }
-      raw.foreach {
-        case (i, Left(msg), _) => JobTracker.inputError(group, i, msg)
-        case _                 => ()
-      }
-      JobTracker.completed(group, nErrors = raw.count(_._2.isLeft))
-      raw.map {
-        case (i, Right(v), lg)  => (i, Success(v), lg)
-        case (i, Left(msg), lg) => (i, Failure(new RuntimeException(msg)), lg)
-      }
-    } catch {
-      case e: Throwable =>
-        JobTracker.failed(group, unwrap(e)); throw unwrap(e)
+      (raw.map { case (i, (r, lg)) => (i, toTry(r), lg) },
+        errorsOf(raw.map { case (i, (r, _)) => (i, r) }))
     }
   }
 
@@ -518,7 +542,7 @@ object ParallelMap {
     * heartbeat did not beat to the finish line.
     *
     * Inputs are chunked CONTIGUOUSLY (parallelize slices, the reference's
-    * proportional chunking) rather than round-robin shuffled, so
+    * proportional chunking) and, unlike every other mode, not shuffled, so
     * within-partition execution order is input order — deterministic log
     * interleaving per partition. */
   def runWithLiveLogs[I: ClassTag, O: ClassTag](
@@ -529,10 +553,9 @@ object ParallelMap {
     if (inputs.isEmpty) return Nil
     guardSizes(inputs, f)
     val indexed = inputs.zipWithIndex.map { case (x, i) => (i.toLong, x) }
-    // RDD path (accumulator relay needs parallelize) — same slice formula
-    // as every Dataset-backed mode
+    // contiguous and unshuffled (see above): its own parallelize, not
+    // `plan`, but the same slice formula as every other mode
     val slices = sliceCount(spark, inputs.size, maxParallelism, Resources())
-    val cap = MaxLogBytesPerInput
     val sc = spark.sparkContext
     val acc = new LogRelayAcc
     sc.register(acc, "graft.pmap.liveLogs")
@@ -552,41 +575,21 @@ object ParallelMap {
           }
         }
     }
-    val group = newGroup()
-    JobTracker.install(spark)
-    JobTracker.started(group, "runWithLiveLogs", inputs.size)
     sc.addSparkListener(listener)
-    try {
-      val raw = withGroup(spark, group, s"ParallelMap runWithLiveLogs ($group)") {
-        sc.parallelize(indexed, slices)
-          .map { case (idx, x) =>
-            val buf = new java.io.ByteArrayOutputStream()
-            val r: Either[String, O] =
-              try Right(Console.withOut(buf)(f(x)))
-              catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
-            val bytes = buf.toByteArray
-            val logs = new String(bytes, 0, math.min(bytes.length, cap), "UTF-8")
-            acc.add((idx, logs)) // visible to the next heartbeat mid-task
-            (idx, r, logs)
-          }
-          .collect()
-          .toSeq
-      }
+    try tracked(spark, "runWithLiveLogs", inputs.size, Resources()) {
+      val raw = sc.parallelize(indexed, slices)
+        .map { case (idx, x) =>
+          val (r, logs) = outcomeWithLogs(f, x)
+          acc.add((idx, logs)) // visible to the next heartbeat mid-task
+          (idx, r, logs)
+        }
+        .collect()
+        .toSeq
       // completeness sweep: anything no heartbeat delivered fires here
       // (post-job, but exactly-once is preserved via `fired`)
       fire(raw.map { case (i, _, lg) => (i, lg) })
-      raw.foreach {
-        case (i, Left(msg), _) => JobTracker.inputError(group, i, msg)
-        case _                 => ()
-      }
-      JobTracker.completed(group, nErrors = raw.count(_._2.isLeft))
-      raw.map {
-        case (i, Right(v), lg)  => (i, Success(v), lg)
-        case (i, Left(msg), lg) => (i, Failure(new RuntimeException(msg)), lg)
-      }
-    } catch {
-      case e: Throwable =>
-        JobTracker.failed(group, unwrap(e)); throw unwrap(e)
+      (raw.map { case (i, r, lg) => (i, toTry(r), lg) },
+        errorsOf(raw.map { case (i, r, _) => (i, r) }))
     } finally sc.removeSparkListener(listener)
   }
 
@@ -606,12 +609,12 @@ object ParallelMap {
     * 703-707). A straggler partition does not block results from fast
     * partitions (ParallelMapSpec pins this).
     *
-    * Each partition is submitted as its own single-task Spark job (the
-    * shuffle that spreads the inputs is computed once by the first job and
-    * reused). `window` bounds how many partitions may be in flight or
-    * buffered ahead of the consumer — the analog of the reference's
-    * result-queue backpressure (worker_client.py:28,792-793): a slow
-    * consumer stops NEW partition jobs from being submitted once `window`
+    * Each slice of `plan` is submitted as its own single-task Spark job
+    * that reads its slice straight from the driver's `parallelize` (there
+    * is no shuffle to compute or share). `window` bounds how many
+    * partitions may be in flight or buffered ahead of the consumer — the
+    * analog of the reference's result-queue backpressure
+    * (worker_client.py:28,792-793): a slow consumer stops NEW partition jobs from being submitted once `window`
     * results are pending. Default 0 = number of partitions (full
     * parallelism; driver may buffer the whole result set if the consumer
     * never drains — size maxParallelism/window to taste).
@@ -647,16 +650,11 @@ object ParallelMap {
     val group = newGroup()
     JobTracker.install(spark)
     JobTracker.started(group, mode, inputs.size)
-    val rdd = applyResources(
-      spark,
-      plan(spark, inputs, f, maxParallelism, resources).rdd,
-      resources
-    )
-    val parts = rdd.getNumPartitions
+    val parts = sliceCount(spark, inputs.size, maxParallelism, resources)
+    val rdd = plan(spark, inputs, parts, resources)((i, x) => (i, attributed(f, i, x)))
     val w = if (window > 0) math.min(window, parts) else parts
     val sem = new java.util.concurrent.Semaphore(w)
-    val queue =
-      new java.util.concurrent.LinkedBlockingQueue[Either[Throwable, Array[(Long, O)]]]()
+    val queue = new java.util.concurrent.LinkedBlockingQueue[Either[Throwable, Array[Byte]]]()
     val failedFlag = new java.util.concurrent.atomic.AtomicBoolean(false)
     val sc = spark.sparkContext
     val submitter = new Thread(
@@ -669,12 +667,11 @@ object ParallelMap {
           while (p < parts && !failedFlag.get()) {
             sem.acquire()
             if (!failedFlag.get()) {
-              val holder =
-                new java.util.concurrent.atomic.AtomicReference[Array[(Long, O)]]()
+              val holder = new java.util.concurrent.atomic.AtomicReference[Array[Byte]]()
               try {
-                val fa = sc.submitJob[(Long, O), Array[(Long, O)], Unit](
+                val fa = sc.submitJob[Array[Byte], Array[Byte], Unit](
                   rdd,
-                  it => it.toArray,
+                  it => it.next(), // one element per slice
                   Seq(p),
                   (_, a) => holder.set(a), // scheduler thread: store only
                   ()
@@ -701,23 +698,18 @@ object ParallelMap {
     new Iterator[(Long, O)] {
       private var current: Iterator[(Long, O)] = Iterator.empty
       private var taken = 0
+      private lazy val codec = Payload.codec()
       private def advance(): Unit =
         while (!current.hasNext && taken < parts) {
           queue.take() match {
-            case Right(arr) =>
+            case Right(bytes) =>
               taken += 1
               sem.release()
-              current = arr.iterator
+              current = Payload.decode[(Long, O)](codec, bytes)
               if (taken == parts) JobTracker.completed(group)
             case Left(e) =>
               taken = parts // terminal: no further results will be yielded
-              val u = unwrap(e)
-              u match {
-                case uf: UdfFailure =>
-                  JobTracker.inputError(group, uf.inputIndex, uf.getMessage)
-                case _ => ()
-              }
-              JobTracker.failed(group, u)
+              val u = recordFailure(group, e)
               // stop the submitter: flag first, then release enough
               // permits to unpark it from sem.acquire (its loop re-checks
               // the flag and exits without submitting)
@@ -751,24 +743,11 @@ object ParallelMap {
       maxParallelism: Option[Int] = None,
       resources: Resources = Resources(),
       window: Int = 0
-  )(f: I => O): Iterator[(Long, Try[O], String)] = {
-    val cap = MaxLogBytesPerInput
+  )(f: I => O): Iterator[(Long, Try[O], String)] =
+    // the input index rides on the streamIndexed envelope
     streamIndexed[I, (Either[String, O], String)](
       spark, inputs, maxParallelism, resources, window, "streamWithLogs"
-    ) { x =>
-      // capture stdout and classify the outcome per input; the input index
-      // rides on the streamIndexed envelope
-      val buf = new java.io.ByteArrayOutputStream()
-      val r: Either[String, O] =
-        try Right(Console.withOut(buf)(f(x)))
-        catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
-      val bytes = buf.toByteArray
-      (r, new String(bytes, 0, math.min(bytes.length, cap), "UTF-8"))
-    }.map {
-      case (idx, (Right(v), lg))  => (idx, Success(v), lg)
-      case (idx, (Left(msg), lg)) => (idx, Failure(new RuntimeException(msg)), lg)
-    }
-  }
+    )(outcomeWithLogs(f, _)).map { case (idx, (r, lg)) => (idx, toTry(r), lg) }
 
   /** Dataset-side variant for schema-ful pipelines: same wrapper semantics,
     * but distributed end-to-end (no driver materialization of inputs).
@@ -852,10 +831,7 @@ object ParallelMap {
           interruptOnCancel = true)
         if (!cancelled.get()) {
           val r = withResourceProps(spark, resources) {
-            val ds = plan(spark, inputs, f, maxParallelism, resources)
-            if (resources.isDefault || spark.sparkContext.isLocal)
-              ds.collect().toSeq.map(_._2)
-            else applyResources(spark, ds.rdd, resources).collect().toSeq.map(_._2)
+            collectPlan(spark, inputs, maxParallelism, resources)(attributed(f, _, _))
           }
           // a cancel that raced the submission wins: results are discarded
           // (completeExceptionally in cancel() seals the future first)

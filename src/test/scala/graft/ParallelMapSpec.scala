@@ -353,6 +353,71 @@ class ParallelMapSpec extends AnyFunSuite {
     assert(out.sorted == (0 until 40))
   }
 
+  test("payloads need not be java.io.Serializable in any list mode") {
+    // the reference moves opaque pickled blobs: inputs and results travel
+    // as Kryo bytes, never through the session's Java serializer
+    val in = (0 until 12).map(new PlainIn(_))
+    val want = (0 until 12).map(_ * 2).toSet
+    def values(out: Iterable[PlainOut]) = out.map(_.v).toSet
+    val f = (p: PlainIn) => new PlainOut(p.n * 2)
+    assert(values(ParallelMap.run(spark, in, Some(3))(f)) == want)
+    assert(values(ParallelMap.stream(spark, in, Some(3))(f).toSeq) == want)
+    assert(values(ParallelMap.runAttributed(spark, in, Some(3))(f).map(_._2.get)) == want)
+    assert(values(ParallelMap.runWithLogs(spark, in, Some(3))(f).map(_._2.get)) == want)
+    assert(values(ParallelMap.runDetached(spark, in, Some(3))(f).result()) == want)
+    val nested = ParallelMap.runNested(spark, in, Some(3))(p => Seq(p, new PlainIn(p.n + 100)))(f)
+    assert(values(nested) == want ++ (0 until 12).map(n => (n + 100) * 2))
+  }
+
+  test("a slice larger than Kryo's buffer cap still travels") {
+    // 4 x 20 MB inputs in one slice: 80 MB of payload in one blob, above
+    // spark.kryoserializer.buffer.max (64 MB) — each input alone is below it
+    val mb20 = 20 * 1000 * 1000
+    val out = ParallelMap.run(spark, Seq.fill(4)(new Array[Byte](mb20)), Some(1))(_.length)
+    assert(out == Seq.fill(4)(mb20))
+  }
+
+  test("a one-input run is one Spark job of one stage with no shuffle") {
+    import org.apache.spark.scheduler._
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Int]() // job id -> stages
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g != null && g.startsWith("pmap-")) jobs.put(e.jobId, e.stageInfos.size)
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(ParallelMap.run(spark, Seq(7L))(x => 3 * x + 1) == Seq(22L))
+      // listener events are async — poll until every started job ended
+      val deadline = System.currentTimeMillis() + 5000
+      def allEnded = !jobs.isEmpty && jobs.keySet.stream.allMatch(j => ended.contains(j))
+      while (!allEnded && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      val stages = scala.jdk.CollectionConverters.MapHasAsScala(jobs).asScala.toMap
+      assert(stages.size == 1, s"expected one Spark job, saw $stages")
+      assert(stages.values.head == 1, s"expected one stage, saw $stages")
+      assert(shuffleWrite.get == 0L)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("inputs are shuffled across slices: adjacent costly inputs spread out") {
+    // the reference client shuffles inputs before chunking
+    // (_remote_parallel_map.py:312-313); contiguous slices of the input
+    // order would pin the 10 costly inputs at the end to one task
+    val out = ParallelMap.run(spark, 0 until 40, maxParallelism = Some(4)) { x =>
+      if (x >= 30) Thread.sleep(20)
+      (x, org.apache.spark.TaskContext.getPartitionId())
+    }
+    assert(out.map(_._1).sorted == (0 until 40))
+    val costlyParts = out.collect { case (x, p) if x >= 30 => p }.toSet
+    assert(costlyParts.size >= 2, s"costly inputs all ran in partition(s) $costlyParts")
+  }
+
   test("nested map: fan-out then inner map in one plan (test_nested_rpm.py analog)") {
     // input i fans out to i copies of i; inner stage multiplies by 10
     val out = ParallelMap.runNested(spark, Seq(1, 2, 3))(i => Seq.fill(i)(i))(_ * 10)
@@ -414,3 +479,8 @@ object LiveRelayProbe {
   @volatile var stragglerDone = false
   @volatile var liveBeforeStraggler = false
 }
+
+/** Payload types that are neither case classes nor java.io.Serializable:
+  * a parallel map must move them anyway. */
+final class PlainIn(val n: Int)
+final class PlainOut(val v: Int)
