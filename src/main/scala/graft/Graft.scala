@@ -119,10 +119,6 @@ object Graft {
   )(f: I => Seq[J])(g: J => O): Seq[O] =
     ParallelMap.runNested(spark, inputs, maxParallelism, resources)(f)(g)
 
-  /** Bulk path: same semantics over a Dataset, no driver materialization. */
-  def mapDataset[I, O: org.apache.spark.sql.Encoder](ds: Dataset[I])(f: I => O): Dataset[O] =
-    ParallelMap.mapDataset(ds)(f)
-
   // ---- storage ----
 
   def readParquet(spark: SparkSession, path: String): DataFrame = Io.readParquet(spark, path)

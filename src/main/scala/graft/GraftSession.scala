@@ -8,7 +8,9 @@ import org.apache.spark.sql.SparkSession
   * is the one you'd also set on a real 1000-executor cluster:
   *   - AQE on: runtime coalescing + skew-join splitting replace the
   *     reference's work-stealing ring (SURVEY.md §2.2 P7 — Spark's
-  *     scheduler + AQE absorb it).
+  *     scheduler + AQE absorb it). Coalescing keeps Spark's 1 MB
+  *     minPartitionSize floor; the compute-dense pair kernels pin their
+  *     own parallelism in the plan instead (LlmOps.triangleSelfJoin).
   *   - shuffle.partitions tracks cores locally; on a cluster this would be
   *     2-3x total cores and AQE coalesces down.
   *   - UTC session TZ so timestamp semantics match the DuckDB oracle.
@@ -39,21 +41,6 @@ object GraftSession {
       .config("spark.dynamicAllocation.maxExecutors", maxExecutors.toString)
       .config("spark.dynamicAllocation.executorIdleTimeout", s"${idleTimeoutSec}s")
 
-  /** AQE partition-coalescing floor — back at Spark's 1 MB default
-    * (r16). r15 dropped it to 64 KB session-globally because AQE's
-    * byte-proxy coalescing squeezed the compute-dense pair kernels
-    * (e02: 6.7 CPU-seconds in 3 tasks), but the r16 full-suite per-query
-    * A/B (64 KB vs 1 MB, plus an ABA subset recheck) showed the global
-    * change was a wash-to-loss everywhere EXCEPT those kernels — the only
-    * reproducible beneficiaries were the all-pairs cosine paths (e02,
-    * d10). Those now pin their own parallelism at the PLAN level
-    * (repartition-by-num join inputs, exempt from coalescing by contract
-    * — see LlmOps.triangleSelfJoin), which is scale-correct in any
-    * deployment, so the session keeps the stock byte floor. Env override
-    * retained for byte-bound deployments that want a different floor. */
-  private def minPartitionSize: String =
-    sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m")
-
   private def common(appName: String): SparkSession.Builder =
     SparkSession
       .builder()
@@ -61,7 +48,6 @@ object GraftSession {
       .withExtensions(new GraftExtensions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", minPartitionSize)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")

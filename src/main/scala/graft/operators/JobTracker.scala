@@ -30,8 +30,8 @@ object JobTracker {
 
   val MaxErrorsPerJob = 1000
 
-  /** Retained job records; oldest TERMINAL records (and their spark-job /
-    * stage correlations) are evicted past this, so a long-lived driver's
+  /** Retained job records; oldest TERMINAL records (and their stage
+    * correlations) are evicted past this, so a long-lived driver's
     * registry stays bounded — like the reference's history table, which
     * pages old jobs out to storage rather than keeping them in RAM. */
   val MaxJobs = 10000
@@ -79,8 +79,7 @@ object JobTracker {
   }
 
   private val records = new ConcurrentHashMap[String, Record]()
-  // sparkJobId / stageId -> pmap jobId, filled by the listener
-  private val sparkToPmap = new ConcurrentHashMap[Int, String]()
+  // stageId -> pmap jobId, filled by the listener
   private val stageToPmap = new ConcurrentHashMap[Int, String]()
   // listener registration is per SparkContext: a stopped-and-recreated
   // session must get a fresh listener, so track the application id
@@ -103,7 +102,6 @@ object JobTracker {
           .take(overBy)
       victims.foreach { r =>
         records.remove(r.jobId)
-        sparkToPmap.entrySet().removeIf(e => e.getValue == r.jobId)
         stageToPmap.entrySet().removeIf(e => e.getValue == r.jobId)
       }
     }
@@ -118,7 +116,6 @@ object JobTracker {
       // new app's tasks to old pmap records (inflating nTasks/taskTimeMs
       // in jobs()/usageDaily()). The RECORDS survive — history spans
       // sessions by design — only the id correlations reset.
-      sparkToPmap.clear()
       stageToPmap.clear()
       spark.sparkContext.addSparkListener(new SparkListener {
         override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -126,7 +123,6 @@ object JobTracker {
             .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
           group.filter(_.startsWith("pmap-")).foreach { g =>
             Option(records.get(g)).foreach { r =>
-              sparkToPmap.put(e.jobId, g)
               e.stageIds.foreach(sid => stageToPmap.put(sid, g))
               r.synchronized { r.sparkJobIds = e.jobId :: r.sparkJobIds }
             }
@@ -232,6 +228,6 @@ object JobTracker {
   }
 
   private[graft] def clearForTest(): Unit = {
-    records.clear(); sparkToPmap.clear(); stageToPmap.clear()
+    records.clear(); stageToPmap.clear()
   }
 }

@@ -2,13 +2,14 @@ package graft.operators
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
+import scala.concurrent.ExecutionContext
 import scala.reflect.ClassTag
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import org.apache.spark.serializer.{KryoSerializer, SerializerInstance}
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** A UDF raised on a specific input. Mirrors the reference's error
   * attribution contract — the original exception is re-raised client-side
@@ -134,21 +135,6 @@ object ParallelMap {
         else math.max(1, (Runtime.getRuntime.maxMemory() / 1e9 / r.funcRamGb).toInt)
       math.min(byCpu, byRam)
     }
-
-  /** Run `body` with the resource request visible on every Spark job it
-    * submits (job-local properties are captured at submit time). */
-  private def withResourceProps[T](spark: SparkSession, r: Resources)(body: => T): T = {
-    val sc = spark.sparkContext
-    sc.setLocalProperty("graft.func.cpus", r.funcCpus.toString)
-    sc.setLocalProperty("graft.func.gpus", r.funcGpus.toString)
-    sc.setLocalProperty("graft.func.ram_gb", r.funcRamGb.toString)
-    try body
-    finally {
-      sc.setLocalProperty("graft.func.cpus", null)
-      sc.setLocalProperty("graft.func.gpus", null)
-      sc.setLocalProperty("graft.func.ram_gb", null)
-    }
-  }
 
   /** Attach a stage-level TaskResourceProfile where the cluster manager
     * supports it; identity in local mode (which cannot run task profiles —
@@ -301,13 +287,6 @@ object ParallelMap {
 
   private def newGroup(): String = s"pmap-${java.util.UUID.randomUUID()}"
 
-  /** Tag every Spark job `body` submits with the pmap job group. */
-  private def withGroup[T](spark: SparkSession, group: String, desc: String)(body: => T): T = {
-    spark.sparkContext.setJobGroup(group, desc, interruptOnCancel = true)
-    try body
-    finally spark.sparkContext.clearJobGroup()
-  }
-
   /** Walk a Spark-wrapped failure back to the attributed UDF error. */
   private def unwrap(e: Throwable): Throwable = {
     var cur: Throwable = e
@@ -321,37 +300,63 @@ object ParallelMap {
     e
   }
 
-  /** Record a failed map on the tracker (with the input it is attributed
-    * to, if any); returns the error to re-raise. */
-  private def recordFailure(group: String, e: Throwable): Throwable = {
-    val u = unwrap(e)
-    u match {
-      case uf: UdfFailure       => JobTracker.inputError(group, uf.inputIndex, uf.getMessage)
-      case nf: NestedUdfFailure => JobTracker.inputError(group, nf.outerIndex, nf.getMessage)
-      case _                    => ()
-    }
-    JobTracker.failed(group, u)
-    u
-  }
-
-  /** One blocking list-mode call: a fresh `pmap-` job group carrying the
-    * resource request, JobTracker RUNNING -> COMPLETED (with the per-input
-    * errors `body` caught and returned) or FAILED (the attributed error
-    * re-raised). */
-  private def tracked[T](spark: SparkSession, mode: String, nInputs: Int, resources: Resources)(
-      body: => (T, Seq[(Long, String)])
-  ): T = {
-    val group = newGroup()
+  /** The scope of one call, shared by every mode: a fresh `pmap-` job
+    * group with its JobTracker record (RUNNING from construction), the
+    * group and the resource request set around each Spark submission,
+    * and failures unwrapped to the attributed error and recorded. */
+  private final class Call(spark: SparkSession, mode: String, nInputs: Int, resources: Resources) {
+    val group: String = newGroup()
     JobTracker.install(spark)
     JobTracker.started(group, mode, nInputs)
-    try {
-      val (out, errors) = withGroup(spark, group, s"ParallelMap $mode ($group)") {
-        withResourceProps(spark, resources)(body)
-      }
+
+    // what SparkContext.setJobGroup sets, plus the resource request
+    private val props = Seq(
+      "spark.jobGroup.id" -> group,
+      "spark.job.description" -> s"ParallelMap $mode ($group)",
+      "spark.job.interruptOnCancel" -> "true",
+      "graft.func.cpus" -> resources.funcCpus.toString,
+      "graft.func.gpus" -> resources.funcGpus.toString,
+      "graft.func.ram_gb" -> resources.funcRamGb.toString
+    )
+
+    /** Run `body` with this call's job-local properties on the calling
+      * thread (Spark copies them into a job when it is submitted), then
+      * put back the caller's own values: a job group or resource property
+      * the caller set survives the call. */
+    def submitting[T](body: => T): T = {
+      val sc = spark.sparkContext
+      val saved = props.map { case (k, _) => (k, sc.getLocalProperty(k)) }
+      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try body
+      finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }
+
+    def completed(errors: Seq[(Long, String)] = Nil): Unit = {
       errors.foreach { case (i, msg) => JobTracker.inputError(group, i, msg) }
       JobTracker.completed(group, nErrors = errors.size)
-      out
-    } catch { case e: Throwable => throw recordFailure(group, e) }
+    }
+
+    /** Record a failed map (with the input it is attributed to, if any);
+      * returns the error to re-raise. */
+    def failed(e: Throwable): Throwable = {
+      val u = unwrap(e)
+      u match {
+        case uf: UdfFailure       => JobTracker.inputError(group, uf.inputIndex, uf.getMessage)
+        case nf: NestedUdfFailure => JobTracker.inputError(group, nf.outerIndex, nf.getMessage)
+        case _                    => ()
+      }
+      JobTracker.failed(group, u)
+      u
+    }
+
+    /** A blocking call: COMPLETED with the per-input errors `body` caught
+      * and returned, or FAILED with the attributed error re-raised. */
+    def blocking[T](body: => (T, Seq[(Long, String)])): T =
+      try {
+        val (out, errors) = submitting(body)
+        completed(errors)
+        out
+      } catch { case e: Throwable => throw failed(e) }
   }
 
   /** Per-input errors of an attributed result set. */
@@ -369,7 +374,7 @@ object ParallelMap {
   )(f: I => O): Seq[O] = {
     if (inputs.isEmpty) return Nil // empty short-circuit, no cluster contact
     guardSizes(inputs, f)
-    tracked(spark, "run", inputs.size, resources) {
+    new Call(spark, "run", inputs.size, resources).blocking {
       (collectPlan(spark, inputs, maxParallelism, resources)(attributed(f, _, _)), Nil)
     }
   }
@@ -386,7 +391,7 @@ object ParallelMap {
   )(f: I => O): Seq[(Long, Try[O])] = {
     if (inputs.isEmpty) return Nil
     guardSizes(inputs, f)
-    tracked(spark, "runAttributed", inputs.size, resources) {
+    new Call(spark, "runAttributed", inputs.size, resources).blocking {
       val raw = collectPlan(spark, inputs, maxParallelism, resources) { (i, x) =>
         (i, outcome(f, x))
       }
@@ -427,7 +432,7 @@ object ParallelMap {
     val innerSlices = math.min(
       maxParallelism.getOrElse(spark.sparkContext.defaultParallelism),
       resourceSlicesCap(spark, resources))
-    tracked(spark, "runNested", inputs.size, resources) {
+    new Call(spark, "runNested", inputs.size, resources).blocking {
       // inner inputs cross the shuffle as Kryo bytes, one record each
       val fanned = sliced(spark, inputs, slices).flatMap { bytes =>
         val codec = Payload.codec()
@@ -477,7 +482,7 @@ object ParallelMap {
   )(f: I => O): Seq[(Long, Try[O], String)] = {
     if (inputs.isEmpty) return Nil
     guardSizes(inputs, f)
-    tracked(spark, "runWithLogs", inputs.size, Resources()) {
+    new Call(spark, "runWithLogs", inputs.size, Resources()).blocking {
       val raw = collectPlan(spark, inputs, maxParallelism, Resources()) { (i, x) =>
         (i, outcomeWithLogs(f, x))
       }
@@ -576,7 +581,7 @@ object ParallelMap {
         }
     }
     sc.addSparkListener(listener)
-    try tracked(spark, "runWithLiveLogs", inputs.size, Resources()) {
+    try new Call(spark, "runWithLiveLogs", inputs.size, Resources()).blocking {
       val raw = sc.parallelize(indexed, slices)
         .map { case (idx, x) =>
           val (r, logs) = outcomeWithLogs(f, x)
@@ -593,16 +598,6 @@ object ParallelMap {
     } finally sc.removeSparkListener(listener)
   }
 
-  /** Shared single-thread callback executor for stream() completions —
-    * callbacks only move a finished partition's results into the hand-off
-    * queue, so one daemon thread serves every concurrent stream. */
-  private lazy val streamCallbackEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newSingleThreadExecutor { r =>
-        val t = new Thread(r, "pmap-stream-callbacks"); t.setDaemon(true); t
-      }
-    )
-
   /** Generator mode (`generator=True`): lazy unordered stream yielding
     * results AS THEY COMPLETE, from whichever partition finishes first —
     * the reference generator's any-node ordering (_remote_parallel_map.py:
@@ -611,19 +606,15 @@ object ParallelMap {
     *
     * Each slice of `plan` is submitted as its own single-task Spark job
     * that reads its slice straight from the driver's `parallelize` (there
-    * is no shuffle to compute or share). `window` bounds how many
-    * partitions may be in flight or buffered ahead of the consumer — the
-    * analog of the reference's result-queue backpressure
-    * (worker_client.py:28,792-793): a slow consumer stops NEW partition jobs from being submitted once `window`
-    * results are pending. Default 0 = number of partitions (full
-    * parallelism; driver may buffer the whole result set if the consumer
-    * never drains — size maxParallelism/window to taste).
-    *
-    * An ABANDONED iterator (consumer stops calling next/hasNext on a
-    * bounded-window stream) leaves the daemon submitter parked and its
-    * buffered partitions held until the driver exits — drain or fail the
-    * iterator to release them (with the default window the submitter
-    * never parks, so only buffered results are held).
+    * is no shuffle to compute or share). The consumer's own thread drives
+    * submission: `stream` submits the first `window` slices, and each slice
+    * the iterator takes submits the next one, so at most `window` slices
+    * are in flight or buffered ahead of the consumer — the analog of the
+    * reference's result-queue backpressure (worker_client.py:28,792-793).
+    * Default 0 = number of partitions (full parallelism; driver may buffer
+    * the whole result set if the consumer never drains — size
+    * maxParallelism/window to taste). An abandoned iterator holds no
+    * thread: its in-flight slices finish and nothing more is submitted.
     */
   def stream[I: ClassTag, O: ClassTag](
       spark: SparkSession,
@@ -647,53 +638,24 @@ object ParallelMap {
   )(f: I => O): Iterator[(Long, O)] = {
     if (inputs.isEmpty) return Iterator.empty
     guardSizes(inputs, f)
-    val group = newGroup()
-    JobTracker.install(spark)
-    JobTracker.started(group, mode, inputs.size)
+    val call = new Call(spark, mode, inputs.size, resources)
     val parts = sliceCount(spark, inputs.size, maxParallelism, resources)
     val rdd = plan(spark, inputs, parts, resources)((i, x) => (i, attributed(f, i, x)))
-    val w = if (window > 0) math.min(window, parts) else parts
-    val sem = new java.util.concurrent.Semaphore(w)
-    val queue = new java.util.concurrent.LinkedBlockingQueue[Either[Throwable, Array[Byte]]]()
-    val failedFlag = new java.util.concurrent.atomic.AtomicBoolean(false)
     val sc = spark.sparkContext
-    val submitter = new Thread(
-      () => {
-        // job group + resource props are thread-local and captured at
-        // submit time — set them on THIS thread
-        sc.setJobGroup(group, s"ParallelMap $mode ($group)", interruptOnCancel = true)
-        try withResourceProps(spark, resources) {
-          var p = 0
-          while (p < parts && !failedFlag.get()) {
-            sem.acquire()
-            if (!failedFlag.get()) {
-              val holder = new java.util.concurrent.atomic.AtomicReference[Array[Byte]]()
-              try {
-                val fa = sc.submitJob[Array[Byte], Array[Byte], Unit](
-                  rdd,
-                  it => it.next(), // one element per slice
-                  Seq(p),
-                  (_, a) => holder.set(a), // scheduler thread: store only
-                  ()
-                )
-                fa.onComplete {
-                  case Success(_) => queue.put(Right(holder.get()))
-                  case Failure(e) =>
-                    failedFlag.set(true); queue.put(Left(e))
-                }(streamCallbackEc)
-              } catch {
-                case e: Throwable =>
-                  failedFlag.set(true); queue.put(Left(e))
-              }
-            }
-            p += 1
-          }
-        } finally sc.clearJobGroup()
-      },
-      s"$group-submitter"
-    )
-    submitter.setDaemon(true)
-    submitter.start()
+    // one entry per slice job: its results, or why it failed
+    val queue = new java.util.concurrent.LinkedBlockingQueue[Try[Array[Byte]]]()
+    var submitted = 0
+    def submitNext(): Unit =
+      if (submitted < parts) {
+        val p = submitted
+        submitted += 1
+        try call.submitting {
+          sc.submitJob[Array[Byte], Array[Byte], Unit](
+            rdd, _.next(), Seq(p), (_, bytes) => queue.put(Success(bytes)), ())
+        }.onComplete(_.failed.foreach(e => queue.put(Failure(e))))(ExecutionContext.parasitic)
+        catch { case e: Throwable => queue.put(Failure(e)) }
+      }
+    (0 until (if (window > 0) math.min(window, parts) else parts)).foreach(_ => submitNext())
 
     new Iterator[(Long, O)] {
       private var current: Iterator[(Long, O)] = Iterator.empty
@@ -702,21 +664,15 @@ object ParallelMap {
       private def advance(): Unit =
         while (!current.hasNext && taken < parts) {
           queue.take() match {
-            case Right(bytes) =>
+            case Success(bytes) =>
               taken += 1
-              sem.release()
+              submitNext() // this slice left the window; the next one enters
               current = Payload.decode[(Long, O)](codec, bytes)
-              if (taken == parts) JobTracker.completed(group)
-            case Left(e) =>
+              if (taken == parts) call.completed()
+            case Failure(e) =>
               taken = parts // terminal: no further results will be yielded
-              val u = recordFailure(group, e)
-              // stop the submitter: flag first, then release enough
-              // permits to unpark it from sem.acquire (its loop re-checks
-              // the flag and exits without submitting)
-              failedFlag.set(true)
-              sem.release(parts)
-              sc.cancelJobGroup(group)
-              throw u
+              sc.cancelJobGroup(call.group)
+              throw call.failed(e)
           }
         }
       def hasNext: Boolean = { advance(); current.hasNext }
@@ -748,12 +704,6 @@ object ParallelMap {
     streamIndexed[I, (Either[String, O], String)](
       spark, inputs, maxParallelism, resources, window, "streamWithLogs"
     )(outcomeWithLogs(f, _)).map { case (idx, (r, lg)) => (idx, toTry(r), lg) }
-
-  /** Dataset-side variant for schema-ful pipelines: same wrapper semantics,
-    * but distributed end-to-end (no driver materialization of inputs).
-    */
-  def mapDataset[I, O: Encoder](ds: Dataset[I])(f: I => O): Dataset[O] =
-    ds.map(f)
 
   /** Handle on a detached job: the reference's `detach=True` (job keeps
     * running independently of the submitting code path,
@@ -788,12 +738,14 @@ object ParallelMap {
       * submission would seal the future yet let the whole map run to
       * completion on the cluster — the AndFutureJobs form also kills jobs
       * the group submits later (each map's group is a UUID, so the
-      * tombstone can never hit an unrelated job). */
+      * tombstone can never hit an unrelated job). The future is sealed
+      * before the group is cancelled, so the job failure the cancel
+      * causes cannot decide the terminal state in its place. */
     def cancel(): Unit = {
       cancelled.set(true)
-      spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
       val ce = new java.util.concurrent.CancellationException(s"$jobGroup canceled")
       if (fut.completeExceptionally(ce)) JobTracker.failed(jobGroup, ce)
+      spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
     }
   }
 
@@ -817,34 +769,26 @@ object ParallelMap {
       maxParallelism: Option[Int] = None,
       resources: Resources = Resources()
   )(f: I => O): PMapJob[O] = {
-    val group = newGroup()
     val fut = new java.util.concurrent.CompletableFuture[Seq[O]]()
     val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
-    if (inputs.isEmpty) { fut.complete(Nil); return new PMapJob(spark, group, fut, cancelled) }
+    if (inputs.isEmpty) { fut.complete(Nil); return new PMapJob(spark, newGroup(), fut, cancelled) }
     guardSizes(inputs, f) // fail fast on the submitting thread, as the reference does
-    JobTracker.install(spark)
-    JobTracker.started(group, "detached", inputs.size)
+    val call = new Call(spark, "detached", inputs.size, resources)
+    // the future decides the terminal state: a cancel that raced the
+    // submission wins and the results are discarded (cancel() seals the
+    // future first)
     val t = new Thread(() => {
       try {
-        // job group is thread-local; tag every job this map spawns
-        spark.sparkContext.setJobGroup(group, s"ParallelMap detached ($group)",
-          interruptOnCancel = true)
         if (!cancelled.get()) {
-          val r = withResourceProps(spark, resources) {
+          val r = call.submitting {
             collectPlan(spark, inputs, maxParallelism, resources)(attributed(f, _, _))
           }
-          // a cancel that raced the submission wins: results are discarded
-          // (completeExceptionally in cancel() seals the future first)
-          if (fut.complete(r)) JobTracker.completed(group)
+          if (fut.complete(r)) call.completed()
         }
-      } catch {
-        case e: Throwable =>
-          val u = unwrap(e)
-          if (fut.completeExceptionally(u)) JobTracker.failed(group, u)
-      } finally spark.sparkContext.clearJobGroup()
-    }, group)
+      } catch { case e: Throwable => if (fut.completeExceptionally(unwrap(e))) call.failed(e) }
+    }, call.group)
     t.setDaemon(true)
     t.start()
-    new PMapJob(spark, group, fut, cancelled)
+    new PMapJob(spark, call.group, fut, cancelled)
   }
 }

@@ -28,10 +28,8 @@ object PMapOps {
       .documents(s, d)
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
-    ParallelMap
-      .mapDataset(ds) { case (id, text) =>
-        (id, text.toLowerCase.split(' ').count(_.nonEmpty))
-      }
+    ds
+      .map { case (id, text) => (id, text.toLowerCase.split(' ').count(_.nonEmpty)) }
       .toDF("doc_id", "n_tokens")
       .orderBy("doc_id")
   }

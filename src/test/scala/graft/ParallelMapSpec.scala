@@ -469,6 +469,116 @@ class ParallelMapSpec extends AnyFunSuite {
     assert(e.outerIndex == 2L && e.innerIndex == -1L)
     assert(e.getMessage.contains("fan-out stage"))
   }
+
+  test("a call restores the caller's job group and resource properties") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("outer", "caller's own jobs")
+    sc.setLocalProperty("graft.func.cpus", "7")
+    try {
+      assert(ParallelMap.run(spark, 0 until 8)(_ + 1).toSet == (1 to 8).toSet)
+      assert(ParallelMap.stream(spark, 0 until 8, window = 2)(_ + 1).toSet == (1 to 8).toSet)
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "outer")
+      assert(sc.getLocalProperty("graft.func.cpus") == "7")
+    } finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty("graft.func.cpus", null)
+    }
+  }
+
+  test("stream(window = 1) keeps one slice job in flight or buffered") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    // jobs of this stream carry the caller's own local property
+    val tag = s"window-${java.util.UUID.randomUUID()}"
+    val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val running = new java.util.concurrent.atomic.AtomicInteger()
+    val maxRunning = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("test.stream.tag") == tag)) {
+          mine.add(e.jobId)
+          maxRunning.accumulateAndGet(running.incrementAndGet(), (a, b) => math.max(a, b))
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (mine.contains(e.jobId)) running.decrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("test.stream.tag", tag)
+    try {
+      // local[4] caps a call at 4 slices: one input per slice
+      val it = ParallelMap.stream(spark, 0 until 4, maxParallelism = Some(4), window = 1)(identity)
+      val seen = scala.collection.mutable.ArrayBuffer[Int]()
+      while (it.hasNext) {
+        seen += it.next()
+        Thread.sleep(200) // a slow consumer; listener events catch up
+        assert(mine.size <= seen.size + 1,
+          s"${mine.size} slice jobs started after the consumer took ${seen.size}")
+      }
+      assert(seen.sorted == (0 until 4))
+      assert(mine.size == 4)
+      assert(maxRunning.get == 1, s"${maxRunning.get} slice jobs ran at once")
+    } finally {
+      sc.setLocalProperty("test.stream.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The JobTracker group of the only call recorded since clearForTest. */
+  private def onlyGroup(): String = {
+    val rows = graft.operators.JobTracker.jobs(spark).collect()
+    assert(rows.length == 1, s"expected one recorded call, saw ${rows.length}")
+    rows.head.getAs[String]("job_id")
+  }
+
+  test("a UDF error in stream leaves a FAILED row and no job of its group running") {
+    import graft.operators.JobTracker
+    JobTracker.clearForTest()
+    val it = ParallelMap.stream(spark, 0 until 4, maxParallelism = Some(4)) { x =>
+      if (x == 3) throw new IllegalArgumentException("bad 3")
+      Thread.sleep(5000); x
+    }
+    val e = intercept[UdfFailure](it.toList)
+    assert(e.inputIndex == 3L)
+    val group = onlyGroup()
+    assert(JobTracker.record(group).get.status == JobTracker.Failed)
+    // the other slices were still sleeping: the failure cancels them
+    val status = spark.sparkContext.statusTracker
+    def runningJobs = status.getJobIdsForGroup(group).toSeq.flatMap(status.getJobInfo)
+      .filter(_.status == org.apache.spark.JobExecutionStatus.RUNNING)
+    val deadline = System.currentTimeMillis() + 3000
+    while (runningJobs.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(runningJobs.isEmpty, s"jobs ${runningJobs.map(_.jobId)} of $group still running")
+  }
+
+  test("cancelling a detached job leaves a CANCELLED row") {
+    import graft.operators.JobTracker
+    JobTracker.clearForTest()
+    val job = ParallelMap.runDetached(spark, 0 until 8, Some(2)) { x => Thread.sleep(5000); x }
+    Thread.sleep(300)
+    job.cancel()
+    intercept[java.util.concurrent.CancellationException](job.result())
+    // the detached thread (named after the group) exits without
+    // overwriting the terminal state cancel() decided
+    def alive = scala.jdk.CollectionConverters.SetHasAsScala(Thread.getAllStackTraces.keySet)
+      .asScala.exists(_.getName == job.jobGroup)
+    val deadline = System.currentTimeMillis() + 5000
+    while (alive && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(!alive, "detached thread still running after cancel")
+    assert(JobTracker.record(job.jobGroup).get.status == JobTracker.Cancelled)
+  }
+
+  test("an abandoned stream(window = 1) leaves no thread behind") {
+    import graft.operators.JobTracker
+    JobTracker.clearForTest()
+    val it = ParallelMap.stream(spark, 0 until 4, maxParallelism = Some(4), window = 1)(identity)
+    assert(it.hasNext)
+    it.next() // then abandon the iterator with slices left
+    val group = onlyGroup()
+    Thread.sleep(500)
+    val named = scala.jdk.CollectionConverters.SetHasAsScala(Thread.getAllStackTraces.keySet)
+      .asScala.filter(t => t.isAlive && t.getName.contains(group))
+    assert(named.isEmpty, s"live threads ${named.map(_.getName)} of abandoned $group")
+  }
 }
 
 /** Cross-thread ordering probe for the live-relay spec: local-mode
