@@ -88,8 +88,20 @@ object ArtifactManifest {
   def check(path: String, field: String, expected: String, found: String): Unit =
     if (expected != found) throw Mismatch(path, field, expected, found)
 
-  /** Physical row count of one parquet table under the artifact — a
-    * footer-metadata aggregate, cheap at any scale. */
-  def tableRows(spark: SparkSession, dir: String): Long =
-    spark.read.parquet(dir).count()
+  /** Physical row count of a parquet table spread over `dirs`: the sum of
+    * the footers' row counts, read on the driver — no Spark job. Counts
+    * the files Spark's reader would read (`_`- and `.`-prefixed names such
+    * as `_SUCCESS`, `.crc` and the manifest are skipped); a file whose
+    * footer cannot be read (truncated, not parquet) throws rather than
+    * counting as zero rows. */
+  def tableRows(spark: SparkSession, dirs: String*): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dirs.flatMap(d => new Path(d).getFileSystem(conf).listStatus(new Path(d)))
+      .filter(st => st.isFile && !"_.".contains(st.getPath.getName.head))
+      .map { st =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+  }
 }

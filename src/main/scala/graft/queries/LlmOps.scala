@@ -1064,24 +1064,23 @@ object LlmOps {
         .select(col("doc_id"), md5(col("text")).as("th"))
         .join(corpusTh.withColumn("__exact", lit(true)), col("th") === col("cth"), "left")
         .join(nearIds, Seq("doc_id"), "left")
-    )
+    ).orderBy("doc_id")
   }
 
   /** The admission-verdict projection — ONE copy shared by d08's fused
-    * scan and incrementalDedupAgainst (whose artifact round-trip d16
-    * gates under d08's own oracle; a drifting duplicate here would
-    * silently decouple exactly the pairing that gate proves identical).
-    * Input: doc_id plus nullable __exact/__near marker columns. */
-  private def admissionVerdict(flagged: DataFrame): DataFrame =
-    flagged
-      .select(
-        col("doc_id"),
-        coalesce(col("__exact"), lit(false)).as("dup_exact"),
-        coalesce(col("__near"), lit(false)).as("dup_near"),
-        (!(coalesce(col("__exact"), lit(false)) || coalesce(col("__near"), lit(false))))
-          .as("keep")
-      )
-      .orderBy("doc_id")
+    * scan and scoreFingerprints (whose artifact round-trip d16 gates
+    * under d08's own oracle; a drifting duplicate here would silently
+    * decouple exactly the pairing that gate proves identical). Input:
+    * doc_id, the `carry` columns passed through, and nullable
+    * __exact/__near marker columns. Unordered. */
+  private def admissionVerdict(flagged: DataFrame, carry: String*): DataFrame = {
+    val exact = coalesce(col("__exact"), lit(false))
+    val near = coalesce(col("__near"), lit(false))
+    flagged.select(
+      (col("doc_id") +: carry.map(col)) ++
+        Seq(exact.as("dup_exact"), near.as("dup_near"), (!(exact || near)).as("keep")): _*
+    )
+  }
 
   /** The corpus-side dedup index d08's scaladoc promises as a persisted
     * artifact, as two consumable tables:
@@ -1095,18 +1094,30 @@ object LlmOps {
     * the admitted batch's rows after each ingest) — so every future batch
     * pays only its own fingerprinting plus two equi-joins against the
     * artifact, never a corpus re-scan. */
-  private[graft] def dedupIndexOf(corpus: DataFrame): (DataFrame, DataFrame) = {
+  private[graft] def dedupIndexOf(corpus: DataFrame): (DataFrame, DataFrame) =
+    indexParts(fingerprints(corpus))
+
+  /** What one document contributes to dedup, computed once per row:
+    * (doc_id, th = md5(text), simhash). `simhash` is NULL for a token-less
+    * text — trim(text) <> '' is exactly "has a non-empty token", and the
+    * guard keeps the kernel off rows that could not fingerprint. */
+  private def fingerprints(docs: DataFrame): DataFrame = {
     // simhash64Col is an expr() call: without registration a session not
-    // built via GraftExtensions fails analysis right here — every other
-    // simhash64 path registers, this one must too
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
-    val bBits = simhashBits / (hammingRadius + 1)
-    val hash = corpus.select(md5(col("text")).as("th")).distinct()
-    val fps = corpus
-      .filter(trim(col("text")) =!= "")
-      .select(col("doc_id"), simhash64Col.as("simhash"))
-    (hash, simhashBandsDf(fps, bBits, hammingRadius + 1))
+    // built via GraftExtensions fails analysis right here
+    graft.functions.VectorFunctions.register(docs.sparkSession)
+    docs.select(
+      col("doc_id"),
+      md5(col("text")).as("th"),
+      when(trim(col("text")) =!= "", simhash64Col).as("simhash")
+    )
   }
+
+  /** The two index tables of a fingerprint frame: its distinct content
+    * hashes and the band explode of its non-NULL fingerprints. */
+  private def indexParts(fps: DataFrame): (DataFrame, DataFrame) =
+    (fps.select("th").distinct(),
+      simhashBandsDf(fps.filter(col("simhash").isNotNull),
+        simhashBits / (hammingRadius + 1), hammingRadius + 1))
 
   /** The dedup index is the one MUTABLE artifact family (per-batch
     * appends, periodic compaction), so it commits through
@@ -1131,11 +1142,13 @@ object LlmOps {
   }
 
   /** Commit one dedup-index snapshot: recount both tables' physical rows
-    * over exactly the directories this version references (parquet-footer
-    * aggregates — the same truncation guard the r7 manifest carried),
-    * then write the manifest. `extra` lets the streaming ingest land its
-    * batch marker atomically with the data it describes; an existing
-    * `last_batch` is carried forward by every OTHER mutator
+    * over exactly the directories this version references, then write the
+    * manifest. The recount sums the parquet footers' row counts on the
+    * driver ([[graft.operators.ArtifactManifest.tableRows]]) and submits
+    * no Spark job; an unreadable footer (a truncated part file) fails the
+    * commit instead of counting as zero rows. `extra` lets the streaming
+    * ingest land its batch marker atomically with the data it describes;
+    * an existing `last_batch` is carried forward by every OTHER mutator
     * (append/compact between micro-batches must not erase the stream's
     * replay-skip evidence).
     *
@@ -1168,19 +1181,8 @@ object LlmOps {
         try L.current(s, path, DedupKind).props.view.filterKeys(markers).toMap
         catch { case _: Throwable => Map.empty[String, String] }
       )
-    def rows(table: String) =
-      s.read.parquet(tables(table).map(L.dataDir(path, table, _)): _*).count()
-    // the two footer-count jobs are independent and tiny — run them
-    // CONCURRENTLY (Spark schedules jobs from multiple threads fine), so
-    // the commit pays one job latency, not two (the r8 floor item)
-    val (hashRows, bandRows) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fh = Future(rows("hash"))
-      val fb = Future(rows("bands"))
-      (Await.result(fh, Duration.Inf), Await.result(fb, Duration.Inf))
-    }
+    def rows(table: String) = graft.operators.ArtifactManifest
+      .tableRows(s, tables(table).map(L.dataDir(path, table, _)): _*).toString
     L.commit(
       s,
       path,
@@ -1190,8 +1192,8 @@ object LlmOps {
       carried ++ Map(
         "simhash_bits" -> simhashBits.toString,
         "bands" -> (simhashBits / (hammingRadius + 1)).toString,
-        "hash_rows" -> hashRows.toString,
-        "band_rows" -> bandRows.toString
+        "hash_rows" -> rows("hash"),
+        "band_rows" -> rows("bands")
       ) ++ extra
     )
   }
@@ -1213,7 +1215,9 @@ object LlmOps {
     val mf = snap.props
     M.check(path, "simhash_bits", mf.getOrElse("simhash_bits", "?"), simhashBits.toString)
     M.check(path, "bands", mf.getOrElse("bands", "?"), (simhashBits / (hammingRadius + 1)).toString)
-    (s.read.parquet(snap.dirs(path, "hash"): _*), s.read.parquet(snap.dirs(path, "bands"): _*))
+    // the tables' known schemas: inferring one is a Spark job per read
+    def read(table: String, ddl: String) = s.read.schema(ddl).parquet(snap.dirs(path, table): _*)
+    (read("hash", "th STRING"), read("bands", "doc_id BIGINT, simhash BIGINT, b INT, bv BIGINT"))
   }
 
   /** Writer-side cross-batch snapshot cache for the streaming ingest
@@ -1260,11 +1264,8 @@ object LlmOps {
     /** Install the snapshot this writer just committed: it is current by
       * the single-writer argument, no disk round-trip needed. */
     def committed(s: SparkSession, sn: Snapshot): Unit = synchronized {
-      cached = Some(
-        (sn.version, sn,
-          s.read.parquet(sn.dirs(path, "hash"): _*),
-          s.read.parquet(sn.dirs(path, "bands"): _*))
-      )
+      val (h, b) = trustedFrames(s, path, sn)
+      cached = Some((sn.version, sn, h, b))
     }
   }
 
@@ -1278,20 +1279,12 @@ object LlmOps {
   private[graft] def loadDedupIndex(s: SparkSession, path: String): (DataFrame, DataFrame) = {
     val M = graft.operators.ArtifactManifest
     val snap = dedupSnapshot(s, path)
-    val mf = snap.props
-    def read(table: String) = s.read.parquet(snap.dirs(path, table): _*)
-    M.check(path, "simhash_bits", mf.getOrElse("simhash_bits", "?"), simhashBits.toString)
-    M.check(path, "bands", mf.getOrElse("bands", "?"), (simhashBits / (hammingRadius + 1)).toString)
-    M.check(path, "hash_rows", mf.getOrElse("hash_rows", "?"), read("hash").count().toString)
-    M.check(path, "band_rows", mf.getOrElse("band_rows", "?"), read("bands").count().toString)
-    (read("hash"), read("bands"))
+    val frames = trustedFrames(s, path, snap)
+    def rows(table: String) = M.tableRows(s, snap.dirs(path, table): _*).toString
+    M.check(path, "hash_rows", snap.props.getOrElse("hash_rows", "?"), rows("hash"))
+    M.check(path, "band_rows", snap.props.getOrElse("band_rows", "?"), rows("bands"))
+    frames
   }
-
-  // (the former loadDedupIndexTrusted — trusted read minus row-count
-  // revalidation — lives on as trustedFrames over a caller-resolved
-  // snapshot: the per-batch paths resolve ONCE and feed every consumer.
-  // Cold opens — query start, external consumers — still take the fully
-  // validated loadDedupIndex.)
 
   /** Append an ADMITTED batch's rows to a persisted dedup index — the
     * maintenance half of the ingest loop ("maintained incrementally at
@@ -1327,21 +1320,58 @@ object LlmOps {
     * maintenance cadence. */
   private[graft] def appendDedupIndex(admitted: DataFrame, path: String): Unit = {
     val s = admitted.sparkSession
-    val L = graft.operators.SnapshotLog
     val snap = dedupSnapshot(s, path)
-    val materialized = admitted.localCheckpoint(true)
-    val (h, b) = dedupIndexOf(materialized)
-    val v = L.nextVersion(s, path)
-    val tag = s"append-v$v"
-    b.write.mode("overwrite").parquet(L.dataDir(path, "bands", tag))
-    h.write.mode("overwrite").parquet(L.dataDir(path, "hash", tag))
-    commitDedupSnapshot(
-      s, path, v,
-      Map("hash" -> (snap.tables.getOrElse("hash", Nil) :+ tag),
-          "bands" -> (snap.tables.getOrElse("bands", Nil) :+ tag)),
-      resolved = Some(snap)
-    ): Unit
+    val kept = fingerprints(admitted).localCheckpoint(true) // the lineage cut
+    appendAndCommit(s, path, snap, kept,
+      s"append-v${graft.operators.SnapshotLog.nextVersion(s, path)}", Map.empty, None)
   }
+
+  /** The one append-and-commit tail of every index mutator that adds
+    * documents: write the index parts of `kept` (a PINNED fingerprint
+    * frame — see [[fingerprints]] — so nothing here re-reads the index or
+    * the source) into `tag` directories, then commit one manifest that
+    * references them plus `marker`. An empty `kept` commits the marker
+    * alone: the batch happened, its replay must skip. */
+  private def appendAndCommit(
+      s: SparkSession,
+      path: String,
+      snap: graft.operators.SnapshotLog.Snapshot,
+      kept: DataFrame,
+      tag: String,
+      marker: Map[String, String],
+      handle: Option[DedupIndexHandle]
+  ): Unit = {
+    val L = graft.operators.SnapshotLog
+    val tables =
+      if (kept.isEmpty) snap.tables
+      else {
+        val (h, b) = indexParts(kept)
+        b.write.mode("overwrite").parquet(L.dataDir(path, "bands", tag))
+        h.write.mode("overwrite").parquet(L.dataDir(path, "hash", tag))
+        Map("hash" -> (snap.tables.getOrElse("hash", Nil) :+ tag),
+            "bands" -> (snap.tables.getOrElse("bands", Nil) :+ tag))
+      }
+    val newSnap = commitDedupSnapshot(
+      s, path, handle.map(_.nextVersionFromProbe).getOrElse(L.nextVersion(s, path)),
+      tables, marker, resolved = Some(snap))
+    handle.foreach(_.committed(s, newSnap))
+  }
+
+  /** ONE resolution serves a whole batch (committed-check, trusted
+    * frames, the commit's carried props); through a handle it is one
+    * cached directory listing instead of a manifest read. */
+  private def resolveIndex(
+      s: SparkSession,
+      indexPath: String,
+      handle: Option[DedupIndexHandle]
+  ): (graft.operators.SnapshotLog.Snapshot, DataFrame, DataFrame) =
+    handle match {
+      case Some(h) => h.resolve(s)
+      case None =>
+        val sn = dedupSnapshot(s, indexPath)
+        val (h, b) = trustedFrames(s, indexPath, sn)
+        (sn, h, b)
+    }
 
   /** One micro-batch of the streaming ingest-admission loop, as a
     * CRASH-SAFE commit protocol — the foreachBatch body of
@@ -1385,17 +1415,7 @@ object LlmOps {
       handle: Option[DedupIndexHandle] = None
   ): Unit = {
     val s = batch.sparkSession
-    val L = graft.operators.SnapshotLog
-    // ONE resolution serves the whole batch (committed-check, trusted
-    // frames, commit's carried props); through a handle it is one cached
-    // directory listing instead of a manifest read (the r8 floor trim)
-    val (snap, hash, bands) = handle match {
-      case Some(h) => h.resolve(s)
-      case None =>
-        val sn = dedupSnapshot(s, indexPath)
-        val (h, b) = trustedFrames(s, indexPath, sn)
-        (sn, h, b)
-    }
+    val (snap, hash, bands) = resolveIndex(s, indexPath, handle)
     val committed =
       if (maintainIndex) snap.props.get("last_batch").contains(batchId.toString)
       else !ledgerAdmits(s, verdictDir, batchId) // verdict-only: the _ledger governs
@@ -1407,36 +1427,22 @@ object LlmOps {
         requireMonotonicBatchId(snap, batchId, indexPath)
         requireFreshBatchTag(snap, tag, indexPath)
       }
-      // pin the arrivals ONCE: the verdict plan reads the batch three
-      // times (fingerprint + exact-hash join + final attach) and the
-      // admitted path twice more (existence probe + materialization) —
-      // against a file-source batch each consumer re-executes the source
-      // read, a measured 5x input amplification per micro-batch before
-      // this pin. Batch-sized, freed by the ContextCleaner when the
-      // foreachBatch closure returns (the Hygiene release path).
-      val arrivals = batch.localCheckpoint(true)
-      val verdicts = incrementalDedupAgainst(arrivals, hash, bands)
-        .localCheckpoint(true) // pin the pre-append view; consumed twice below
-      verdicts.write.mode("overwrite").parquet(s"$verdictDir/batch_id=$batchId")
-      if (maintainIndex) {
-        val admitted =
-          arrivals.join(verdicts.filter(col("keep")), Seq("doc_id"), "left_semi")
-        val tables =
-          if (admitted.isEmpty) snap.tables
-          else {
-            val materialized = admitted.localCheckpoint(true) // appendDedupIndex's lineage cut
-            val (h, b) = dedupIndexOf(materialized)
-            b.write.mode("overwrite").parquet(L.dataDir(indexPath, "bands", tag))
-            h.write.mode("overwrite").parquet(L.dataDir(indexPath, "hash", tag))
-            Map("hash" -> (snap.tables.getOrElse("hash", Nil) :+ tag),
-                "bands" -> (snap.tables.getOrElse("bands", Nil) :+ tag))
-          }
-        val newSnap = commitDedupSnapshot(
-          s, indexPath,
-          handle.map(_.nextVersionFromProbe).getOrElse(L.nextVersion(s, indexPath)),
-          tables, Map("last_batch" -> batchId.toString), resolved = Some(snap))
-        handle.foreach(_.committed(s, newSnap))
-      } else ledgerCommit(s, verdictDir, batchId)
+      // each arrival is read and fingerprinted ONCE: the pin holds
+      // (doc_id, th, simhash), not the text, and every later consumer
+      // reads pinned blocks instead of re-running the source read
+      val fps = fingerprints(batch).localCheckpoint(true)
+      // ONE scored frame is the pre-append view: the verdict partition is
+      // its projection, the index parts its kept rows — no semi-join back
+      // to the arrivals, nothing fingerprinted twice. Batch-sized pins,
+      // freed by the ContextCleaner when the foreachBatch closure returns
+      // (the Hygiene release path).
+      val scored = scoreFingerprints(fps, hash, bands).localCheckpoint(true)
+      scored.select("doc_id", "dup_exact", "dup_near", "keep")
+        .write.mode("overwrite").parquet(s"$verdictDir/batch_id=$batchId")
+      if (maintainIndex)
+        appendAndCommit(s, indexPath, snap, scored.filter(col("keep")), tag,
+          Map("last_batch" -> batchId.toString), handle)
+      else ledgerCommit(s, verdictDir, batchId)
     }
   }
 
@@ -1504,16 +1510,7 @@ object LlmOps {
       handle: Option[DedupIndexHandle] = None
   ): Unit = {
     val s = batch.sparkSession
-    val L = graft.operators.SnapshotLog
-    // one resolution per batch (ingestBatch's discipline; a handle makes
-    // it one cached directory listing)
-    val (snap, hash, bands) = handle match {
-      case Some(h) => h.resolve(s)
-      case None =>
-        val sn = dedupSnapshot(s, indexPath)
-        val (h, b) = trustedFrames(s, indexPath, sn)
-        (sn, h, b)
-    }
+    val (snap, hash, bands) = resolveIndex(s, indexPath, handle)
     val committed =
       if (maintainIndex) snap.props.get("last_batch").contains(batchId.toString)
       else !ledgerAdmits(s, verdictDir, batchId) // verdict-only: the _ledger governs
@@ -1524,37 +1521,28 @@ object LlmOps {
         requireMonotonicBatchId(snap, batchId, indexPath)
         requireFreshBatchTag(snap, tag, indexPath)
       }
-      val arrivals = batch.localCheckpoint(true) // ingestBatch's source-amplification pin
+      // the arrivals are read three times (fingerprint, contamination,
+      // NLL): pin them so the source read runs once
+      val arrivals = batch.localCheckpoint(true)
+      // the pre-append view, carrying each arrival's fingerprints: the
+      // verdict partition is its projection, the index parts its admitted
+      // rows
       val verdicts = gateVerdicts(arrivals, hash, bands, trainGrams, lmCounts, nllMax, unscorable)
-        .localCheckpoint(true) // pin the pre-append view; consumed twice below
-      verdicts.write.mode("overwrite").parquet(s"$verdictDir/batch_id=$batchId")
-      if (maintainIndex) {
-        val admitted =
-          arrivals.join(verdicts.filter(col("admit")), Seq("doc_id"), "left_semi")
-        val tables =
-          if (admitted.isEmpty) snap.tables
-          else {
-            val materialized = admitted.localCheckpoint(true)
-            val (h, b) = dedupIndexOf(materialized)
-            b.write.mode("overwrite").parquet(L.dataDir(indexPath, "bands", tag))
-            h.write.mode("overwrite").parquet(L.dataDir(indexPath, "hash", tag))
-            Map("hash" -> (snap.tables.getOrElse("hash", Nil) :+ tag),
-                "bands" -> (snap.tables.getOrElse("bands", Nil) :+ tag))
-          }
-        val newSnap = commitDedupSnapshot(
-          s, indexPath,
-          handle.map(_.nextVersionFromProbe).getOrElse(L.nextVersion(s, indexPath)),
-          tables, Map("last_batch" -> batchId.toString), resolved = Some(snap))
-        handle.foreach(_.committed(s, newSnap))
-      } else ledgerCommit(s, verdictDir, batchId)
+        .localCheckpoint(true)
+      verdicts.drop("th", "simhash").write.mode("overwrite").parquet(s"$verdictDir/batch_id=$batchId")
+      if (maintainIndex)
+        appendAndCommit(s, indexPath, snap, verdicts.filter(col("admit")), tag,
+          Map("last_batch" -> batchId.toString), handle)
+      else ledgerCommit(s, verdictDir, batchId)
     }
   }
 
   /** The three admission gates' verdict frame — one row per arrival with
-    * every gate's evidence, the final `admit`, and the routing `verdict`
-    * (admit / reject / quarantine). The [[pipelineBatch]] body, factored
-    * so [[drainQuarantine]] re-scores parked docs through the IDENTICAL
-    * plan under refreshed artifacts — the two callers cannot drift. */
+    * its fingerprints (`th`, `simhash`), every gate's evidence, the final
+    * `admit`, and the routing `verdict` (admit / reject / quarantine). The
+    * [[pipelineBatch]] body, factored so [[drainQuarantine]] re-scores
+    * parked docs through the IDENTICAL plan under refreshed artifacts —
+    * the two callers cannot drift. */
   private def gateVerdicts(
       arrivals: DataFrame,
       hash: DataFrame,
@@ -1564,7 +1552,7 @@ object LlmOps {
       nllMax: Double,
       unscorable: UnscorablePolicy
   ): DataFrame = {
-    val dedupV = incrementalDedupAgainst(arrivals, hash, bands)
+    val dedupV = scoreFingerprints(fingerprints(arrivals), hash, bands)
     val contamV = contaminationAgainst(arrivals, trainGrams)
       .select("doc_id", "n_grams", "n_hit", "contaminated")
     val nllV = bigramNllFrom(
@@ -1578,6 +1566,8 @@ object LlmOps {
       .join(nllV, Seq("doc_id"), "left")
       .select(
         col("doc_id"),
+        col("th"),
+        col("simhash"),
         col("dup_exact"),
         col("dup_near"),
         col("keep"),
@@ -1652,14 +1642,7 @@ object LlmOps {
       handle: Option[DedupIndexHandle] = None
   ): Unit = {
     val s = docs.sparkSession
-    val L = graft.operators.SnapshotLog
-    val (snap, hash, bands) = handle match {
-      case Some(h) => h.resolve(s)
-      case None =>
-        val sn = dedupSnapshot(s, indexPath)
-        val (h, b) = trustedFrames(s, indexPath, sn)
-        (sn, h, b)
-    }
+    val (snap, hash, bands) = resolveIndex(s, indexPath, handle)
     if (!snap.props.get("last_drain").contains(drainId.toString)) {
       val tag = s"drain-$drainId"
       snap.props.get("last_drain").map(_.toLong).foreach { hw =>
@@ -1696,29 +1679,14 @@ object LlmOps {
         else s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
       val eligible = parked.join(decided, Seq("doc_id"), "left_anti")
       val arrivals = docs.join(eligible, Seq("doc_id"), "left_semi")
-        .localCheckpoint(true) // the ingestBatch pin
+        .localCheckpoint(true) // pipelineBatch's arrivals pin
       val verdicts =
         gateVerdicts(arrivals, hash, bands, trainGrams, lmCounts, nllMax,
           UnscorablePolicy.Quarantine)
-          .localCheckpoint(true) // pre-append view; consumed twice below
-      verdicts.write.mode("overwrite").parquet(s"$drainDir/drain_id=$drainId")
-      val admitted =
-        arrivals.join(verdicts.filter(col("admit")), Seq("doc_id"), "left_semi")
-      val tables =
-        if (admitted.isEmpty) snap.tables
-        else {
-          val materialized = admitted.localCheckpoint(true)
-          val (h, b) = dedupIndexOf(materialized)
-          b.write.mode("overwrite").parquet(L.dataDir(indexPath, "bands", tag))
-          h.write.mode("overwrite").parquet(L.dataDir(indexPath, "hash", tag))
-          Map("hash" -> (snap.tables.getOrElse("hash", Nil) :+ tag),
-              "bands" -> (snap.tables.getOrElse("bands", Nil) :+ tag))
-        }
-      val newSnap = commitDedupSnapshot(
-        s, indexPath,
-        handle.map(_.nextVersionFromProbe).getOrElse(L.nextVersion(s, indexPath)),
-        tables, Map("last_drain" -> drainId.toString), resolved = Some(snap))
-      handle.foreach(_.committed(s, newSnap))
+          .localCheckpoint(true) // the pre-append view (pipelineBatch's)
+      verdicts.drop("th", "simhash").write.mode("overwrite").parquet(s"$drainDir/drain_id=$drainId")
+      appendAndCommit(s, indexPath, snap, verdicts.filter(col("admit")), tag,
+        Map("last_drain" -> drainId.toString), handle)
     }
   }
 
@@ -1852,20 +1820,24 @@ object LlmOps {
 
   /** d08's admission verdict for a batch, against a PREBUILT corpus index
     * (dedupIndexOf or loadDedupIndex) — the artifact-consuming half of
-    * the incremental-ingest split. Cost: fingerprint the batch (map-only)
-    * + one equi-join per table, linear in batch size and independent of
-    * corpus size. */
+    * the incremental-ingest split, ordered by doc_id. Cost: fingerprint
+    * the batch (map-only) + one equi-join per table, linear in batch size
+    * and independent of corpus size. */
   private[graft] def incrementalDedupAgainst(
       batch: DataFrame,
       hash: DataFrame,
       bands: DataFrame
-  ): DataFrame = {
-    graft.functions.VectorFunctions.register(batch.sparkSession) // simhash64
-    val bBits = simhashBits / (hammingRadius + 1)
-    val batchFps = batch
-      .filter(trim(col("text")) =!= "")
-      .select(col("doc_id"), simhash64Col.as("simhash"))
-    val nearIds = simhashBandsDf(batchFps, bBits, hammingRadius + 1)
+  ): DataFrame =
+    scoreFingerprints(fingerprints(batch), hash, bands)
+      .select("doc_id", "dup_exact", "dup_near", "keep")
+      .orderBy("doc_id")
+
+  /** Score a [[fingerprints]] frame against an index: the input's columns
+    * plus `dup_exact`, `dup_near` and `keep`, one row per input row,
+    * unordered. */
+  private def scoreFingerprints(fps: DataFrame, hash: DataFrame, bands: DataFrame): DataFrame = {
+    val nearIds = simhashBandsDf(fps.filter(col("simhash").isNotNull),
+        simhashBits / (hammingRadius + 1), hammingRadius + 1)
       .as("x")
       .join(bands.as("y"), col("x.b") === col("y.b") && col("x.bv") === col("y.bv"))
       .filter(
@@ -1875,8 +1847,7 @@ object LlmOps {
       .distinct()
       .withColumn("__near", lit(true))
     admissionVerdict(
-      batch
-        .select(col("doc_id"), md5(col("text")).as("th"))
+      fps
         .join(
           // distinct: an appended index (appendDedupIndex) may carry the
           // same content hash from several ingests; without it the left
@@ -1885,7 +1856,8 @@ object LlmOps {
           col("th") === col("cth"),
           "left"
         )
-        .join(nearIds, Seq("doc_id"), "left")
+        .join(nearIds, Seq("doc_id"), "left"),
+      "th", "simhash"
     )
   }
 

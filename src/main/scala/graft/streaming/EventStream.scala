@@ -448,9 +448,10 @@ object EventStream {
     * ZERO state regardless of corpus size, and the per-batch cost is the
     * batch's own fingerprinting plus two equi-joins (linear in batch,
     * independent of corpus — d16's gated property). The batch twin is
-    * `incrementalDedupAgainst`, which is THE one copy of the verdict
-    * logic run here, so a streamed verdict is byte-identical to
-    * batch-scoring the same rows against the same index (spec-pinned).
+    * `incrementalDedupAgainst`, which scores through the same
+    * `fingerprints` + `scoreFingerprints` pair run here, so a streamed
+    * verdict is byte-identical to batch-scoring the same rows against the
+    * same index (spec-pinned).
     *
     * Semantics and failure notes:
     *   - verdicts are computed and materialized BEFORE the index append

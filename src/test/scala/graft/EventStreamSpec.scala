@@ -695,8 +695,15 @@ class EventStreamSpec extends AnyFunSuite {
     val admitted2Ids = want2.filter(_._4).map(_._1).toSet
     val d1 = admitted1.map(_._2).distinct.size
     val d2 = b2.filter(d => admitted2Ids(d._1)).map(_._2).distinct.size
-    val (hEnd, _) = LlmOps.loadDedupIndex(spark, idx)
+    val (hEnd, bEnd) = LlmOps.loadDedupIndex(spark, idx)
     assert(hEnd.count() == h0.count() + d1 + d2)
+    // each batch wrote exactly the index parts dedupIndexOf gives its
+    // admitted documents: both tables equal, as multisets, the base index
+    // plus every batch's parts
+    val (hb, bb) = LlmOps.dedupIndexOf(b2.filter(d => admitted2Ids(d._1)).toDF("doc_id", "text"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(hEnd) === rows(h0.union(ha).union(hb)), "hash table differs from base + batch parts")
+    assert(rows(bEnd) === rows(bd0.union(ba).union(bb)), "bands table differs from base + batch parts")
   }
 
   test("crawlPipeline: three gates, one verdict table; only fully-admitted docs extend the index") {

@@ -364,6 +364,72 @@ class IndexPersistSpec extends AnyFunSuite {
     assert(h2.count() > 0 && b2.count() > 0)
   }
 
+  test("footer row count equals Spark's count over _SUCCESS, .crc, multi-file and empty writes, with no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
+    val base = tmp("footer-count")
+    docs.repartition(3).write.parquet(s"$base/multi")
+    docs.limit(4).coalesce(1).write.parquet(s"$base/one")
+    docs.limit(0).write.parquet(s"$base/empty")
+    val dirs = Seq("multi", "one", "empty").map(d => s"$base/$d")
+    val names = dirs.flatMap(d => new java.io.File(d).list().toSeq)
+    assert(names.contains("_SUCCESS") && names.exists(n => n.startsWith(".") && n.endsWith(".crc")),
+      s"the directories must hold the files the count skips: $names")
+    assert(new java.io.File(s"$base/multi").list().count(_.endsWith(".parquet")) >= 3)
+    val want = spark.read.parquet(dirs: _*).count()
+
+    // jobs submitted under this thread's probe property; the marker job,
+    // delivered after any job of the count, ends the wait
+    val probe = "graft.test.footerProbe"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(probe))).foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(probe, "count")
+      val got = ArtifactManifest.tableRows(spark, dirs: _*)
+      sc.setLocalProperty(probe, "marker")
+      spark.range(1).count()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!seen.contains("marker") && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(seen.contains("marker"), "the listener never saw the marker job")
+      assert(got == want && want > 0, s"footer count $got, Spark count $want")
+      assert(!seen.contains("count"), "the footer count submitted a Spark job")
+    } finally {
+      sc.setLocalProperty(probe, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a truncated part file in a referenced dir fails the load and the commit, never counts as 0 rows") {
+    val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
+    val (h, b) = LlmOps.dedupIndexOf(docs.filter(col("doc_id") % 2 === 0))
+    val dir = tmp("mf-truncated")
+    LlmOps.saveDedupIndex(h, b, dir)
+    val part = new java.io.File(s"$dir/data/bands/base-v1").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val bytes = Files.readAllBytes(part.toPath)
+    Files.write(part.toPath, bytes.take(bytes.length / 2))
+    new java.io.File(part.getParent, s".${part.getName}.crc").delete(): Unit
+    def namesPart(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains(part.getName)))
+    val load = intercept[Exception] { LlmOps.loadDedupIndex(spark, dir) }
+    assert(!load.isInstanceOf[ArtifactManifest.Mismatch] && namesPart(load),
+      s"the load must fail on the unreadable footer, not on a count: $load")
+    // a re-commit over the directory recounts it: it must refuse too,
+    // not record the truncated file as zero rows
+    val commit = intercept[Exception] {
+      LlmOps.appendDedupIndex(docs.filter(col("doc_id") % 2 =!= 0), dir)
+    }
+    assert(namesPart(commit), s"the commit must fail on the unreadable footer: $commit")
+    assert(new java.io.File(dir).list().count(_.startsWith("manifest.v")) == 1,
+      "no snapshot may commit over the truncated file")
+  }
+
   test("snapshot log: orphan data dirs are invisible at load and retired by compaction's GC") {
     val docs = Tables.documents(spark, TestSpark.sf001).select("doc_id", "text")
     val (h, b) = LlmOps.dedupIndexOf(docs.filter(col("doc_id") % 4 === 0))
