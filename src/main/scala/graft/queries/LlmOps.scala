@@ -4492,7 +4492,12 @@ object LlmOps {
     * Scale: two grouped counts (token- and pair-vocabulary outputs,
     * map-side partial), broadcastable dims while they fit with AQE skew
     * fallback, one equi-join per scoring term, one per-doc aggregate —
-    * no window, no collect, nothing corpus-sized on any single node.
+    * no window, nothing corpus-sized on any single node. The count table
+    * is pinned once by an executor-side `localCheckpoint` (its plan
+    * scans are checkpointed `(prev, tok, cnt)` blocks, never
+    * re-parallelized driver rows); the corpus token total reaches the
+    * driver as one scalar (`tt`, one `head()` of a vocabulary-sized
+    * sum); no corpus rows are collected (PlanAuditSpec t25 pins this).
     *
     * `keys` is the scoreAgainstLm discipline: the streaming scorer
     * ([[graft.streaming.EventStream.bigramNllStream]]) groups by

@@ -7,12 +7,16 @@ package graft
   * them here means a regression shows up as a red spec, not as a slow
   * cluster.
   */
+import org.apache.spark.sql.execution.RDDScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 class PlanAuditSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, TestSpark.sf0001).queryExecution.executedPlan.toString
+  private object aqe extends AdaptiveSparkPlanHelper
+  private def executed(name: String) =
+    SparkEntry.queries(name)(spark, TestSpark.sf0001).queryExecution.executedPlan
+  private def plan(name: String): String = executed(name).toString
 
   test("q06: predicates pushed into the parquet scan, schema pruned") {
     val p = plan("q06_revenue_forecast")
@@ -360,10 +364,21 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("t25: bigram LM is grouped counts + equi-joins — no window, no collect") {
-    val p = plan("t25_bigram_nll")
+    val exec = executed("t25_bigram_nll")
+    val p = exec.toString
     assert(p.contains("partial_count"), s"t25 lost map-side partial counting:\n$p")
     assert(!p.contains("Window"), "t25 ranks/scores via a window — should be joins + one agg")
-    assert(!p.contains("Scan ExistingRDD"), "t25 re-parallelizes driver data")
+    // The count table is pinned by a localCheckpoint, which prints as
+    // Scan ExistingRDD like re-parallelized driver rows do (the d23 case).
+    // The scan's RDD tells them apart: checkpointed blocks live on the
+    // executors, and they may carry the vocabulary-sized counts only.
+    val rddScans = aqe.collectWithSubqueries(exec) { case s: RDDScanExec => s }
+    for (s <- rddScans) {
+      val scan = s.simpleString(10)
+      assert(s.rdd.isCheckpointed, s"t25 re-parallelizes driver data: $scan\n${s.rdd.toDebugString}")
+      assert(s.output.map(_.name).toSet == Set("prev", "tok", "cnt"),
+        s"t25 checkpoints more than the count table: $scan")
+    }
     assert(!p.contains("LocalTableScan"), "t25 embeds driver-collected rows")
   }
 
