@@ -64,14 +64,6 @@ class CrossJoinBoundSpec extends AnyFunSuite {
   /** Metadata grouping keys (WindowBoundSpec case (d)'s set). */
   private val metadataKeys = Set("pid", "bucket")
 
-  private def expand(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-    case c: InMemoryTableScanExec => Seq(c.relation.cachedPlan)
-    case other                    => other.children
-  }
-
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = p +: expand(p).flatMap(flatten)
-
   /** Strip row-preserving wrappers down to the node that determines the
     * side's row count. Wrappers never increase rows; stopping at the
     * first non-wrapper (Filter included — its condition carries the
@@ -170,7 +162,7 @@ class CrossJoinBoundSpec extends AnyFunSuite {
   }
 
   private def violations(plan: SparkPlan): Seq[String] =
-    flatten(plan).flatMap {
+    PlanTree.flatten(plan).flatMap {
       case b: BroadcastNestedLoopJoinExec =>
         // the REPLICATED side is the broadcast (build) side
         val build =

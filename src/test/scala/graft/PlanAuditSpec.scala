@@ -8,12 +8,10 @@ package graft
   * cluster.
   */
 import org.apache.spark.sql.execution.RDDScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 class PlanAuditSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private object aqe extends AdaptiveSparkPlanHelper
   private def executed(name: String) =
     SparkEntry.queries(name)(spark, TestSpark.sf0001).queryExecution.executedPlan
   private def plan(name: String): String = executed(name).toString
@@ -372,7 +370,11 @@ class PlanAuditSpec extends AnyFunSuite {
     // Scan ExistingRDD like re-parallelized driver rows do (the d23 case).
     // The scan's RDD tells them apart: checkpointed blocks live on the
     // executors, and they may carry the vocabulary-sized counts only.
-    val rddScans = aqe.collectWithSubqueries(exec) { case s: RDDScanExec => s }
+    // The walk enters cached subplans, so a cache cannot hide a scan; every
+    // scan the plan string prints must be one the walk checks.
+    val rddScans = PlanTree.flatten(exec).collect { case s: RDDScanExec => s }
+    assert("Scan ExistingRDD".r.findAllIn(p).size == rddScans.size,
+      s"t25 prints RDD scans the plan walk does not reach:\n$p")
     for (s <- rddScans) {
       val scan = s.simpleString(10)
       assert(s.rdd.isCheckpointed, s"t25 re-parallelizes driver data: $scan\n${s.rdd.toDebugString}")

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -71,17 +68,6 @@ class WindowBoundSpec extends AnyFunSuite {
     * partition (case (d)). */
   private val metadataKeys = Set("pid", "bucket", "nib")
 
-  /** Flatten the plan tree, crossing the boundaries `collect` treats as
-    * leaves: AQE wrappers and cached (InMemoryRelation) plans. */
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = {
-    val expanded: Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case c: InMemoryTableScanExec => Seq(c.relation.cachedPlan)
-      case other                    => other.children
-    }
-    p +: expanded.flatMap(flatten)
-  }
-
   /** The text defining a projected attribute (`<expr> AS name#id`): the
     * 120 chars preceding the alias in the plan string — enough to see a
     * hash function or a literal, without parsing nested expressions.
@@ -97,7 +83,7 @@ class WindowBoundSpec extends AnyFunSuite {
   /** Is this window bounded per the (a)-(d) contract? None when bounded,
     * Some(reason) when not. */
   private def violation(w: WindowExec, wholePlanStr: String): Option[String] = {
-    val below = flatten(w).drop(1)
+    val below = PlanTree.flatten(w).drop(1)
     // (a) partial WindowGroupLimit beneath the window
     val rankBounded = below.exists {
       case g: WindowGroupLimitExec => g.mode.toString.contains("Partial")
@@ -152,7 +138,7 @@ class WindowBoundSpec extends AnyFunSuite {
       val df = fn(spark, TestSpark.sf0001)
       val plan = df.queryExecution.executedPlan
       val planStr = plan.toString
-      val nodes = flatten(plan)
+      val nodes = PlanTree.flatten(plan)
       val windows = nodes.collect { case w: WindowExec => w }
       for (w <- windows; reason <- violation(w, planStr))
         bad += s"$name: $reason\n  window: ${w.toString.linesIterator.next()}"
@@ -182,7 +168,7 @@ class WindowBoundSpec extends AnyFunSuite {
         )
       )
       .queryExecution.executedPlan
-    val windows = this.flatten(p).collect { case w: WindowExec => w }
+    val windows = PlanTree.flatten(p).collect { case w: WindowExec => w }
     assert(windows.nonEmpty)
     for (w <- windows) {
       val refs = w.partitionSpec.flatMap(_.references.map(_.name)).toSet
