@@ -39,6 +39,16 @@ import org.apache.spark.sql.functions._
   * collide with the internals — rename first.
   */
 object Ranks {
+  /** Largest per-(pid, grp) count table [[groupedRank]] collects to the
+    * driver. Range partitioning keeps each group's rows contiguous, so
+    * the table has at most numParts + #groups - 1 rows. At sf0.1 the
+    * consumers (q22, q37, t27, t30, t36, t40) built at most 23 rows
+    * with numParts = 4 and 51 rows with numParts = 32 (a per-source
+    * consumer, 20 sources); the bound leaves ~200x headroom over that
+    * and still covers a 2560-wide cluster exchange over a few dozen
+    * groups. */
+  private[graft] val MaxCountRows: Int = 10000
+
   def groupedRank(df: DataFrame, grp: String, numParts: Int, orderKeys: Column*): DataFrame = {
     val keys = col(grp) +: orderKeys
     val ranked = df
@@ -61,6 +71,10 @@ object Ranks {
     // computed), gn = Σ c over the group. Longs cannot wrap here — they
     // are row counts.
     val cnts = ranked.groupBy(col("pid"), col(grp)).agg(count(lit(1)).as("c")).collect()
+    require(cnts.length <= MaxCountRows,
+      s"groupedRank on '$grp' with numParts = $numParts collected ${cnts.length} " +
+        s"(partition, group) count rows, over the driver bound of $MaxCountRows: " +
+        "the group column has too many distinct values for an in-group rank")
     val dimRows: Seq[org.apache.spark.sql.Row] = cnts
       .groupBy(_.get(1))
       .toSeq

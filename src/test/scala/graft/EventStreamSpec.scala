@@ -1041,6 +1041,70 @@ class EventStreamSpec extends AnyFunSuite {
     Hygiene.release(spark)
   }
 
+  test("ivfIngest: a poisoned feed stays exact through compactions and a rebuild between batches") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.operators.{AnnIvf, SnapshotLog}
+    implicit val sqlCtx = spark.sqlContext
+    val emb = Tables.embeddings(spark, TestSpark.sf0001).select("vec_id", "embedding")
+    val half = substring(md5(col("vec_id").cast("string")), 1, 1) < "8"
+    val base = java.nio.file.Files.createTempDirectory("ivf-poison").toString
+    val idx = s"$base/ivf"; val ledger = s"$base/rejects"
+    AnnIvf.buildIndex(spark, emb.filter(half), idx, nlist = 8)
+    val baseRows = emb.filter(half).count()
+    // every vec_id % 23 < 4 arrives malformed, one reason per residue; 23
+    // is coprime to the batch count, so every batch carries some of each
+    val reasonOf = Map(0L -> "null_embedding", 1L -> "wrong_dim",
+      2L -> "null_element", 3L -> "non_finite")
+    def poison(v: Long, e: Seq[Float]): (Long, Option[Seq[Option[Float]]]) = {
+      val boxed = e.map(Option(_))
+      v -> (v % 23 match {
+        case 0 => None
+        case 1 => Some(boxed.take(3))
+        case 2 => Some(None +: boxed.tail)
+        case 3 => Some(Some(Float.NaN) +: boxed.tail)
+        case _ => Some(boxed)
+      })
+    }
+    val nBatches = 6
+    val slices = emb.filter(!half).as[(Long, Seq[Float])].collect()
+      .groupBy(_._1 % nBatches).toSeq.sortBy(_._1).map(_._2.toSeq.sortBy(_._1))
+    assert(slices.size == nBatches && slices.forall(_.exists(_._1 % 23 < 4)))
+    def snapProps = SnapshotLog.current(spark, idx, "ivf-index").props
+    def ledgerDirs = Option(new java.io.File(ledger).listFiles()).toSeq.flatten
+      .filter(_.isDirectory).map(_.getName).toSet
+    val src = MemoryStream[(Long, Option[Seq[Option[Float]]])]
+    // compactEvery = 2 compacts after batches 2 and 4; the rebuild lands
+    // between batches 3 and 4, so batch 4 resolves a new quantizer and
+    // its compaction follows the rebuild
+    val q = EventStream.ivfIngest(src.toDF().toDF("vec_id", "embedding"), idx,
+      s"$base/ck", compactEvery = 2, rejectDir = ledger)
+    try {
+      slices.zipWithIndex.foreach { case (slice, i) =>
+        src.addData(slice.map { case (v, e) => poison(v, e) }: _*); q.processAllAvailable()
+        if (i == 3) {
+          val before = ledgerDirs
+          AnnIvf.rebuildIndex(spark, idx, nlist = 8)
+          assert(ledgerDirs == before, "a rebuild touched the reject ledger")
+        }
+        // the marker and the carried row total survive every maintenance
+        // step, and the ledger holds one directory per batch so far
+        val valid = slices.take(i + 1).flatten.count(_._1 % 23 >= 4)
+        assert(snapProps.get("last_batch").contains(i.toString), s"batch $i: $snapProps")
+        assert(snapProps.get("rows").contains((baseRows + valid).toString), s"batch $i: $snapProps")
+        assert(ledgerDirs == (0 to i).map(b => s"batch_id=$b").toSet, s"batch $i: $ledgerDirs")
+      }
+    } finally q.stop()
+    assert(SnapshotLog.current(spark, idx, "ivf-index").tables("vectors").exists(_.startsWith("compact-")))
+    AnnIvf.validateIndex(spark, idx) // the carried total reconciles with a physical recount
+    val expected = slices.flatten.map(_._1 % 23).filter(_ < 4)
+      .groupBy(identity).map { case (m, ms) => reasonOf(m) -> ms.size.toLong }
+    val got = AnnIvf.rejectSummary(spark, ledger).groupBy("reason").agg(sum("rejects"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(expected.size == 4 && got == expected, s"ledger $got != expected $expected")
+    Hygiene.release(spark)
+  }
+
   test("vector reject verdicts are quantizer-independent — why the store has no drain loop") {
     import spark.implicits._
     import graft.operators.AnnIvf

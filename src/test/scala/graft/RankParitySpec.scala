@@ -71,6 +71,18 @@ class RankParitySpec extends AnyFunSuite {
     Hygiene.release(spark)
   }
 
+  test("groupedRank refuses a count table over its driver bound and names the group column") {
+    import org.apache.spark.sql.functions._
+    // one group per row: the (partition, group) table has one row per group
+    val df = spark.range(graft.operators.Ranks.MaxCountRows + 1L).select(col("id").as("g"), col("id").as("v"))
+    val ex = intercept[IllegalArgumentException] {
+      graft.operators.Ranks.groupedRank(df, "g", 2, col("v"))
+    }
+    assert(ex.getMessage.contains("'g'") && ex.getMessage.contains("numParts = 2") &&
+      ex.getMessage.contains(s"${graft.operators.Ranks.MaxCountRows + 1} "), ex.getMessage)
+    Hygiene.release(spark)
+  }
+
   test("ntileFromRank matches Spark's ntile across group sizes incl. n < k") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
