@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Per-round benchmark: runs every registered query against
   * SPARK_GRAFT_SF_DIR (default sf0.1) and prints one JSON line.
@@ -293,7 +295,12 @@ object Bench {
       // leg's cpu, so when the cold leg was the minimum a borderline
       // flag was adjudicated on mismatched signals (ADVICE r12)
       cpuBest: Double,
-      load: Double
+      load: Double,
+      // generated classes compiled, and Janino's compile time, in each exec
+      coldCompiles: Long = 0L,
+      coldCodegenMs: Double = 0.0,
+      warmCompiles: Long = 0L,
+      warmCodegenMs: Double = 0.0
   )
 
   private[graft] case class Adjudicated(
@@ -377,14 +384,26 @@ object Bench {
     val selected =
       if (args.isEmpty) SparkEntry.queries.toSeq
       else SparkEntry.queries.toSeq.filter { case (n, _) => args.exists(n.contains) }
+    // Classes compiled and compile ms across `fn`, from the JVM-wide
+    // codegen counters. The warm exec runs right after the same query's
+    // cold exec, so it reuses that query's classes even from a cache too
+    // small for the suite: a warm compile here is code generated anew per
+    // plan, not a cache miss. A second pass over the suite is what shows
+    // an undersized cache (GraftSession.CodegenCacheEntries).
+    def compiled[T](fn: => T): (T, Long, Double) = {
+      val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ns0 = CodeGenerator.compileTime
+      val out = fn
+      (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0, (CodeGenerator.compileTime - ns0) / 1e6)
+    }
     def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): R = {
       def exec(): Unit = fn(spark, sfDir).queryExecution.toRdd.count()
       val cpuC0 = cpuS()
-      val (cold, okC) = time(exec())
+      val ((cold, okC), cgCold, cgColdMs) = compiled(time(exec()))
       val cpuCold = cpuDiff(cpuC0, cpuS())
       val stCold = Hygiene.storageBytes(spark)
       val cpu0 = cpuS()
-      val (warm, okW) = time(exec())
+      val ((warm, okW), cgWarm, cgWarmMs) = compiled(time(exec()))
       val cpuWarm = cpuDiff(cpu0, cpuS())
       val stWarm = Hygiene.storageBytes(spark)
       Hygiene.release(spark)
@@ -393,9 +412,11 @@ object Bench {
         val cpuBest = if (cold <= warm) cpuCold else cpuWarm
         R(name, best, cold, ok = true, stCold, stWarm,
           refs.get(name).exists(best > 2 * _.warm),
-          refs.get(name).exists(cold > 2 * _.cold), cpuWarm, cpuCold, cpuBest, load1())
+          refs.get(name).exists(cold > 2 * _.cold), cpuWarm, cpuCold, cpuBest, load1(),
+          cgCold, cgColdMs, cgWarm, cgWarmMs)
       } else R(name, -1.0, -1.0, ok = false, stCold, stWarm,
-        drift = false, coldDrift = false, cpuWarm, cpuCold, cpuBest = -1.0, load1())
+        drift = false, coldDrift = false, cpuWarm, cpuCold, cpuBest = -1.0, load1(),
+        cgCold, cgColdMs, cgWarm, cgWarmMs)
     }
     val firstPass = selected.sortBy(_._1).map { case (name, fn) => measure(name, fn) }
     // End-of-suite recheck: every first-pass drift flag — WARM OR COLD —
@@ -484,7 +505,7 @@ object Bench {
               s""", "first_pass_warm": ${jnum(fp.warm)}, "recheck_warm": ${jnum(r2.warm)}, "first_pass_cold": ${jnum(fp.cold)}, "recheck_cold": ${jnum(r2.cold)}, "recheck_cpu_warm_s": ${jnum(r2.cpuWarm)}, "recheck_cpu_cold_s": ${jnum(r2.cpuCold)}, "recheck_load1": ${jnum(r2.load)}"""
             }
             .getOrElse("")
-          s"""  "${r.name}": {"warm": ${jnum(r.warm)}, "cold": ${jnum(r.cold)}, "ok": ${r.ok}, "storage_cold_b": ${r.stCold}, "storage_warm_b": ${r.stWarm}, "cpu_warm_s": ${jnum(r.cpuWarm)}, "cpu_cold_s": ${jnum(r.cpuCold)}, "load1": ${jnum(r.load)}, "drift": ${r.drift}, "cold_drift": ${r.coldDrift}, "drift_needs_rerun": ${a.warmNeedsRerun}, "cold_drift_needs_rerun": ${a.coldNeedsRerun}$refPart$recheckPart}"""
+          s"""  "${r.name}": {"warm": ${jnum(r.warm)}, "cold": ${jnum(r.cold)}, "ok": ${r.ok}, "storage_cold_b": ${r.stCold}, "storage_warm_b": ${r.stWarm}, "cpu_warm_s": ${jnum(r.cpuWarm)}, "cpu_cold_s": ${jnum(r.cpuCold)}, "cold_compiles": ${r.coldCompiles}, "cold_codegen_ms": ${jnum(r.coldCodegenMs)}, "warm_compiles": ${r.warmCompiles}, "warm_codegen_ms": ${jnum(r.warmCodegenMs)}, "load1": ${jnum(r.load)}, "drift": ${r.drift}, "cold_drift": ${r.coldDrift}, "drift_needs_rerun": ${a.warmNeedsRerun}, "cold_drift_needs_rerun": ${a.coldNeedsRerun}$refPart$recheckPart}"""
         }
         .mkString("{\n", ",\n", "\n}")
       java.nio.file.Files.write(

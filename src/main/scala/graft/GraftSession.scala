@@ -14,8 +14,16 @@ import org.apache.spark.sql.SparkSession
   *   - shuffle.partitions tracks cores locally; on a cluster this would be
   *     2-3x total cores and AQE coalesces down.
   *   - UTC session TZ so timestamp semantics match the DuckDB oracle.
-  *   - parquet nanos-as-long: the `events` table ships TIMESTAMP(NANOS)
-  *     which Spark has no native type for; Tables.events() converts.
+  *   - parquet nanos-as-long: a TIMESTAMP(NANOS) column, which Spark has
+  *     no native type for, reads as a long; Tables.events() converts it.
+  *   - codegen cache sized to the engine's working set
+  *     ([[CodegenCacheEntries]]). Spark's JVM-wide cache of compiled
+  *     generated classes holds 100 entries by default; the five `perfbench`
+  *     `queries` compile about 130 classes per pass, so an LRU cycle over
+  *     them missed on nearly every access and every warm pass recompiled
+  *     about 123 classes (2.5 s of Janino time). It is a static conf that
+  *     `CodeGenerator` reads once per JVM, at first use, so it is set
+  *     here at build time and `tune` cannot set it.
   */
 object GraftSession {
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -41,6 +49,14 @@ object GraftSession {
       .config("spark.dynamicAllocation.maxExecutors", maxExecutors.toString)
       .config("spark.dynamicAllocation.executorIdleTimeout", s"${idleTimeoutSec}s")
 
+  /** Entries in Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`). One cold pass of all
+    * registered queries at sf0.01 compiles 2,786 distinct classes; 4,096
+    * gives about 1.5x headroom. Holding them costs 90-110 MB of heap
+    * after GC and 25 MB of metaspace over the default size, measured on a
+    * two-pass suite run at sf0.01 (docs/SCALE.md, "Codegen cache"). */
+  private[graft] val CodegenCacheEntries = 4096
+
   private def common(appName: String): SparkSession.Builder =
     SparkSession
       .builder()
@@ -52,6 +68,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   def builder(appName: String = "graft"): SparkSession.Builder =
     common(appName)
