@@ -4,81 +4,45 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
-/** Per-round benchmark: runs every registered query against
-  * SPARK_GRAFT_SF_DIR (default sf0.1) and prints one JSON line.
+/** Suite benchmark: runs every registered query (or those whose names
+  * contain one of the arguments) against SPARK_GRAFT_SF_DIR (default
+  * sf0.1) and prints one JSON line.
   *
-  * Each query executes twice and reports the faster run: the first
-  * execution of a query pays Catalyst planning + whole-stage-codegen
-  * Janino compilation (seconds for the wide dedup pipelines), which on a
-  * long-lived cluster amortizes to zero — steady-state is the engine
-  * number. The cold aggregate is still reported as "cold_value" for
-  * honesty. Queries are forced with .count() (full plan execution, no
-  * driver-side result materialization in the timing).
+  * Each query executes twice. The first execution pays Catalyst planning
+  * and Janino compilation, which a long-lived cluster amortizes to zero,
+  * so the faster run is the reported `warm`; the first run is reported
+  * as `cold`. Execution is forced through the query's own physical plan
+  * (`toRdd.count()`), so no result is materialized on the driver.
   *
-  * STATE DISCIPLINE: the cold run builds a query's caches, the warm run
-  * reuses them (steady-state — the number a long-lived pipeline stage
-  * sees), and then EVERY block the query pinned — SQL caches and
-  * localCheckpoint RDDs alike — is released synchronously
-  * (Hygiene.release, blocking unpersist) before the next query starts.
-  * The r6 full-suite capture had t20/d09/t21 at 2.4-3.9x their isolated
-  * numbers because the old release was non-blocking: block removal
-  * drifted behind the 103-query suite and storage pressure landed
-  * exactly on the queries that cache most. Clearing sits OUTSIDE the
-  * timed regions; within-query cache materialization still pays inside
-  * the cold number.
+  * STATE DISCIPLINE: the cold run builds a query's caches and the warm
+  * run reuses them. Then every block the query pinned, SQL caches and
+  * localCheckpoint RDDs alike, is released synchronously
+  * ([[Hygiene.release]]) before the next query starts, outside the timed
+  * regions. A non-blocking release lets block removal drift behind the
+  * suite, and the storage pressure lands on the queries that cache most.
   *
-  * DRIFT FLAGS: per query the live storage bytes after each run are
-  * recorded (the accumulation signal), and BOTH the warm and the cold
-  * time are compared against the committed BASELINE.md reference table
-  * (the LAST `| name | warm | cold |` row per query wins — later rounds
-  * override earlier ones). warm > 2x its reference flags the query in
-  * bench_full.json ("drift": true); cold > 2x its reference flags it as
-  * "cold_drift" — both counted on the stdout line — so a full-suite
-  * capture that degrades its own recorded numbers, in either column,
-  * can no longer pass silently.
+  * DRIFT FLAGS: warm > 2x or cold > 2x the query's row in `bench_ref.tsv`
+  * ([[readRefs]]) flags it. A query without a row is never flagged. Each
+  * flagged query is measured once more at the end of the suite, and
+  * [[adjudicate]] keeps a flag only when that recheck confirms it: the
+  * wall regression reproduces, the query's own process CPU grew with it,
+  * and no load1 sample of the capture exceeded [[Load1Ceiling]] (see
+  * [[confirmDrift]]). Per-query CPU seconds, load1, storage bytes and
+  * the recheck leg's telemetry ship in the detail file so a capture can
+  * be re-adjudicated after the fact.
   *
-  * CONTENTION DEFENSE (r7 lesson: a shared-host load burst turned a
-  * faster-than-r6 suite into a 16-flag capture): the bench now (1)
-  * RE-MEASURES every first-pass-flagged query once more at END of suite
-  * and reports both numbers — a real regression reproduces on the second
-  * measurement, a competing-load burst does not, so "drift_flags" counts
-  * only CONFIRMED flags (flagged twice) while "drift_unconfirmed" carries
-  * the rest; and (2) records per query the process CPU seconds consumed
-  * by each run ("cpu_warm_s"/"cpu_cold_s") and the host 1-minute loadavg
-  * after it ("load1") — on a contended host the query's OWN cpu/wall
-  * ratio collapses and load1 exceeds the core count, so a bad capture
-  * self-identifies in bench_full.json instead of needing a post-hoc
-  * adjudication. r12 (the r11 failure: the recheck ran inside the same
-  * contended window, so six environmental bursts "reproduced"):
-  * confirmation now consults the recheck leg's OWN-WORK signal — a flag
-  * confirms only if the recheck reproduces the wall regression AND its
-  * process-CPU seconds exceed 2x the committed reference cpu (see
-  * [[confirmDrift]]; BASELINE.md rows may carry cpu_warm/cpu_cold as
-  * 4th/5th columns) — and the recheck leg's cpu/load1 telemetry ships in
-  * bench_full.json ("recheck_cpu_warm_s"/"recheck_cpu_cold_s"/
-  * "recheck_load1") for post-hoc adjudication.
-  *
-  * Output budget: the round driver captures only the LAST 2000 chars of
-  * stdout, and full query names (~25 chars/entry x 80+ queries) overflow
-  * that, truncating the head of the map (r3/r4 lost d01-d10). The stdout
-  * map is therefore keyed by each query's unique id prefix ("q01", "d05",
-  * "e10" — the token before the first underscore). r16: at 167 queries
-  * even the id-keyed map at 3 decimals plus the drift-telemetry fields
-  * overflowed the window (the r14 AND r15 driver tails both cut the
-  * line's opening brace — PERF came back empty two rounds running), so
-  * the stdout line now carries ONLY the driver contract — metric / value
-  * / unit / queries / failed / sf — with per-query values at 2 significant
-  * decimals ([[jshort]]; worst case 167 x 11 chars + fixed fields = 1916
-  * chars, under the window even before trailing-zero stripping). All
-  * telemetry (cold totals, drift adjudication, contended marker, load)
-  * stays in bench_full.json, which also keeps the full-precision
-  * (3-decimal) warm/cold per full query name; BASELINE.md carries the
-  * committed per-query reference table.
+  * OUTPUT: a full-suite run writes `bench_full.json`; a subset run writes
+  * the same detail to `bench_subset.json`, so it never overwrites the
+  * full record. The stdout line carries only the driver contract
+  * (metric, value, unit, queries, failed, sf), because the driver reads
+  * only the last 2000 chars of stdout. Its `queries` map is keyed by id
+  * prefix ("q01") with [[jshort]] values: worst case 167 x 11 chars plus
+  * the fixed fields is 1916 chars.
   */
 object Bench {
   /** Locale-fixed decimal rendering for the JSON outputs: the f""
     * interpolator uses the JVM default locale, so a de_DE/fr_FR driver
-    * would emit comma decimal separators — invalid JSON the round driver
+    * would emit comma decimal separators — invalid JSON the driver
     * (and any consumer) fails to parse. */
   private[graft] def jnum(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -88,8 +52,8 @@ object Bench {
     * well inside run-to-run noise), trailing zeros and dot stripped.
     * Bounded at 4 chars for any non-negative value < 100 s, which is what
     * keeps the whole 167-entry line under the driver's 2000-char stdout
-    * window (see the Output-budget note above). Full 3-decimal values
-    * stay in bench_full.json. */
+    * window (see OUTPUT above). Full 3-decimal values stay in the
+    * detail file. */
   private[graft] def jshort(v: Double): String = {
     val s =
       if (v < 0) "-1"
@@ -112,11 +76,9 @@ object Bench {
       case None    => "\"" + sfDir + "\""
     }
 
-  /** One committed reference row: warm/cold wall seconds plus (r12)
-    * optional process-CPU seconds for each leg — the own-work signal the
-    * drift confirmation consults. Pre-r12 rows carry only the two wall
-    * columns; their cpu fields are None and confirmation degrades to the
-    * legacy wall-only rule. */
+  /** One query's reference: warm/cold wall seconds and, where recorded,
+    * each leg's process-CPU seconds. A leg without a CPU reference is
+    * adjudicated on wall time alone ([[confirmDrift]]). */
   private[graft] case class Ref(
       warm: Double,
       cold: Double,
@@ -124,45 +86,39 @@ object Bench {
       cpuCold: Option[Double]
   )
 
-  /** Reference rows per query from BASELINE.md's recorded tables.
-    * Tolerant parse: any `| <query_id> | <num> | <num> |` row anywhere in
-    * the file; the last occurrence of a query wins. Up to two further
-    * numeric columns are read as (cpu_warm_s, cpu_cold_s) — but ONLY
-    * under a table whose HEADER declares cpu columns (r13, closing the
-    * ADVICE hole: the bare positional read meant any future table with
-    * extra numeric columns that are not CPU seconds — a ratio, a row
-    * count — would silently poison the own-CPU drift gate through
-    * last-row-wins). Rows under a cpu-less header keep cpu = None and
-    * the confirmation takes its documented wall-only fallback. Missing
-    * file or unparseable rows → no reference → no flag (new queries are
-    * unflagged until their first committed row). */
-  private[graft] def baselineRefs(path: String = "BASELINE.md"): Map[String, Ref] = {
+  private val RefHeader = Seq("query", "warm_s", "cold_s", "cpu_warm_s", "cpu_cold_s")
+
+  /** Per-query references from a tab-separated table: the [[RefHeader]]
+    * line, then one row per query. The CPU cells may be empty; every
+    * other cell must be filled. A missing file means no references, so
+    * nothing is flagged. A wrong field count, a malformed query id or
+    * number, or a repeated query fails naming the file and line. */
+  private[graft] def readRefs(path: String = "bench_ref.tsv"): Map[String, Ref] = {
     val p = java.nio.file.Paths.get(path)
     if (!java.nio.file.Files.exists(p)) Map.empty
     else {
-      val num = """([0-9]+\.[0-9]+)"""
-      val row =
-        (s"""\\|\\s*([a-z]\\d{2}_[a-z0-9_]+)\\s*\\|\\s*$num\\s*\\|\\s*$num\\s*\\|""" +
-          s"""(?:\\s*$num\\s*\\|(?:\\s*$num\\s*\\|)?)?""").r
-      val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      val out = scala.collection.mutable.Map.empty[String, Ref]
-      // header state: a `| query | ... warm ... |` line opens a table and
-      // declares whether its 4th/5th columns are CPU seconds
-      var cpuHeader = false
-      for (line <- src.linesIterator) {
-        val t = line.trim
-        if (t.startsWith("|") && t.contains("query") && t.contains("warm"))
-          cpuHeader = t.replace('_', ' ').contains("cpu warm")
-        else
-          row.findFirstMatchIn(t).foreach { m =>
-            out(m.group(1)) = Ref(
-              m.group(2).toDouble,
-              m.group(3).toDouble,
-              if (cpuHeader) Option(m.group(4)).map(_.toDouble) else None,
-              if (cpuHeader) Option(m.group(5)).map(_.toDouble) else None)
-          }
+      val lines = java.nio.file.Files.readAllLines(p, java.nio.charset.StandardCharsets.UTF_8)
+      def fail(line: Int, why: String): Nothing =
+        throw new IllegalArgumentException(s"$path:$line: $why")
+      if (lines.isEmpty || lines.get(0).split("\t", -1).toSeq != RefHeader)
+        fail(1, s"expected the header ${RefHeader.mkString(" ")}, tab-separated")
+      val id = "[a-z][0-9]{2}_[a-z0-9_]+".r
+      val num = "[0-9]+(?:\\.[0-9]+)?".r
+      (1 until lines.size).foldLeft(Map.empty[String, Ref]) { (refs, i) =>
+        val f = lines.get(i).split("\t", -1)
+        if (f.length != RefHeader.size)
+          fail(i + 1, s"expected ${RefHeader.size} tab-separated fields, found ${f.length}")
+        def number(c: Int): Double = f(c) match {
+          case num() => f(c).toDouble
+          case v     => fail(i + 1, s"${RefHeader(c)} is not a number: '$v'")
+        }
+        def cpu(c: Int): Option[Double] = if (f(c).isEmpty) None else Some(number(c))
+        f(0) match {
+          case id() if refs.contains(f(0)) => fail(i + 1, s"duplicate query ${f(0)}")
+          case id() => refs + (f(0) -> Ref(number(1), number(2), cpu(3), cpu(4)))
+          case v    => fail(i + 1, s"not a query id: '$v'")
+        }
       }
-      out.toMap
     }
   }
 
@@ -190,68 +146,51 @@ object Bench {
     case object NeedsRerun extends DriftVerdict
   }
 
-  /** Foreign-load ceiling for drift confirmation: this suite's OWN work
-    * peaks around load1 ≈ 5.5 on the 32-core bench host (the r12
-    * authoritative capture's load1_max); every observed foreign-load
-    * window read ≥ 8.5 (r11 18.67, r12 driver captures 8.58 / 15.05).
-    * 8.0 splits the two populations with margin on both sides. */
+  /** Foreign-load ceiling for drift confirmation: this suite's own work
+    * peaks around load1 ≈ 5.5 on the 32-core bench host, and every
+    * observed foreign-load window read ≥ 8.5 (up to 18.67). 8.0 splits
+    * the two populations with margin on both sides. */
   private[graft] val Load1Ceiling = 8.0
 
   /** Capture-level trust marker: a REFUTED first-pass wobble means a
     * query's first measurement was >2× its reference and the recheck
     * collapsed it — the signature of a foreign-load burst during that
     * query's window. A few per capture are normal scheduler noise; when
-    * more than ~10% of the measured queries wobbled (r13 driver capture:
-    * 47 warm + 52 cold refuted over 159 queries), the first-pass numbers
-    * are near-worthless and every row's honest value came from its
-    * recheck leg — downstream consumers must read the capture as
-    * CONTENDED rather than trusting per-row first-pass walls. Refuted
-    * wobbles (not confirmed flags, not needs_rerun) drive the marker:
-    * confirmed flags are real regressions and needs_rerun already
-    * carries its own foreign-load signal. */
+    * more than 10% of the measured queries wobbled, the first-pass
+    * numbers are near-worthless and every row's honest value came from
+    * its recheck leg, so consumers must read the capture as CONTENDED.
+    * Only refuted wobbles drive the marker: confirmed flags are real
+    * regressions and needs_rerun carries its own foreign-load signal. */
   private[graft] def isContended(refutedWobbles: Int, nQueries: Int): Boolean =
     nQueries > 0 && refutedWobbles > nQueries / 10.0
 
   /** Is a first-pass drift flag CONFIRMED by its recheck leg?
     *
-    * r11 lesson: the end-of-suite recheck ran inside the same contended
-    * window as the first pass, so six environmental bursts "reproduced"
-    * and shipped as confirmed regressions (d06 read 5.6×; a quiet host
-    * measured 1.11×). The wall clock alone cannot distinguish a starved
-    * query from a slow one — but the query's OWN process-CPU seconds
-    * can: a genuine plan regression (an extra shuffle, a lost pushdown)
-    * does more WORK, so cpu rises with wall; a starved run's wall blows
-    * up while its cpu stays flat (r11's e05: 14 CPU-s across 12 s of
-    * wall on a 32-core session = 1.2 cores — starved, not slow).
+    * The recheck runs at the end of the same suite, so a contended host
+    * can starve it as it starved the first pass, and wall time alone
+    * cannot tell a starved query from a slow one. The query's own
+    * process-CPU seconds can: a genuine plan regression (an extra
+    * shuffle, a lost pushdown) does more work, so CPU rises with wall,
+    * while a starved run's wall blows up and its CPU stays flat.
     *
     * Rule: a flag confirms only if the recheck reproduces the WALL
-    * regression (>2× the committed reference) AND shows an own-work
-    * regression — recheck cpu > 2× the committed reference cpu. Rows
-    * without a cpu reference (pre-r12 tables) confirm on wall alone, the
-    * legacy rule, so the defense tightens as rows are re-recorded rather
-    * than silently never confirming. A recheck that itself ERRORS keeps
-    * the flag — an error must never read as "refuted". cpu telemetry
-    * that is unavailable on this JVM (cpu < 0) also falls back to
-    * wall-only.
+    * regression (>2× the reference) AND an own-work regression (recheck
+    * CPU > 2× the reference CPU). Without a CPU reference, or with CPU
+    * telemetry unavailable on this JVM (cpu < 0), wall alone decides. A
+    * recheck that itself ERRORS keeps the flag: an error must never read
+    * as "refuted".
     *
-    * r13 — the load ceiling, the second contention defense the r12 rule
-    * still needed: under heavy foreign load, own-CPU itself inflates
-    * (GC threads and memory-bus stalls bill to the process — the r12
-    * driver capture's t20 recheck burned 53.5 own-CPU-s against a
-    * 17.8 s reference through pure thrash, so wall-AND-own-CPU passed
-    * and 12 environmental flags shipped as confirmed; a same-day quiet
-    * A/B refuted every one). A reproduced regression measured in a
-    * capture that OVERLAPPED foreign load (either the recheck's own
-    * load1 sample or the capture-wide load1 maximum above
-    * [[Load1Ceiling]]) is therefore NEITHER confirmable nor refutable —
-    * it returns [[DriftVerdict.NeedsRerun]] and only a quiet re-capture
-    * may confirm. The capture-wide max matters because load1 is a
-    * one-minute EWMA sampled once per query: the r12 driver capture's
-    * per-recheck samples read 1.3–2.6 while its capture max read 15.05
-    * — bursty foreign load hides from the point samples but not from
-    * the max. Missing telemetry (load < 0) cannot gate and falls
-    * through to the legacy confirm — on hosts without /proc/loadavg the
-    * defense is simply absent, never falsely reassuring. */
+    * LOAD CEILING: under heavy foreign load own CPU inflates too, since
+    * GC threads and memory-bus stalls bill to the process (one contended
+    * recheck burned 53.5 CPU-s against a 17.8 s reference). So a
+    * reproduced regression in a capture that overlapped foreign load,
+    * by the recheck's own load1 sample or the capture-wide load1
+    * maximum above [[Load1Ceiling]], is neither confirmable nor
+    * refutable: it returns [[DriftVerdict.NeedsRerun]] and only a quiet
+    * re-capture may confirm it. The capture-wide maximum matters because
+    * load1 is a one-minute EWMA sampled once per query, so bursty load
+    * can hide from the recheck's own sample. Missing load telemetry
+    * (load < 0) cannot gate, and the CPU rule decides alone. */
   private[graft] def confirmDrift(
       refWall: Option[Double],
       refCpu: Option[Double],
@@ -291,9 +230,7 @@ object Bench {
       cpuCold: Double,
       // cpu of the LEG whose wall became `warm` (= min of the two
       // executions): confirmDrift must compare a wall and a cpu from
-      // the SAME execution — r12 paired the min wall with the warm
-      // leg's cpu, so when the cold leg was the minimum a borderline
-      // flag was adjudicated on mismatched signals (ADVICE r12)
+      // the SAME execution, or a flag is judged on mismatched signals
       cpuBest: Double,
       load: Double,
       // generated classes compiled, and Janino's compile time, in each exec
@@ -350,7 +287,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val refs = baselineRefs()
+    val refs = readRefs()
     // Warm the session once on the smallest tier (classloading, first-job
     // scheduler setup) so even "cold" numbers measure the engine.
     try SparkEntry.entry(spark).count()
@@ -419,34 +356,18 @@ object Bench {
         cgCold, cgColdMs, cgWarm, cgWarmMs)
     }
     val firstPass = selected.sortBy(_._1).map { case (name, fn) => measure(name, fn) }
-    // End-of-suite recheck: every first-pass drift flag — WARM OR COLD —
-    // is measured once more after the whole suite ran. A genuine
-    // regression reproduces; a competing-load burst during the original
-    // window does not. Both numbers ship; only a REPRODUCED flag counts.
-    // The r8 lesson for cold rows: warm flags had this defense, cold rows
-    // rode the first pass only, and one contaminated cold (d10 24.6s vs
-    // 3.1s clean) froze into the regression table. The recheck's "cold"
-    // (first exec of the re-measure, all caches released in between) can
-    // benefit from the JVM's codegen cache, so it is a LOWER-BOUND cold —
-    // which is the right bar for adjudication: a contention burst
-    // collapses on it, while a data-path regression (an extra shuffle,
-    // a lost pushdown) dominates compile time and still reproduces.
-    //
-    // r12: reproducing the WALL regression is no longer sufficient — when
-    // the whole suite window is contended (r11: load1_max 18.67, six
-    // environmental flags "confirmed"), the recheck leg is contended too.
-    // Confirmation now ALSO requires the recheck's own-work signal (its
-    // process-CPU seconds vs the committed reference cpu — see
-    // confirmDrift), and the recheck leg's cpu/load1 telemetry ships in
-    // bench_full.json so a post-hoc reader can re-adjudicate.
+    // End-of-suite recheck: every first-pass drift flag, warm or cold,
+    // is measured once more after the whole suite ran, and confirmDrift
+    // judges it. The recheck's "cold" can reuse the JVM's codegen cache,
+    // so it is a lower bound, which is the right bar: a contention burst
+    // collapses on it, while a data-path regression dominates compile
+    // time and still reproduces.
     val recheck: Map[String, R] = firstPass
       .filter(r => (r.drift || r.coldDrift) && r.ok)
       .map(r => r.name -> measure(r.name, SparkEntry.queries(r.name)))
       .toMap
     // Capture-wide load ceiling input: the max over EVERY load1 sample
-    // this run took (first pass + rechecks). Bursty foreign load hides
-    // from per-query point samples but not from the max (r12 driver
-    // capture: recheck samples 1.3-2.6, capture max 15.05).
+    // this run took (first pass + rechecks), see confirmDrift.
     // maxOption: a subset invocation matching no query names must print
     // the empty result line, not crash on max of an empty capture
     val captureLoad1Max =
@@ -473,14 +394,11 @@ object Bench {
       firstPass.count(_.coldDrift) - coldDriftFlags - coldDriftNeedsRerun
     val contended =
       isContended(driftUnconfirmed + coldDriftUnconfirmed, results.length)
-    // Full-name detail artifact (not size-constrained): warm + cold +
-    // end-of-run storage bytes + drift flag per query. ONLY full-suite
-    // runs may write it — a subset run (`Bench d13 d14`) would otherwise
-    // clobber the tracked record with a 2-query file that reads as a
-    // clean full run (and the round snapshot commits the tree wholesale).
-    // Subset runs write the SAME detail to bench_subset.json instead
-    // (untracked, overwritten per run): the A/B adjudication protocol
-    // needs per-query COLD walls, which the stdout line does not carry.
+    // Full-name detail artifact (not size-constrained). Only a full-suite
+    // run writes bench_full.json, so a subset run cannot replace the
+    // tracked record with a partial one; a subset run writes the same
+    // detail to the untracked bench_subset.json, which tools/ab_bench.sh
+    // reads for its ratio table.
     locally {
       val detailPath = java.nio.file.Paths.get(
         if (args.isEmpty) "bench_full.json" else "bench_subset.json")
@@ -489,16 +407,13 @@ object Bench {
           val r = a.r
           val refPart = refs.get(r.name)
             .map { rf =>
-              val cpuRefs = (rf.cpuWarm, rf.cpuCold) match {
-                case (Some(w), Some(c)) => s""", "ref_cpu_warm": ${jnum(w)}, "ref_cpu_cold": ${jnum(c)}"""
-                case _                  => ""
-              }
-              s""", "ref_warm": ${jnum(rf.warm)}, "ref_cold": ${jnum(rf.cold)}$cpuRefs"""
+              s""", "ref_warm": ${jnum(rf.warm)}, "ref_cold": ${jnum(rf.cold)}""" +
+                rf.cpuWarm.map(w => s""", "ref_cpu_warm": ${jnum(w)}""").getOrElse("") +
+                rf.cpuCold.map(c => s""", "ref_cpu_cold": ${jnum(c)}""").getOrElse("")
             }
             .getOrElse("")
-          // the recheck leg ships its OWN cpu/load telemetry (r11 lesson:
-          // only first-pass telemetry was kept, so a contended recheck
-          // could not be adjudicated from the artifact)
+          // the recheck leg ships its own cpu/load telemetry, so a
+          // contended recheck can be adjudicated from the artifact
           val recheckPart = recheck.get(r.name)
             .map { r2 =>
               val fp = firstPass.find(_.name == r.name).get
@@ -515,11 +430,8 @@ object Bench {
       )
     }
     // Driver-contract line ONLY (metric/value/unit/queries/failed/sf):
-    // every other field lives in bench_full.json. The r14/r15 driver
-    // tails (2000 chars) both cut this line's opening brace because the
-    // telemetry fields + 3-decimal values pushed it to ~3.5 KB — two
-    // rounds of empty PERF comparisons. Do not add fields here without
-    // re-doing the worst-case size math in the header comment.
+    // every other field lives in the detail file. Do not add fields here
+    // without redoing the worst-case size math in the header comment.
     println(
       s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"failed":$failed,"sf":${jsf(sfDir)}}"""
     )

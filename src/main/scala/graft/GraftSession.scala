@@ -15,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   *     2-3x total cores and AQE coalesces down.
   *   - UTC session TZ so timestamp semantics match the DuckDB oracle.
   *   - parquet nanos-as-long: a TIMESTAMP(NANOS) column, which Spark has
-  *     no native type for, reads as a long; Tables.events() converts it.
+  *     no native type for, reads as a long; EventStream's file-source
+  *     streams convert it to microseconds.
   *   - codegen cache sized to the engine's working set
   *     ([[CodegenCacheEntries]]). Spark's JVM-wide cache of compiled
   *     generated classes holds 100 entries by default; the five `perfbench`

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated star schema (TESTDATA.md).
@@ -12,10 +11,7 @@ import org.apache.spark.sql.types.StructType
   * exactly what inference gives on every scale factor (`TablesSpec`).
   *
   * `events.ts` is a microsecond `timestamp` without a time zone in the
-  * TESTDATA files, read as TIMESTAMP_NTZ. A TIMESTAMP(NANOS) column
-  * reads as a long under nanosAsLong; [[events]] converts that to a
-  * microsecond TimestampType column by exact integer division, since a
-  * double division would lose precision above 2^53 ns (~1970+104 days).
+  * TESTDATA files, declared and read as TIMESTAMP_NTZ.
   */
 object Tables {
   private[graft] val schemas: Map[String, StructType] = Map(
@@ -54,19 +50,5 @@ object Tables {
     * (d01 exact dedup is the tool) before these operators apply. */
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
-
-  /** events with `ts` as a proper TimestampType (µs), whatever the file had. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val raw = table(s, d, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        // FLOOR division, not `div`: div truncates toward zero, so a
-        // pre-1970 nanosecond timestamp would round UP a microsecond —
-        // e.g. -500 ns must floor to -1 us, not 0 (the boundary a
-        // `<= ts` comparison flips on). pmod is non-negative, making
-        // (ts - pmod) an exact long floor.
-        raw.withColumn("ts", timestamp_micros(expr("(ts - pmod(ts, 1000)) div 1000")))
-      case _ => raw
-    }
-  }
+  def events(s: SparkSession, d: String): DataFrame = table(s, d, "events")
 }

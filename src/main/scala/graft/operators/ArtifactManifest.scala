@@ -84,6 +84,27 @@ object ArtifactManifest {
     fields
   }
 
+  /** An artifact family whose every manifest field is computed from the
+    * artifact as stored at its directory, by one `read` function that
+    * returns what a load yields together with the fields. [[Family.save]]
+    * writes those fields and [[Family.load]] checks every key against
+    * them, so the two cannot drift apart. */
+  final case class Family[A](kind: String)(read: (SparkSession, String) => (A, Seq[(String, String)])) {
+    /** Write the manifest for the artifact at `dir`. Call AFTER every
+      * data file is committed. */
+    def save(spark: SparkSession, dir: String): Unit =
+      write(spark, dir, kind, read(spark, dir)._2.toMap)
+
+    /** Check `format_version` and `kind`, then each field in declaration
+      * order against the stored artifact; returns what `read` loaded. */
+    def load(spark: SparkSession, dir: String): A = {
+      val mf = readAndCheck(spark, dir, kind)
+      val (loaded, found) = read(spark, dir)
+      found.foreach { case (k, v) => check(dir, k, mf.getOrElse(k, "?"), v) }
+      loaded
+    }
+  }
+
   /** Structural assertion helper: typed Mismatch instead of a bare require. */
   def check(path: String, field: String, expected: String, found: String): Unit =
     if (expected != found) throw Mismatch(path, field, expected, found)

@@ -4154,22 +4154,18 @@ object LlmOps {
     * t18's oracle to prove it). */
   private[graft] def saveUnigramLm(lm: DataFrame, path: String): Unit = {
     lm.write.mode("overwrite").parquet(path)
-    val s = lm.sparkSession
-    graft.operators.ArtifactManifest.write(
-      s,
-      path,
-      "unigram-lm",
-      Map("vocab_rows" -> graft.operators.ArtifactManifest.tableRows(s, path).toString)
-    )
+    unigramLmManifest.save(lm.sparkSession, path)
   }
 
   /** Reload a unigram LM written by [[saveUnigramLm]]; manifest-validated
     * (kind/version + vocabulary row count vs the physical table). */
   private[graft] def loadUnigramLm(s: SparkSession, path: String): DataFrame = {
-    val M = graft.operators.ArtifactManifest
-    val mf = M.readAndCheck(s, path, "unigram-lm")
-    M.check(path, "vocab_rows", mf.getOrElse("vocab_rows", "?"), M.tableRows(s, path).toString)
+    unigramLmManifest.load(s, path)
     s.read.parquet(path)
+  }
+
+  private val unigramLmManifest = graft.operators.ArtifactManifest.Family("unigram-lm") { (s, path) =>
+    ((), Seq("vocab_rows" -> graft.operators.ArtifactManifest.tableRows(s, path).toString))
   }
 
   /** Tokenizer handle for the streaming scorer (EventStream.nllStream
@@ -4384,20 +4380,15 @@ object LlmOps {
     * manifest last (the commit-marker discipline). */
   private[graft] def saveDsirLmPair(ug: DataFrame, path: String): Unit = {
     ug.write.mode("overwrite").parquet(path)
-    val s = ug.sparkSession
-    val t = s.read.parquet(path)
-      .agg(sum("cr").as("ttr"), sum("ct").as("ttt"), count(lit(1)).as("v"))
-      .head()
-    graft.operators.ArtifactManifest.write(
-      s,
-      path,
-      "dsir-lm-pair",
-      Map(
-        "vocab_rows" -> t.getLong(2).toString,
-        "raw_tokens" -> t.getLong(0).toString,
-        "target_tokens" -> t.getLong(1).toString
-      )
-    )
+    dsirLmManifest.save(ug.sparkSession, path)
+  }
+
+  private val dsirLmManifest = graft.operators.ArtifactManifest.Family("dsir-lm-pair") { (s, path) =>
+    val df = s.read.parquet(path)
+    val t = df.agg(sum("cr").as("ttr"), sum("ct").as("ttt"), count(lit(1)).as("v")).head()
+    val (raw, target, vocab) = (t.getLong(0), t.getLong(1), t.getLong(2))
+    ((df, (raw, target, vocab)),
+      Seq("vocab_rows" -> vocab.toString, "raw_tokens" -> raw.toString, "target_tokens" -> target.toString))
   }
 
   /** Reload a DSIR LM pair written by [[saveDsirLmPair]]:
@@ -4407,16 +4398,8 @@ object LlmOps {
     * table AND the now-VALIDATED (raw_tokens, target_tokens, vocab_rows)
     * totals, so scoring ([[dsirRatios]]) can take them as literals
     * instead of aggregating the vocabulary a third time. */
-  private[graft] def loadDsirLmPair(s: SparkSession, path: String): (DataFrame, (Long, Long, Long)) = {
-    val M = graft.operators.ArtifactManifest
-    val mf = M.readAndCheck(s, path, "dsir-lm-pair")
-    val df = s.read.parquet(path)
-    val t = df.agg(sum("cr").as("ttr"), sum("ct").as("ttt"), count(lit(1)).as("v")).head()
-    M.check(path, "vocab_rows", mf.getOrElse("vocab_rows", "?"), t.getLong(2).toString)
-    M.check(path, "raw_tokens", mf.getOrElse("raw_tokens", "?"), t.getLong(0).toString)
-    M.check(path, "target_tokens", mf.getOrElse("target_tokens", "?"), t.getLong(1).toString)
-    (df, (t.getLong(0), t.getLong(1), t.getLong(2)))
-  }
+  private[graft] def loadDsirLmPair(s: SparkSession, path: String): (DataFrame, (Long, Long, Long)) =
+    dsirLmManifest.load(s, path)
 
   /** t23 THROUGH THE PERSISTED LM PAIR: train both DSIR LMs, save them
     * under one manifest, reload, and reproduce the selection from the
@@ -4625,32 +4608,10 @@ object LlmOps {
     * physical artifact, and load fails loudly on any lost/extra row). */
   private[graft] def saveBigramLm(counts: DataFrame, path: String): Unit = {
     counts.write.mode("overwrite").parquet(path)
-    val s = counts.sparkSession
-    val t = s.read.parquet(path)
-      .agg(
-        sum(when(col("prev").isNull, col("cnt"))).as("tt"),
-        count(when(col("prev").isNull, lit(1))).as("v"),
-        count(when(col("prev").isNotNull, lit(1))).as("b")
-      )
-      .head()
-    graft.operators.ArtifactManifest.write(
-      s,
-      path,
-      "bigram-lm",
-      Map(
-        "total_tokens" -> t.getLong(0).toString,
-        "vocab_rows" -> t.getLong(1).toString,
-        "bigram_rows" -> t.getLong(2).toString
-      )
-    )
+    bigramLmManifest.save(counts.sparkSession, path)
   }
 
-  /** Reload a bigram LM written by [[saveBigramLm]]; manifest-validated on
-    * kind/version plus all three counts recomputed from the loaded table
-    * (pair-vocabulary-sized aggregate — cheap at any corpus scale). */
-  private[graft] def loadBigramLm(s: SparkSession, path: String): DataFrame = {
-    val M = graft.operators.ArtifactManifest
-    val mf = M.readAndCheck(s, path, "bigram-lm")
+  private val bigramLmManifest = graft.operators.ArtifactManifest.Family("bigram-lm") { (s, path) =>
     val df = s.read.parquet(path)
     val t = df
       .agg(
@@ -4659,11 +4620,18 @@ object LlmOps {
         count(when(col("prev").isNotNull, lit(1))).as("b")
       )
       .head()
-    M.check(path, "total_tokens", mf.getOrElse("total_tokens", "?"), t.getLong(0).toString)
-    M.check(path, "vocab_rows", mf.getOrElse("vocab_rows", "?"), t.getLong(1).toString)
-    M.check(path, "bigram_rows", mf.getOrElse("bigram_rows", "?"), t.getLong(2).toString)
-    df
+    (df, Seq(
+      "total_tokens" -> t.getLong(0).toString,
+      "vocab_rows" -> t.getLong(1).toString,
+      "bigram_rows" -> t.getLong(2).toString
+    ))
   }
+
+  /** Reload a bigram LM written by [[saveBigramLm]]; manifest-validated on
+    * kind/version plus all three counts recomputed from the loaded table
+    * (pair-vocabulary-sized aggregate — cheap at any corpus scale). */
+  private[graft] def loadBigramLm(s: SparkSession, path: String): DataFrame =
+    bigramLmManifest.load(s, path)
 
   /** t25 THROUGH THE PERSISTED LM: train the bigram count table, save it,
     * reload it, and score the corpus from the LOADED artifact under t25's

@@ -23,10 +23,9 @@ object EventStream {
     * ÷1000 then lands every window in 1970). So don't guess: peek the
     * directory's PHYSICAL schema with a one-off batch read — a
     * footer-metadata operation, no data scan — declare the stream with
-    * exactly that schema, and normalize `tsCol` the same way
-    * [[graft.Tables.events]] does, dispatching on the same physical fact:
-    *   - int64 (TIMESTAMP(NANOS) under nanosAsLong): the same exact floor
-    *     division as the batch loader (`div` truncates toward zero, so a
+    * exactly that schema, and normalize `tsCol` by its physical type:
+    *   - int64 (TIMESTAMP(NANOS) under nanosAsLong): an exact floor
+    *     division to microseconds (`div` truncates toward zero, so a
     *     pre-1970 nanosecond value would round UP a microsecond; pmod
     *     makes the floor exact in long arithmetic);
     *   - TIMESTAMP_NTZ (what a plain `timestamp[us]` parquet column

@@ -50,9 +50,9 @@ class BenchDriftSpec extends AnyFunSuite {
       recheckLoad1 = quiet, captureLoad1Max = quiet) == Refuted)
   }
 
-  // Pre-r12 BASELINE rows carry no cpu columns: the legacy wall-only
-  // rule applies so the defense tightens as rows are re-recorded rather
-  // than silently never confirming on old rows.
+  // A reference leg without a cpu cell (q55's cold leg): the legacy
+  // wall-only rule applies rather than the flag silently never
+  // confirming.
   test("no cpu reference falls back to the legacy wall-only rule") {
     assert(Bench.confirmDrift(
       refWall = Some(1.0), refCpu = None,
@@ -209,59 +209,47 @@ class BenchDriftSpec extends AnyFunSuite {
     assert(!out.head.r.coldDrift && !out.head.coldNeedsRerun)
   }
 
-  test("baseline parse: 3-, 4- and 5-column rows; last occurrence wins") {
-    val md =
-      """
-        |# some table
-        || query | warm | cold |
-        ||---|---|---|
-        || d01_dedup_exact | 1.500 | 3.000 |
-        |
-        |# re-baselined later with cpu columns (last row wins)
-        || query | warm | cold | cpu_warm_s | cpu_cold_s |
-        ||---|---|---|---|---|
-        || d01_dedup_exact | 1.200 | 2.800 | 14.250 | 30.100 |
-        || e05_ann_recall | 1.000 | 2.000 | 12.000 |
-        || t01_text_stats | 0.400 | 0.900 |
-        |""".stripMargin
-    val f = java.nio.file.Files.createTempFile("baseline", ".md")
+  private val refHeader = "query\twarm_s\tcold_s\tcpu_warm_s\tcpu_cold_s\n"
+
+  private def withRefTable(body: String)(check: String => Unit): Unit = {
+    val f = java.nio.file.Files.createTempFile("bench_ref", ".tsv")
     try {
-      java.nio.file.Files.write(f, md.getBytes("UTF-8"))
-      val refs = Bench.baselineRefs(f.toString)
-      assert(refs("d01_dedup_exact") == Bench.Ref(1.2, 2.8, Some(14.25), Some(30.1)))
-      assert(refs("e05_ann_recall") == Bench.Ref(1.0, 2.0, Some(12.0), None))
-      assert(refs("t01_text_stats") == Bench.Ref(0.4, 0.9, None, None))
+      java.nio.file.Files.write(f, body.getBytes("UTF-8"))
+      check(f.toString)
     } finally java.nio.file.Files.delete(f)
   }
 
-  /** ADVICE r12: the tolerant positional parse read ANY 4th/5th numeric
-    * columns as CPU seconds. A future table whose extra columns are NOT
-    * cpu (a ratio, a row count) must not poison the own-CPU gate through
-    * last-row-wins: cpu columns are honored only under a header that
-    * declares them. */
-  test("baseline parse: extra numeric columns under a cpu-less header are not cpu") {
-    val md =
-      """
-        || query | warm s (r12) | cold s (r12) | cpu warm s | cpu cold s |
-        ||---|---|---|---|---|
-        || d01_dedup_exact | 1.200 | 2.800 | 14.250 | 30.100 |
-        |
-        |# appended later: a scale table whose columns 4-5 are ratios
-        || query | warm s (x10) | cold s (x10) | ratio | rows per s |
-        ||---|---|---|---|---|
-        || d01_dedup_exact | 1.300 | 2.900 | 3.100 | 99.000 |
-        |""".stripMargin
-    val f = java.nio.file.Files.createTempFile("baseline", ".md")
-    try {
-      java.nio.file.Files.write(f, md.getBytes("UTF-8"))
-      val refs = Bench.baselineRefs(f.toString)
-      // last row wins for wall, but its ratio columns do NOT become cpu
-      assert(refs("d01_dedup_exact") == Bench.Ref(1.3, 2.9, None, None))
-    } finally java.nio.file.Files.delete(f)
+  test("reference table: a full row and an empty cpu_cold_s cell read back as Refs") {
+    withRefTable(refHeader +
+        "d01_dedup_exact\t1.200\t2.800\t14.25\t30.10\n" +
+        "q55_snapshot_timetravel\t0.953\t3.459\t3.47\t\n") { path =>
+      assert(Bench.readRefs(path) == Map(
+        "d01_dedup_exact" -> Bench.Ref(1.2, 2.8, Some(14.25), Some(30.1)),
+        "q55_snapshot_timetravel" -> Bench.Ref(0.953, 3.459, Some(3.47), None)))
+    }
   }
 
-  test("baseline parse: missing file yields no references (no flags)") {
-    assert(Bench.baselineRefs("/nonexistent/BASELINE.md").isEmpty)
+  test("reference table: a wrong field count, a non-number and a duplicate query fail naming the line") {
+    val bad = Seq(
+      "d01_dedup_exact\t1.2\t2.8\t14.25" -> "expected 5 tab-separated fields, found 4",
+      "d01_dedup_exact\t1.2\tslow\t14.25\t30.1" -> "cold_s is not a number: 'slow'",
+      "t01_text_stats\t0.5\t1.0\t\t" -> "duplicate query t01_text_stats")
+    for ((row, why) <- bad)
+      withRefTable(refHeader + "t01_text_stats\t0.4\t0.9\t\t\n" + row + "\n") { path =>
+        val e = intercept[IllegalArgumentException](Bench.readRefs(path))
+        assert(e.getMessage == s"$path:3: $why")
+      }
+  }
+
+  test("reference table: the committed bench_ref.tsv parses and names only registered queries") {
+    val refs = Bench.readRefs("bench_ref.tsv")
+    assert(refs.nonEmpty)
+    val unknown = refs.keySet -- graft.queries.Registry.queries.keySet
+    assert(unknown.isEmpty, s"bench_ref.tsv rows name no registered query: $unknown")
+  }
+
+  test("reference table: missing file yields no references (no flags)") {
+    assert(Bench.readRefs("/nonexistent/bench_ref.tsv").isEmpty)
   }
 
   test("contended marker: >10% refuted wobbles flags the capture, boundary and empty do not") {

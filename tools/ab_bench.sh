@@ -1,14 +1,14 @@
 #!/usr/bin/env bash
 # Same-host A/B adjudication for bench watch items.
 #
-# The institutional protocol (BASELINE.md "Reading this table", memory:
-# the bench host is SHARED and foreign load appears unpredictably):
+# The bench host is shared, and foreign load inflates timings, so:
 #   1. no other JVMs may be running (they inflate numbers ~15%),
 #   2. load1 must be < 2 at start (the suite's own work pushing load1
 #      to ~5 mid-run is fine; STARTING loaded is not),
 #   3. never adjudicate on one isolated draw — run the subset, read the
-#      vs-baseline ratios, repeat if in doubt.
-# This script enforces (1) and (2) and prints (3)'s ratios directly.
+#      ratios against bench_ref.tsv, repeat if in doubt.
+# This script enforces (1) and (2) and prints (3)'s ratios from the
+# ref_warm field graft.Bench writes per row of bench_subset.json.
 #
 # Usage: tools/ab_bench.sh <query-substring> [more...]
 #        SF_DIR=/root/testdata/sf0.1 tools/ab_bench.sh t18
@@ -24,7 +24,7 @@ if [ $# -lt 1 ]; then
 fi
 
 SF_DIR="${SF_DIR:-/root/testdata/sf0.1}"
-LOAD1_START_CEILING="${LOAD1_START_CEILING:-2.0}"
+load1_ceiling=2.0
 
 njvm=$(pgrep -c -f '[j]ava' || true)
 if [ "${njvm:-0}" -gt 0 ]; then
@@ -34,38 +34,27 @@ if [ "${njvm:-0}" -gt 0 ]; then
 fi
 
 load1=$(cut -d' ' -f1 /proc/loadavg)
-if awk -v l="$load1" -v c="$LOAD1_START_CEILING" 'BEGIN{exit !(l>c)}'; then
-  echo "REFUSING: load1=$load1 > $LOAD1_START_CEILING with zero JVMs — foreign load; retry later" >&2
+if awk -v l="$load1" -v c="$load1_ceiling" 'BEGIN{exit !(l>c)}'; then
+  echo "REFUSING: load1=$load1 > $load1_ceiling with zero JVMs — foreign load; retry later" >&2
   exit 1
 fi
 
 echo "host quiet (load1=$load1, 0 JVMs); benching: $* on $SF_DIR"
-out=$(SPARK_GRAFT_SF_DIR="$SF_DIR" sbt -batch "runMain graft.Bench $*" 2>&1 | grep '"metric"' | tail -1)
-echo "$out"
+rm -f bench_subset.json
+SPARK_GRAFT_SF_DIR="$SF_DIR" sbt -batch "runMain graft.Bench $*" 2>&1 | grep '^{"metric"' | tail -1
 
-# ratio table vs BASELINE.md (last-row-wins reference, same parse rule
-# as Bench.baselineRefs modulo the header anchoring — prefix-keyed here)
-python3 - "$out" <<'EOF'
-import json, re, sys
-line = re.sub(r'^\[info\]\s*', '', sys.argv[1])
-j = json.loads(line)
-src = open('BASELINE.md').read()
-refs, cpu_header = {}, False
-for ln in src.splitlines():
-    t = ln.strip()
-    if t.startswith('|') and 'query' in t and 'warm' in t:
-        cpu_header = 'cpu warm' in t.replace('_', ' ')
-        continue
-    m = re.match(r'\|\s*([a-z]\d{2}_[a-z0-9_]+)\s*\|\s*(\d+\.\d+)\s*\|\s*(\d+\.\d+)\s*\|', t)
-    if m:
-        refs[m.group(1).split('_')[0]] = (m.group(1), float(m.group(2)), float(m.group(3)))
+python3 - <<'EOF'
+import json
+qs = json.load(open('bench_subset.json'))['queries']
 print(f"{'query':34} {'warm':>8} {'ref':>8} {'ratio':>7}")
-for pfx, warm in sorted(j['queries'].items()):
-    if pfx in refs:
-        name, rw, _ = refs[pfx]
+for name, q in sorted(qs.items()):
+    warm, rw = q['warm'], q.get('ref_warm')
+    if not q['ok']:
+        print(f"{name:34} {'-':>8} {'-':>8} {'-':>7}  FAILED")
+    elif rw is not None:
         r = warm / rw if rw else float('nan')
         verdict = 'OK' if r <= 1.5 else ('WATCH' if r <= 2.0 else 'FLAG')
         print(f"{name:34} {warm:8.3f} {rw:8.3f} {r:6.2f}x  {verdict}")
     else:
-        print(f"{pfx:34} {warm:8.3f} {'-':>8} {'-':>7}  (no baseline row)")
+        print(f"{name:34} {warm:8.3f} {'-':>8} {'-':>7}  (no reference row)")
 EOF
