@@ -24,7 +24,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         e.injectFunction(
           (
             FunctionIdentifier(name),
-            new ExpressionInfo(cls.getCanonicalName, null, name, usage, ""),
+            new ExpressionInfo(cls.getCanonicalName, null, name, usage, "", "", "", "", "", "", ""),
             builder
           )
         )

@@ -29,27 +29,6 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
-  /** The reference's autoscale surface (SURVEY §2.2 P5: the head service
-    * "grows" nodes up to a per-job CPU cap, reference
-    * `cluster_lifecycle.py:23` caps at 2,560 CPUs) mapped onto Spark
-    * dynamic allocation. Call on the builder BEFORE getOrCreate; local
-    * mode ignores it (no executors to scale), a cluster session scales
-    * executors between the bounds with the reference's idle-shutdown
-    * semantic (`executorIdleTimeout` ~ the 60 s grow-node idle shutdown,
-    * `cluster_lifecycle.py:29`).
-    */
-  def withAutoscale(
-      b: SparkSession.Builder,
-      minExecutors: Int = 0,
-      maxExecutors: Int = 80, // 2560 reference CPUs / 32-core executors
-      idleTimeoutSec: Int = 60
-  ): SparkSession.Builder =
-    b.config("spark.dynamicAllocation.enabled", "true")
-      .config("spark.dynamicAllocation.shuffleTracking.enabled", "true")
-      .config("spark.dynamicAllocation.minExecutors", minExecutors.toString)
-      .config("spark.dynamicAllocation.maxExecutors", maxExecutors.toString)
-      .config("spark.dynamicAllocation.executorIdleTimeout", s"${idleTimeoutSec}s")
-
   /** Entries in Spark's generated-class cache
     * (`spark.sql.codegen.cache.maxEntries`). One cold pass of all
     * registered queries at sf0.01 compiles 2,786 distinct classes; 4,096

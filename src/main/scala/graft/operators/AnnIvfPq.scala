@@ -186,7 +186,7 @@ object AnnIvfPq {
     * float-narrowed centroid), so corpus codes and query tables live in
     * one space. */
   private[graft] def residualCol(cs: Seq[Array[Double]]): org.apache.spark.sql.Column = {
-    val cents = array(cs.map(c => array(c.map(v => lit(v.toFloat)): _*)): _*)
+    val cents = array(cs.map(c => array(c.toIndexedSeq.map(v => lit(v.toFloat)): _*)): _*)
     zip_with(col("embedding"), element_at(cents, col("cluster") + 1), (a, b) => a - b)
   }
 

@@ -39,7 +39,7 @@ object SkewJoin {
       !left.columns.contains("__salt") && !right.columns.contains("__salt"),
       "saltedInnerJoin reserves the __salt column name"
     )
-    val allCols = left.columns.map(col)
+    val allCols = left.columns.toIndexedSeq.map(col)
     val saltedLeft = left.withColumn(
       "__salt",
       pmod(

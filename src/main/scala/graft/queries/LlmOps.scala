@@ -257,7 +257,7 @@ object LlmOps {
     * after ingest and every near-dup pass starts from it instead of
     * re-running the canonicalization window — d17 round-trips it through
     * disk under d02's oracle. */
-  private[graft] def canonicalTable(documents: DataFrame): DataFrame =
+  def canonicalTable(documents: DataFrame): DataFrame =
     documents
       .select(
         col("doc_id"),
@@ -267,7 +267,7 @@ object LlmOps {
 
   /** d02's pair list (near pairs + exact-dup star edges) from a LOADED
     * canonical table — the artifact-consuming twin of minhashPairsOf. */
-  private[graft] def minhashPairsFromCanonical(docs0: DataFrame): DataFrame = {
+  def minhashPairsFromCanonical(docs0: DataFrame): DataFrame = {
     val (d0, _, nearPairs) = minhashSigPartsFrom(docs0)
     nearPairs.unionAll(dupStarEdges(d0))
   }
@@ -648,7 +648,7 @@ object LlmOps {
     sourceOverlapOf(Tables.documents(s, d)).orderBy("source_a", "source_b")
   }
 
-  /** Frame-parameterized body of d26 (facade: Graft.sourceOverlap). */
+  /** Frame-parameterized body of d26. */
   def sourceOverlapOf(documents: DataFrame): DataFrame = {
     val src = documents.select(col("doc_id"), col("source"))
     minhashPairsOf(documents)
@@ -1094,7 +1094,7 @@ object LlmOps {
     * the admitted batch's rows after each ingest) — so every future batch
     * pays only its own fingerprinting plus two equi-joins against the
     * artifact, never a corpus re-scan. */
-  private[graft] def dedupIndexOf(corpus: DataFrame): (DataFrame, DataFrame) =
+  def dedupIndexOf(corpus: DataFrame): (DataFrame, DataFrame) =
     indexParts(fingerprints(corpus))
 
   /** What one document contributes to dedup, computed once per row:
@@ -1131,7 +1131,7 @@ object LlmOps {
 
   /** Write a fresh dedup index artifact pair under `path` as snapshot
     * data directories plus the first (or next) manifest version. */
-  private[graft] def saveDedupIndex(hash: DataFrame, bands: DataFrame, path: String): Unit = {
+  def saveDedupIndex(hash: DataFrame, bands: DataFrame, path: String): Unit = {
     val s = hash.sparkSession
     val L = graft.operators.SnapshotLog
     val v = L.nextVersion(s, path)
@@ -1276,7 +1276,7 @@ object LlmOps {
     * mutation of a committed directory fails here with a typed error
     * instead of admitting near-duplicates; a TORN append never even gets
     * this far — its directories are unreferenced and invisible). */
-  private[graft] def loadDedupIndex(s: SparkSession, path: String): (DataFrame, DataFrame) = {
+  def loadDedupIndex(s: SparkSession, path: String): (DataFrame, DataFrame) = {
     val M = graft.operators.ArtifactManifest
     val snap = dedupSnapshot(s, path)
     val frames = trustedFrames(s, path, snap)
@@ -1318,7 +1318,7 @@ object LlmOps {
     * join time; duplicate band rows only repeat a candidate pair), and
     * compactDedupIndex's distinct() retires them on the normal
     * maintenance cadence. */
-  private[graft] def appendDedupIndex(admitted: DataFrame, path: String): Unit = {
+  def appendDedupIndex(admitted: DataFrame, path: String): Unit = {
     val s = admitted.sparkSession
     val snap = dedupSnapshot(s, path)
     val kept = fingerprints(admitted).localCheckpoint(true) // the lineage cut
@@ -1807,7 +1807,7 @@ object LlmOps {
     * the superseded directories and manifests — a crash anywhere leaves
     * either the old snapshot fully live or the new one fully live, never
     * a deleted index. */
-  private[graft] def compactDedupIndex(s: SparkSession, path: String): Unit = {
+  def compactDedupIndex(s: SparkSession, path: String): Unit = {
     val L = graft.operators.SnapshotLog
     val (h, b) = loadDedupIndex(s, path)
     val v = L.nextVersion(s, path)
@@ -1823,7 +1823,7 @@ object LlmOps {
     * the incremental-ingest split, ordered by doc_id. Cost: fingerprint
     * the batch (map-only) + one equi-join per table, linear in batch size
     * and independent of corpus size. */
-  private[graft] def incrementalDedupAgainst(
+  def incrementalDedupAgainst(
       batch: DataFrame,
       hash: DataFrame,
       bands: DataFrame
@@ -2563,7 +2563,7 @@ object LlmOps {
     * specs in RecallGateSpec prove non-vacuity); RECALL stays delegated
     * to the oracle-green gates (e05/e07) — this surface makes the search
     * itself hash-comparable without pretending its ranking is exact. */
-  private[graft] def annStructuralVerdicts(
+  def annStructuralVerdicts(
       querySet: DataFrame, // vec_id
       topk: DataFrame, // qid, vid, cosine
       k: Int
@@ -3088,7 +3088,7 @@ object LlmOps {
     * salted vec_id hash → per-cluster kept summary. `lab` is
     * (vec_id, cluster); the count column is caller-named so each query's
     * oracle keeps its vocabulary. */
-  private[graft] def balanceByCluster(lab: DataFrame, salt: String, nName: String): DataFrame = {
+  def balanceByCluster(lab: DataFrame, salt: String, nName: String): DataFrame = {
     val s = lab.sparkSession
     import s.implicits._
     // 9-digit scheme (functions.Sampling.thresholdHex's fix): the m == n
@@ -4170,7 +4170,7 @@ object LlmOps {
 
   /** Tokenizer handle for the streaming scorer (EventStream.nllStream
     * must tokenize arriving docs EXACTLY as the batch LM trainer did). */
-  private[graft] def tokensCol(text: Column): Column = toks(text)
+  def tokensCol(text: Column): Column = toks(text)
 
   val t18 = Q(
     "t18_unigram_nll",
@@ -4445,7 +4445,7 @@ object LlmOps {
     * deterministically at load, so a persisted model scores byte-equal
     * to the fused plan. Vocabulary + bigram-vocabulary sized — ≪ corpus
     * at any scale (bounded by distinct adjacent-token pairs). */
-  private[graft] def bigramLmCountsOf(tk: DataFrame): DataFrame = {
+  def bigramLmCountsOf(tk: DataFrame): DataFrame = {
     val oc = tk.select(col("doc_id"), explode(col("t")).as("tok"))
     oc.groupBy("tok")
       .agg(count(lit(1)).as("cnt"))
@@ -4486,7 +4486,7 @@ object LlmOps {
     * ([[graft.streaming.EventStream.bigramNllStream]]) groups by
     * (event-time, doc_id) so watermark-append semantics hold, with the
     * IDENTICAL aggregate expressions (parity spec-pinned). */
-  private[graft] def bigramNllFrom(
+  def bigramNllFrom(
       tk: DataFrame,
       counts: DataFrame,
       keys: Seq[String] = Seq("doc_id")
@@ -4606,7 +4606,7 @@ object LlmOps {
     * rows, and the corpus token total, all re-aggregated from the WRITTEN
     * file (saveDsirLmPair's discipline — the manifest describes the
     * physical artifact, and load fails loudly on any lost/extra row). */
-  private[graft] def saveBigramLm(counts: DataFrame, path: String): Unit = {
+  def saveBigramLm(counts: DataFrame, path: String): Unit = {
     counts.write.mode("overwrite").parquet(path)
     bigramLmManifest.save(counts.sparkSession, path)
   }
@@ -4630,7 +4630,7 @@ object LlmOps {
   /** Reload a bigram LM written by [[saveBigramLm]]; manifest-validated on
     * kind/version plus all three counts recomputed from the loaded table
     * (pair-vocabulary-sized aggregate — cheap at any corpus scale). */
-  private[graft] def loadBigramLm(s: SparkSession, path: String): DataFrame =
+  def loadBigramLm(s: SparkSession, path: String): DataFrame =
     bigramLmManifest.load(s, path)
 
   /** t25 THROUGH THE PERSISTED LM: train the bigram count table, save it,
@@ -4685,8 +4685,8 @@ object LlmOps {
   }
 
   /** t27's frame-parameterized body — (doc_id, source, text) in, one
-    * (source, bucket) summary row out. Facade: Graft.sourceQualityBuckets. */
-  private[graft] def sourceQualityBucketsOf(docs: DataFrame, numParts: Int): DataFrame = {
+    * (source, bucket) summary row out. */
+  def sourceQualityBucketsOf(docs: DataFrame, numParts: Int): DataFrame = {
     val tk = docs
       .select(col("doc_id"), toks(col("text")).as("t"))
       .cacheOnce() // t25's one-tokenize discipline (counts + two scoring reads)
@@ -4842,8 +4842,8 @@ object LlmOps {
   ) { (s, d) => gopherRulesOf(Tables.documents(s, d)) }
 
   /** t29's frame-parameterized body — (doc_id, text) in, the per-rule
-    * verdict row out. Facade: Graft.gopherRules. */
-  private[graft] def gopherRulesOf(documents: DataFrame): DataFrame = {
+    * verdict row out. */
+  def gopherRulesOf(documents: DataFrame): DataFrame = {
     val t = toks(col("text"))
     val lines = split(col("text"), "\n", -1)
     val nWords = size(t).cast("long")
@@ -4938,8 +4938,8 @@ object LlmOps {
   }
 
   /** t28's frame-parameterized body — (doc_id, source, text) in, the
-    * per-source mixture row out. Facade: Graft.temperatureMixing. */
-  private[graft] def temperatureMixingOf(docs: DataFrame): DataFrame = {
+    * per-source mixture row out. */
+  def temperatureMixingOf(docs: DataFrame): DataFrame = {
     val w = docs
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"))
@@ -5059,8 +5059,8 @@ object LlmOps {
   }
 
   /** t30's frame-parameterized body — (doc_id, source, text) in, one
-    * (source, bucket) mixture row out. Facade: Graft.corpusBuild. */
-  private[graft] def corpusBuildOf(docs: DataFrame, numParts: Int): DataFrame = {
+    * (source, bucket) mixture row out. */
+  def corpusBuildOf(docs: DataFrame, numParts: Int): DataFrame = {
     // stage 1: rules — survivors cached for the LM fit + scoring reads
     val survivors = docs
       .join(gopherRulesOf(docs).filter(col("keep")).select("doc_id"), Seq("doc_id"), "left_semi")
@@ -5214,8 +5214,8 @@ object LlmOps {
   }
 
   /** t32's frame-parameterized body — (doc_id, n_chars) in, one manifest
-    * row per shard out. Facade: Graft.shardManifest. */
-  private[graft] def shardManifestOf(documents: DataFrame): DataFrame = {
+    * row per shard out. */
+  def shardManifestOf(documents: DataFrame): DataFrame = {
     val key = md5(concat(lit("shard1|"), col("doc_id").cast("string")))
     documents
       .select(col("doc_id"), col("n_chars"), key.as("key"))
@@ -5272,7 +5272,7 @@ object LlmOps {
     * boundaries with an rdd.id-derived seed, so the part-file SPLITS
     * within a shard directory may differ across runs. Consumers verify
     * shards by manifest (counts/checksum/key range), not file bytes. */
-  private[graft] def writeShards(documents: DataFrame, dir: String): Unit =
+  def writeShards(documents: DataFrame, dir: String): Unit =
     documents
       .withColumn(
         "key", md5(concat(lit("shard1|"), col("doc_id").cast("string"))))
@@ -5298,6 +5298,67 @@ object LlmOps {
   ) { (s, d) =>
     shardManifestOf(Tables.documents(s, d).select("doc_id", "n_chars"))
   }
+
+  // ---- mergeable sketch family: the Count-Min and HLL blob format of t33/t34/t35 ----
+
+  /** Per-shard Count-Min sketch blobs over a key column — t35's layout:
+    * each shard persists its own ~11 KB blob beside the data; later
+    * heavy-hitter questions merge blobs ([[cmsMerge]]) instead of
+    * rescanning shards. Fixed seed → deterministic for a given (data,
+    * shard) split; counters are sums, so blobs from any partitioning
+    * merge to the identical grid. Returns (shard, sk) rows. */
+  def cmsShardSketches(
+      df: DataFrame,
+      key: Column,
+      shard: Column,
+      eps: Double = 0.01,
+      confidence: Double = 0.99,
+      seed: Int = 42
+  ): DataFrame =
+    df.withColumn("shard", shard)
+      .groupBy("shard")
+      .agg(count_min_sketch(key, lit(eps), lit(confidence), lit(seed)).as("sk"))
+
+  /** Deserialize one Count-Min blob. */
+  def cmsRead(blob: Array[Byte]): org.apache.spark.util.sketch.CountMinSketch =
+    org.apache.spark.util.sketch.CountMinSketch.readFrom(
+      new java.io.ByteArrayInputStream(blob))
+
+  /** Merge Count-Min blobs (same eps/confidence/seed) into one queryable
+    * sketch — exact: counter grids are long sums, so the merged estimate
+    * equals the single-pass estimate for every key (t35 gates that
+    * cross-engine; SketchSpec proves a dropped/doubled blob breaks it). */
+  def cmsMerge(blobs: Seq[Array[Byte]]): org.apache.spark.util.sketch.CountMinSketch = {
+    require(blobs.nonEmpty, "cmsMerge: no blobs")
+    blobs.map(cmsRead).reduce { (a, b) => a.mergeInPlace(b); a }
+  }
+
+  /** Per-(group, shard) HLL sketch blobs over a key column — t34's
+    * layout for distinct counts. Returns (groupCols..., shard, sk). */
+  def hllShardSketches(
+      df: DataFrame,
+      key: Column,
+      shard: Column,
+      groupCols: Seq[String] = Nil,
+      lgK: Int = 12
+  ): DataFrame =
+    df.withColumn("shard", shard)
+      .groupBy((groupCols :+ "shard").map(col): _*)
+      .agg(hll_sketch_agg(key, lgK).as("sk"))
+
+  /** Distinct-count estimates from a blob table by register-wise union —
+    * answers arrive without rescanning any shard (new shards union in).
+    * Returns (groupCols..., est). */
+  def hllMergedEstimates(blobs: DataFrame, groupCols: Seq[String] = Nil): DataFrame = {
+    val est = expr("hll_sketch_estimate(hll_union_agg(sk, false))").as("est")
+    if (groupCols.isEmpty) blobs.agg(est)
+    else blobs.groupBy(groupCols.map(col): _*).agg(est)
+  }
+
+  /** The single-pass Count-Min aggregate over the bigram stream that t33
+    * and t35 check — [[cmsShardSketches]]'s default eps/confidence/seed. */
+  private val cmsBigramSql =
+    "count_min_sketch(bigram, CAST(0.01 AS DOUBLE), CAST(0.99 AS DOUBLE), 42)"
 
   /** SKETCHED HEAVY HITTERS (t33): Count-Min-Sketch phrase counting with
     * its PROVABLE bounds as per-row gated verdicts. At 100 TB the exact
@@ -5336,12 +5397,7 @@ object LlmOps {
     // deliberate — at scale recomputing a projection beats caching a
     // corpus-sized exploded column, and the production path runs ONLY
     // the sketch pass
-    val sk = org.apache.spark.util.sketch.CountMinSketch.readFrom(
-      new java.io.ByteArrayInputStream(
-        grams
-          .agg(expr(
-            "count_min_sketch(bigram, CAST(0.01 AS DOUBLE), CAST(0.99 AS DOUBLE), 42)"))
-          .collect()(0).getAs[Array[Byte]](0)))
+    val sk = cmsRead(grams.agg(expr(cmsBigramSql)).collect()(0).getAs[Array[Byte]](0))
     val bound = math.ceil(sk.relativeError() * sk.totalCount()).toLong
     val top = grams
       .groupBy("bigram")
@@ -5413,15 +5469,11 @@ object LlmOps {
     // never rescan
     val blobs = scratchDir("t34_hll", d)
     buildSharedOnce(blobs) {
-      grams
-        .withColumn("shard", pmod(col("doc_id"), lit(4)))
-        .groupBy("source", "shard")
-        .agg(expr("hll_sketch_agg(bigram, 12)").as("sk"))
+      hllShardSketches(grams, col("bigram"), pmod(col("doc_id"), lit(4)), Seq("source"))
         .write.mode("overwrite").parquet(blobs)
     }
-    val merged = s.read.parquet(blobs)
-      .groupBy("source")
-      .agg(expr("hll_sketch_estimate(hll_union_agg(sk, false))").as("est_merged"))
+    val merged = hllMergedEstimates(s.read.parquet(blobs), Seq("source"))
+      .withColumnRenamed("est", "est_merged")
     distinctSketchVerdicts(direct, merged)
   }
 
@@ -5492,27 +5544,16 @@ object LlmOps {
              TRUE AS no_undercount, TRUE AS bound_ok, TRUE AS merge_exact_ok
       FROM b GROUP BY bigram ORDER BY n_exact DESC, bigram LIMIT 20""")
   ) { (s, d) =>
-    val cmsAgg =
-      "count_min_sketch(bigram, CAST(0.01 AS DOUBLE), CAST(0.99 AS DOUBLE), 42)"
-    def readCms(b: Array[Byte]) =
-      org.apache.spark.util.sketch.CountMinSketch.readFrom(
-        new java.io.ByteArrayInputStream(b))
     val grams = explodeBigrams(
       Tables.documents(s, d).select(col("doc_id"), toks(col("text")).as("t")))
     val blobs = scratchDir("t35_cms", d)
     buildSharedOnce(blobs) {
-      grams
-        .withColumn("shard", pmod(col("doc_id"), lit(4)))
-        .groupBy("shard")
-        .agg(expr(cmsAgg).as("sk"))
+      cmsShardSketches(grams, col("bigram"), pmod(col("doc_id"), lit(4)))
         .write.mode("overwrite").parquet(blobs)
     }
-    val shardSketches = s.read.parquet(blobs).select("sk").collect()
-      .map(r => readCms(r.getAs[Array[Byte]](0)))
-    require(shardSketches.nonEmpty, "t35: no shard blobs")
-    val merged = shardSketches.reduce { (a, b) => a.mergeInPlace(b); a }
-    val single = readCms(
-      grams.agg(expr(cmsAgg)).collect()(0).getAs[Array[Byte]](0))
+    val merged = cmsMerge(
+      s.read.parquet(blobs).select("sk").collect().map(_.getAs[Array[Byte]](0)).toSeq)
+    val single = cmsRead(grams.agg(expr(cmsBigramSql)).collect()(0).getAs[Array[Byte]](0))
     val bound = math.ceil(merged.relativeError() * merged.totalCount()).toLong
     val top = grams
       .groupBy("bigram")
@@ -6833,8 +6874,8 @@ object LlmOps {
     * per executor per 100 TB at 1000 executors) or drop the hint and pay
     * the chunk subtree twice — both linear; the cache is an optimization,
     * never a correctness dependency. Shared by d18 (strip report) and
-    * t19 (curation chain). `cache = false` skips the hint entirely — the
-    * facade path uses it, because a lazy caller cannot release an
+    * t19 (curation chain). `cache = false` skips the hint entirely — a
+    * library caller should pass it, because a lazy caller cannot release an
     * internal cache and a long-lived session would accumulate one
     * corpus-sized entry per input (the harness queries run under
     * Bench/Verify's per-query clearCache hygiene instead). */
@@ -6863,11 +6904,11 @@ object LlmOps {
     chunks.join(idx, "h")
   }
 
-  /** Frame-parameterized body of d18 — package-visible so the edge-case
-    * spec (pure-boilerplate doc, kept-chunk ordering) can feed a
-    * constructed corpus without writing parquet, and so the facade can
-    * opt out of the internal cache (see chunkIndexOf). */
-  private[graft] def boilerplateStripOf(documents: DataFrame, cache: Boolean = true): DataFrame =
+  /** Frame-parameterized body of d18 — public so the edge-case spec
+    * (pure-boilerplate doc, kept-chunk ordering) can feed a constructed
+    * corpus without writing parquet, and so a library caller can opt out
+    * of the internal cache with `cache = false` (see chunkIndexOf). */
+  def boilerplateStripOf(documents: DataFrame, cache: Boolean = true): DataFrame =
     chunkIndexOf(documents, cache)
       .groupBy("doc_id")
       .agg(
@@ -6995,10 +7036,10 @@ object LlmOps {
       FROM st LEFT JOIN cl ON st.doc_id = cl.doc_id ORDER BY st.doc_id""")
   ) { (s, d) => substringDedupOf(Tables.documents(s, d)) }
 
-  /** Frame-parameterized body of d19 — package-visible so the edge-case
-    * spec (adjacent-vs-overlapping spans, whole-doc removal, canonical
-    * survival) can feed a constructed corpus without parquet. */
-  private[graft] def substringDedupOf(documents: DataFrame): DataFrame = {
+  /** Frame-parameterized body of d19 — callable on a frame so the
+    * edge-case spec (adjacent-vs-overlapping spans, whole-doc removal,
+    * canonical survival) can feed a constructed corpus without parquet. */
+  def substringDedupOf(documents: DataFrame): DataFrame = {
     val grams = positionedGrams(documents, substrK).cacheOnce()
     val dup = grams
       .groupBy("h")
@@ -7083,7 +7124,7 @@ object LlmOps {
     * sub-groups' top-caps whatever the row-to-salt assignment. Same
     * discipline as the KthLargest candidate kernels — never let one
     * key's full row set collapse onto one task. */
-  private[graft] def domainCapOf(documents: DataFrame, cap: Int, salts: Int): DataFrame = {
+  def domainCapOf(documents: DataFrame, cap: Int, salts: Int): DataFrame = {
     val local = Window
       .partitionBy(col("source"), pmod(xxhash64(col("doc_id")), lit(salts)))
       .orderBy(col("n_chars").desc, col("doc_id").asc)
@@ -7116,7 +7157,7 @@ object LlmOps {
     * is a distinct SET, so each test gram matches at most one row — a
     * hot boilerplate gram cannot fan out (unlike pair generation, which
     * needs d03's df cap); everything shuffles linearly on the gram hash. */
-  private[graft] def contaminationOf(docs: DataFrame): DataFrame = {
+  def contaminationOf(docs: DataFrame): DataFrame = {
     // cacheOnce, the d19 discipline: the gram frame is filtered twice
     // (train set / test side) and would otherwise re-run the corpus
     // tokenize + 8-gram explode for each
@@ -7147,7 +7188,7 @@ object LlmOps {
     * slower but linear, which is the right price for a catch-up batch.
     * For batch-vs-batch symmetry (both sides corpus-scale) use the d22
     * audit (contaminationOf) directly. */
-  private[graft] def contaminationAgainst(
+  def contaminationAgainst(
       batch: DataFrame,
       trainGrams: DataFrame,
       broadcastMaxGrams: Long = 4L * 1000 * 1000 // ~100 MB hashed: (long, long) rows
@@ -7180,7 +7221,7 @@ object LlmOps {
   /** The distinct 8-gram set of a corpus — the artifact the streaming
     * contamination gate joins against (persist it; rebuild on the train
     * corpus's own update cadence — [[refreshGrams]] IS that cadence). */
-  private[graft] def gramSetOf(docs: DataFrame): DataFrame =
+  def gramSetOf(docs: DataFrame): DataFrame =
     positionedGrams(docs.select("doc_id", "text"), substrK).select("h").distinct()
 
   private val GramKind = "gram-set"
@@ -7195,7 +7236,7 @@ object LlmOps {
     * next micro-batch with no restart — the live-signal propagation the
     * reference's head pushes to its workers (node_service/__init__.py:
     * 241-303), re-expressed as snapshot resolution. */
-  private[graft] def refreshGrams(trainDocs: DataFrame, path: String, retain: Int = 2): Unit = {
+  def refreshGrams(trainDocs: DataFrame, path: String, retain: Int = 2): Unit = {
     val s = trainDocs.sparkSession
     val L = graft.operators.SnapshotLog
     val v = L.nextVersion(s, path)
@@ -7209,7 +7250,7 @@ object LlmOps {
 
   /** Cold-open load of the current gram set; manifest-validated (kind,
     * gram width, physical row count over the referenced directory). */
-  private[graft] def loadGramSet(s: SparkSession, path: String): DataFrame = {
+  def loadGramSet(s: SparkSession, path: String): DataFrame = {
     val M = graft.operators.ArtifactManifest
     val snap = graft.operators.SnapshotLog.current(s, path, GramKind)
     val df = s.read.parquet(snap.dirs(path, "grams"): _*)
@@ -7296,7 +7337,7 @@ object LlmOps {
     * plan depth and shuffle count are bounded at any corpus size; at
     * 100 TB the edge list shards by `s` and the rank vector co-shuffles
     * with it, exactly like d06's Hash-Min rounds. */
-  private[graft] def dupGraphRankOf(pairs: DataFrame): DataFrame = {
+  def dupGraphRankOf(pairs: DataFrame): DataFrame = {
     val edges = pairs
       .select(col("doc_a").as("s"), col("doc_b").as("t"))
       .union(pairs.select(col("doc_b").as("s"), col("doc_a").as("t")))
@@ -8378,7 +8419,7 @@ object LlmOps {
       .orderBy("qid", "rnk")
   }
 
-  /** Frame-parameterized body of e22 (facade: Graft.annTopKFiltered):
+  /** Frame-parameterized body of e22:
     * exact pre-filter top-k where a corpus row is a candidate for a
     * query iff `corpus.filterCol == query.filterCol`. Both frames need
     * (vec_id, embedding, filterCol). */
@@ -8747,7 +8788,7 @@ object LlmOps {
       .orderBy("qid")
   }
 
-  /** Frame-parameterized body of e21 (facade: Graft.ivfHealth). */
+  /** Frame-parameterized body of e21. */
   def ivfHealthOf(s: SparkSession, emb: DataFrame, nlist: Int): DataFrame = {
     val (_, assigned) = graft.operators.KMeans.fitAssign(s, emb, k = nlist, iters = 2)
     val agg = assigned.groupBy("cluster").agg(count(lit(1)).as("size"))

@@ -1296,7 +1296,7 @@ object Relational {
     * linearization (public layout technique; Delta/Iceberg OPTIMIZE
     * ZORDER, Hudi space-filling curves). Pure integer bit arithmetic,
     * fully codegen'd. */
-  private[graft] def morton8(x: Column, y: Column): Column =
+  def morton8(x: Column, y: Column): Column =
     (0 to 7).map { i =>
       shiftleft(shiftright(x, i).bitwiseAND(1), 2 * i) +
         shiftleft(shiftright(y, i).bitwiseAND(1), 2 * i + 1)

@@ -22,6 +22,7 @@ import org.apache.spark.sql.SparkSession
   * DataFrame read/write path — this is not an ingest mechanism.
   */
 final class FileManager(spark: SparkSession, base: String) {
+  import FileManager.Entry
 
   private val basePath = new Path(base)
   private def fs: FileSystem =
@@ -42,14 +43,6 @@ final class FileManager(spark: SparkSession, base: String) {
       )
       new Path(p.toUri.normalize())
     }
-
-  final case class Entry(
-      name: String,
-      path: String,
-      isDir: Boolean,
-      sizeBytes: Long,
-      modifiedAtMs: Long
-  )
 
   /** Read-dir: one Entry per child (the Syncfusion "read" operation). */
   def list(rel: String = ""): Seq[Entry] = {
@@ -135,4 +128,16 @@ final class FileManager(spark: SparkSession, base: String) {
       n
     } finally out.close()
   }
+}
+
+object FileManager {
+
+  /** One child of a workspace directory, as `FileManager.list` returns it. */
+  final case class Entry(
+      name: String,
+      path: String,
+      isDir: Boolean,
+      sizeBytes: Long,
+      modifiedAtMs: Long
+  )
 }

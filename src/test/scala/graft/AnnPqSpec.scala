@@ -18,10 +18,10 @@ class AnnPqSpec extends AnyFunSuite {
     val c = AnnPq.codes(spark, emb, model)
     assert(c.count() == emb.count())
     (0 until 4).foreach { m =>
-      val mx = c.agg(max(col(s"code$m"))).head.getInt(0)
+      val mx = c.agg(max(col(s"code$m"))).head().getInt(0)
       assert(mx >= 0 && mx < 8)
     }
-    assert(c.agg(min(col("pq_dist"))).head.getLong(0) >= 0L)
+    assert(c.agg(min(col("pq_dist"))).head().getLong(0) >= 0L)
   }
 
   test("fit is deterministic: same corpus -> bit-identical codebooks") {
@@ -102,7 +102,7 @@ class AnnPqSpec extends AnyFunSuite {
           "transform(embedding, v -> CAST(CAST(CAST(v AS DOUBLE) AS DECIMAL(18,7)) * 10000000 AS BIGINT))"
         ).as("x"))
         .select(expr(s"int_sqdist(x, ${cent.mkString("array(", "L, ", "L)")})"))
-        .head.getLong(0)
+        .head().getLong(0)
       assert(driverDist == sparkDist, s"subspace $m centroid $c: $driverDist != $sparkDist")
     }
   }

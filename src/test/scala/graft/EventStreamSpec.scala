@@ -254,15 +254,15 @@ class EventStreamSpec extends AnyFunSuite {
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("cluster_out").start()
     try {
-      src.addData(rows.take(10): _*)
+      src.addData(rows.take(10).toIndexedSeq: _*)
       q.processAllAvailable()
-      src.addData(rows.drop(10): _*) // later batch, same contract
+      src.addData(rows.drop(10).toIndexedSeq: _*) // later batch, same contract
       q.processAllAvailable()
       val got = spark.table("cluster_out").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sortBy(_._1)
       val ids = rows.map(_._1)
       val want = KMeans
-        .assign(spark, emb.filter(col("vec_id").isin(ids: _*)), model)
+        .assign(spark, emb.filter(col("vec_id").isin(ids.toIndexedSeq: _*)), model)
         .collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sortBy(_._1)
       assert(got === want)
@@ -431,9 +431,9 @@ class EventStreamSpec extends AnyFunSuite {
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("nll_out").start()
     try {
-      src.addData(arrivals.take(10): _*)
+      src.addData(arrivals.take(10).toIndexedSeq: _*)
       q.processAllAvailable()
-      src.addData(arrivals.drop(10): _*)
+      src.addData(arrivals.drop(10).toIndexedSeq: _*)
       q.processAllAvailable()
       // append mode holds rows until the watermark passes their ts; a
       // final far-future arrival flushes everything pending
@@ -446,7 +446,7 @@ class EventStreamSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
       val ids = arrivals.map(_._1)
       val want = LlmOps
-        .scoreAgainstLm(oc.filter(col("doc_id").isin(ids: _*)), lm)
+        .scoreAgainstLm(oc.filter(col("doc_id").isin(ids.toIndexedSeq: _*)), lm)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
       assert(got.nonEmpty)
@@ -477,9 +477,9 @@ class EventStreamSpec extends AnyFunSuite {
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("bigram_nll_out").start()
     try {
-      src.addData(arrivals.take(6): _*)
+      src.addData(arrivals.take(6).toIndexedSeq: _*)
       q.processAllAvailable()
-      src.addData(arrivals.drop(6): _*)
+      src.addData(arrivals.drop(6).toIndexedSeq: _*)
       q.processAllAvailable()
       src.addData((999999L, new java.sql.Timestamp(9_000_000_000L), "flush"))
       q.processAllAvailable()

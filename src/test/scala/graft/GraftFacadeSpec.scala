@@ -2,10 +2,16 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.functions.TextOps
+import graft.operators.{AnnIvf, AnnLsh, AsOfJoin, KMeans, RangeJoin, Ranks, SkewJoin}
+import graft.queries.{LlmOps, Relational}
+import graft.streaming.EventStream
 
-/** Pins the public facade: every entry point a reference user would call
-  * compiles against its documented signature and does its job. Guards
-  * against facade rot as operators evolve underneath.
+/** Pins the public surface: every `Graft` entry (Burla's
+  * `remote_parallel_map` modes, its job tables, parquet IO) and the
+  * operator objects a reference user calls directly compile against
+  * their documented signatures and do their jobs. Guards against API
+  * rot as operators evolve underneath.
   */
 class GraftFacadeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -29,11 +35,22 @@ class GraftFacadeSpec extends AnyFunSuite {
     } { (i, lg) => live.put(i, lg) }
     assert(relayed.size == 3 && live.size == 3)
     assert((0 until 3).forall(i => live.get(i.toLong).contains(s"live ${i + 1}")))
+    val withLogs = Graft.remoteParallelMapWithLogs(spark, 1 to 3) { x =>
+      println(s"wl $x"); if (x == 2) throw new IllegalStateException("facade boom") else x
+    }
+    assert(withLogs.size == 3 && withLogs.count(_._2.isFailure) == 1)
+    assert(withLogs.forall { case (i, _, lg) => lg.contains(s"wl ${i + 1}") })
+    val nested = Graft.remoteParallelMapNested(spark, 1 to 3)(i => Seq.fill(i)(i))(_ * 10)
+    assert(nested.sorted == Seq(10, 20, 20, 30, 30, 30))
     // job history answers "what ran"
     val jobs = Graft.jobs(spark)
     assert(jobs.columns.contains("status"))
     assert(jobs.filter(col("status") === "COMPLETED").count() >= 4)
     assert(Graft.jobTransitions(spark).count() >= 8) // RUNNING + terminal each
+    // and which inputs errored
+    val errs = Graft.jobErrors(spark)
+    assert(errs.columns.toSeq == Seq("job_id", "input_index", "error"))
+    assert(errs.filter(col("error").contains("facade boom") && col("input_index") === 1L).count() == 1)
     // usage rollup over the engine's own history
     val usage = Graft.usageDaily(spark).collect()
     assert(usage.nonEmpty && usage.forall(_.getAs[Long]("n_jobs") > 0))
@@ -45,25 +62,25 @@ class GraftFacadeSpec extends AnyFunSuite {
       .toDF("id", "k", "t")
     val right = Seq((10L, java.sql.Timestamp.valueOf("2024-01-04 00:00:00"), 7L, 1.0))
       .toDF("rk", "rt", "payload_key", "v")
-    val asof = Graft.asofJoinLatestAtOrBefore(
+    val asof = AsOfJoin.latestAtOrBefore(
       left, right, "k", "rk", "t", "rt", "payload_key", Seq("payload_key", "v"))
     assert(asof.collect().head.getAs[Long]("payload_key") == 7L)
 
     val l2 = Seq((1L, "a"), (1L, "b")).toDF("k", "p")
     val r2 = Seq((1L, "dim")).toDF("k", "n")
-    assert(Graft.saltedJoin(l2, r2, "k").count() == 2)
+    assert(SkewJoin.saltedInnerJoin(l2, r2, "k", 8).count() == 2)
 
     val pts = Seq((1L, java.sql.Date.valueOf("2024-01-05"))).toDF("k", "d")
     val ivs = Seq((1L, java.sql.Date.valueOf("2024-01-04"), java.sql.Date.valueOf("2024-01-08")))
       .toDF("ik", "s", "e")
-    assert(Graft.rangeJoinDates(pts, ivs, "k", "ik", "d", "s", "e").count() == 1)
+    assert(RangeJoin.dateIntervalJoin(pts, ivs, "k", "ik", "d", "s", "e").count() == 1)
   }
 
   test("ANN surface: LSH and IVF top-k over the embeddings table") {
     val emb = Tables.embeddings(spark, TestSpark.sf0001).select("vec_id", "embedding")
     val q = emb.filter(col("vec_id") < 3)
-    val lsh = Graft.annTopK(spark, emb, q, dim = 64, k = 3)
-    val ivf = Graft.annTopKIvf(spark, emb, q, k = 3)
+    val lsh = AnnLsh.topK(spark, emb, q, dim = 64, k = 3, nprobe = 1)
+    val ivf = AnnIvf.topK(spark, emb, q, k = 3, nlist = 16, nprobe = 4)
     assert(lsh.count() > 0 && ivf.count() > 0)
     assert(ivf.columns.toSeq == Seq("qid", "rnk", "vid", "cosine"))
   }
@@ -75,24 +92,24 @@ class GraftFacadeSpec extends AnyFunSuite {
     graft.functions.VectorFunctions.register(spark)
     val evs = MemoryStream[(Long, java.sql.Timestamp, String)]
       .toDF().toDF("event_id", "ts", "text")
-    assert(Graft.dedupStream(evs, Seq("text")).isStreaming)
+    assert(EventStream.dedupStream(evs, Seq("text"), "1 hour").isStreaming)
     val corpusFps = Seq((1L, 42L)).toDF("doc_id", "simhash")
     val docs = MemoryStream[(Long, String)].toDF().toDF("doc_id", "text")
-    val guard = Graft.nearDupStream(docs, corpusFps)
+    val guard = EventStream.nearDupStream(docs, corpusFps, 3)
     assert(guard.isStreaming)
     assert(guard.columns.toSeq == Seq("doc_id", "matched_id", "hamming"))
   }
 
   test("curation surface: strip, fitAssign, balanced sample route through the engine") {
     val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
-    val stripped = Graft.boilerplateStrip(docs)
+    val stripped = LlmOps.boilerplateStripOf(docs, cache = false)
     assert(stripped.columns.toSeq ==
       Seq("doc_id", "n_chunks", "n_kept", "n_tokens_after", "clean_md5"))
     assert(stripped.count() > 0)
     val emb = Tables.embeddings(spark, TestSpark.sf0001).select("vec_id", "embedding")
-    val (model, labels) = Graft.kMeansFitAssign(spark, emb, k = 4, iters = 1)
+    val (model, labels) = KMeans.fitAssign(spark, emb, k = 4, iters = 1, embCol = "embedding")
     assert(model.k == 4 && labels.columns.toSeq == Seq("vec_id", "cluster", "dist"))
-    val bal = Graft.clusterBalancedSample(labels.select("vec_id", "cluster"))
+    val bal = LlmOps.balanceByCluster(labels.select("vec_id", "cluster"), "cbal1", nName = "n_vecs")
     assert(bal.columns.toSeq == Seq("cluster", "n_vecs", "n_kept", "kept_id_sum"))
     // the smallest cluster's keep threshold is ~2^32-1: it keeps ~all rows
     val byMin = bal.orderBy(col("n_vecs")).head()
@@ -101,31 +118,31 @@ class GraftFacadeSpec extends AnyFunSuite {
 
   test("dedup/audit surface: substring dedup, domain cap, graph rank, contamination") {
     val docs = Tables.documents(spark, TestSpark.sf0001)
-    val sd = Graft.substringDedup(docs)
+    val sd = LlmOps.substringDedupOf(docs)
     assert(sd.columns.toSeq == Seq("doc_id", "n_spans", "tokens_removed", "clean_md5"))
-    val cap = Graft.domainCap(docs, cap = 5)
+    val cap = LlmOps.domainCapOf(docs, cap = 5, salts = 8)
     assert(cap.groupBy("source").count().agg(max("count")).head().getLong(0) <= 5)
-    val pr = Graft.dupGraphRank(
+    val pr = LlmOps.dupGraphRankOf(
       Graft.queries("d02_dedup_minhash_lsh")(spark, TestSpark.sf0001))
     assert(pr.columns.toSeq == Seq("doc_id", "rank_units"))
-    val ca = Graft.contaminationAudit(docs)
+    val ca = LlmOps.contaminationOf(docs)
     assert(ca.columns.toSeq == Seq("doc_id", "n_grams", "n_hit", "contaminated"))
   }
 
   test("mixture/quality surface: gopher rules, temperature mixing, source buckets, grouped rank") {
     val docs = Tables.documents(spark, TestSpark.sf0001)
-    val rules = Graft.gopherRules(docs)
+    val rules = LlmOps.gopherRulesOf(docs)
     assert(rules.columns.toSeq ==
       Seq("doc_id", "n_words", "ok_words", "ok_wordlen", "ok_symbols", "ok_alpha",
         "ok_bullets", "ok_ellipsis", "ok_stop", "keep"))
     assert(rules.count() == docs.count())
-    val mix = Graft.temperatureMixing(docs.select("doc_id", "source", "text")).collect()
+    val mix = LlmOps.temperatureMixingOf(docs.select("doc_id", "source", "text")).collect()
     assert(mix.nonEmpty && mix.forall(r => r.getAs[Long]("n_kept") <= r.getAs[Long]("n_docs")))
-    val buckets = Graft.sourceQualityBuckets(docs.select("doc_id", "source", "text"), 4)
+    val buckets = LlmOps.sourceQualityBucketsOf(docs.select("doc_id", "source", "text"), 4)
     assert(buckets.select("bucket").distinct().count() <= 3)
-    val ranked = Graft.groupedRank(
+    val ranked = Ranks.groupedRank(
       docs.select("doc_id", "source", "n_chars"), "source", 4, col("n_chars"), col("doc_id"))
-      .withColumn("tile", Graft.ntileFromRank(col("grank"), col("gn"), 4))
+      .withColumn("tile", Ranks.ntileFromRank(col("grank"), col("gn"), 4))
     assert(ranked.filter(col("grank") > col("gn")).count() == 0)
     assert(ranked.filter(col("tile") < 1 || col("tile") > 4).count() == 0)
     Hygiene.release(spark)
@@ -134,15 +151,16 @@ class GraftFacadeSpec extends AnyFunSuite {
   test("LM + gram artifact surface: counts round-trip, scoring, live refresh") {
     val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "source", "text")
     val base = java.nio.file.Files.createTempDirectory("facade-lm").toString
-    val counts = Graft.bigramLmCounts(docs)
-    Graft.bigramLmSave(counts, s"$base/lm")
-    val loaded = Graft.bigramLmLoad(spark, s"$base/lm")
-    val scored = Graft.bigramNll(docs, loaded)
+    val counts = LlmOps.bigramLmCountsOf(docs.select(col("doc_id"), LlmOps.tokensCol(col("text")).as("t")))
+    LlmOps.saveBigramLm(counts, s"$base/lm")
+    val loaded = LlmOps.loadBigramLm(spark, s"$base/lm")
+    val scored = LlmOps.bigramNllFrom(
+      docs.select(col("doc_id"), LlmOps.tokensCol(col("text")).as("t")), loaded)
     assert(scored.columns.toSeq == Seq("doc_id", "n_tokens", "nll"))
     assert(scored.count() > 0)
-    Graft.gramSetRefresh(docs, s"$base/grams")
-    assert(Graft.gramSetLoad(spark, s"$base/grams").count() > 0)
-    val verdicts = Graft.contaminationScore(docs.limit(20), Graft.gramSetLoad(spark, s"$base/grams"))
+    LlmOps.refreshGrams(docs, s"$base/grams")
+    assert(LlmOps.loadGramSet(spark, s"$base/grams").count() > 0)
+    val verdicts = LlmOps.contaminationAgainst(docs.limit(20), LlmOps.loadGramSet(spark, s"$base/grams"))
     assert(verdicts.filter(col("contaminated")).count() == 20) // scored against themselves
     Hygiene.release(spark)
   }
@@ -157,15 +175,16 @@ class GraftFacadeSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("facade-stream").toString
     val (h, b) = Graft.dedupIndex(corpus.toDF("doc_id", "text"))
     Graft.dedupIndexSave(h, b, s"$base/idx")
-    Graft.gramSetRefresh(corpus.toDF("doc_id", "text"), s"$base/grams")
-    val counts = Graft.bigramLmCounts(
+    LlmOps.refreshGrams(corpus.toDF("doc_id", "text"), s"$base/grams")
+    val counts = LlmOps.bigramLmCountsOf(
       corpus.toDF("doc_id", "text").withColumn("source", lit("s"))
-        .select("doc_id", "source", "text")).localCheckpoint(true)
+        .select("doc_id", "source", "text")
+        .select(col("doc_id"), LlmOps.tokensCol(col("text")).as("t"))).localCheckpoint(true)
     val src = MemoryStream[(Long, String)]
-    val q = Graft.crawlPipelineLive(
+    val q = EventStream.crawlPipeline(
       src.toDF().toDF("doc_id", "text"), s"$base/idx", s"$base/grams", counts,
       1e9, s"$base/verdicts", s"$base/ck", true,
-      graft.queries.LlmOps.UnscorablePolicy.Quarantine)
+      LlmOps.UnscorablePolicy.Quarantine)
     try { src.addData(batch: _*); q.processAllAvailable() } finally q.stop()
     val v = spark.read.parquet(s"$base/verdicts")
     assert(v.count() == batch.size && v.columns.contains("verdict"))
@@ -177,19 +196,19 @@ class GraftFacadeSpec extends AnyFunSuite {
     import spark.implicits._
     // piiScrub is the t31 kernel
     val scrubbed = Seq("mail a@b.co from 10.0.0.1").toDF("text")
-      .select(Graft.piiScrub(col("text"))).collect()(0).getString(0)
+      .select(TextOps.redactAllPii(col("text"))).collect()(0).getString(0)
     assert(scrubbed == "mail <EMAIL> from <IP>")
     // shardManifest + writeShards agree on membership
     val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "n_chars")
-    val manifest = Graft.shardManifest(docs)
+    val manifest = LlmOps.shardManifestOf(docs)
     assert(manifest.columns.toSeq ==
       Seq("shard", "n_docs", "n_chars", "sum_doc_id", "first_key", "last_key"))
     val dir = java.nio.file.Files.createTempDirectory("facade-shards").toString + "/out"
-    Graft.writeShards(docs, dir)
+    LlmOps.writeShards(docs, dir)
     val written = spark.read.parquet(dir).count()
     assert(written == docs.count())
     // vectorRejects over a missing ledger is an empty frame, not an error
-    val empty = Graft.vectorRejects(spark, dir + "/no-such-ledger")
+    val empty = AnnIvf.rejectSummary(spark, dir + "/no-such-ledger")
     assert(empty.columns.toSeq == Seq("batch_id", "reason", "rejects") && empty.count() == 0)
     Hygiene.release(spark)
   }
@@ -205,7 +224,7 @@ class GraftFacadeSpec extends AnyFunSuite {
     import spark.implicits._
     val queries = Seq(0L, 1L).toDF("vec_id")
     val topk = Seq((0L, 10L, 0.9), (0L, 11L, 0.8), (1L, 1L, 0.99)).toDF("qid", "vid", "cosine")
-    val v = Graft.annStructuralChecks(queries, topk, k = 5).collect()
+    val v = LlmOps.annStructuralVerdicts(queries, topk, k = 5).collect()
       .map(r => r.getLong(0) -> r.getBoolean(2)).toMap // no_self_ok
     assert(v(0L) && !v(1L), v.toString) // qid 1 returned itself
     Hygiene.release(spark)
@@ -216,10 +235,10 @@ class GraftFacadeSpec extends AnyFunSuite {
     val rows = (0 until 2000).map(i => (i.toLong, s"src${i % 2}", s"key${i % 100}"))
       .toDF("id", "source", "k")
     // CMS: 4 shard blobs, merged estimate == single-pass truth bound
-    val blobs = Graft.cmsShardSketches(rows, col("k"), pmod(col("id"), lit(4)))
+    val blobs = LlmOps.cmsShardSketches(rows, col("k"), pmod(col("id"), lit(4)))
       .select("sk").as[Array[Byte]].collect().toSeq
     assert(blobs.size == 4)
-    val merged = Graft.cmsMerge(blobs)
+    val merged = LlmOps.cmsMerge(blobs)
     // every key appears 20x; CMS never undercounts and the merged grid
     // equals a single-pass build (counters are sums)
     assert((0 until 100).forall(i => merged.estimateCount(s"key$i") >= 20L))
@@ -227,9 +246,9 @@ class GraftFacadeSpec extends AnyFunSuite {
     // HLL: per-(source, shard) blobs; union answers per source
     // source = id%2 and shard = id%4 share parity: src0 only lands in
     // shards {0,2}, src1 in {1,3} -> 4 (source, shard) blobs, not 8
-    val hb = Graft.hllShardSketches(rows, col("k"), pmod(col("id"), lit(4)), Seq("source"))
+    val hb = LlmOps.hllShardSketches(rows, col("k"), pmod(col("id"), lit(4)), Seq("source"))
     assert(hb.count() == 4)
-    val est = Graft.hllMergedEstimates(hb, Seq("source")).collect()
+    val est = LlmOps.hllMergedEstimates(hb, Seq("source")).collect()
       .map(r => r.getString(0) -> r.getLong(1).toDouble).toMap
     // each source sees keys of its parity: 50 distinct (i%2 fixes k%2... no:
     // key is i%100, source is i%2 -> source src0 sees even i -> keys i%100
@@ -242,38 +261,38 @@ class GraftFacadeSpec extends AnyFunSuite {
     import spark.implicits._
     // mortonInterleave: bit placement
     val z = Seq((3, 1)).toDF("x", "y")
-      .select(Graft.mortonInterleave(col("x"), col("y"))).collect().head.getAs[Number](0)
+      .select(Relational.morton8(col("x"), col("y"))).collect().head.getAs[Number](0)
     assert(z.intValue == 7) // x bits at 0,2; y bit at 1
     // compactionPlan over a tiny manifest
-    val plan = Graft.compactionPlan(
+    val plan = LlmOps.compactionPlan(
       Seq(("g", "a", 5L), ("g", "b", 3L)).toDF("grp", "f", "bytes"), "grp", "f", 10L)
       .collect()
     assert(plan.length == 1 && plan.head.getLong(2) == 2L && plan.head.getBoolean(5))
     // boundedPostings band + completeness
-    val post = Graft.boundedPostings(
+    val post = LlmOps.boundedPostings(
       Seq(("t", 1L), ("t", 2L), ("rare", 9L)).toDF("term", "doc_id"), 2, 64).collect()
     assert(post.length == 1 && post.head.getString(0) == "t" && post.head.getString(3) == "1,2")
     // vocabCoverage shares
-    val vc = Graft.vocabCoverage(Seq("a", "a", "b").toDF("term"), 1).collect()
+    val vc = LlmOps.vocabCoverage(Seq("a", "a", "b").toDF("term"), 1).collect()
     assert(vc.head.getString(1) == "a" && math.abs(vc.head.getDouble(5) - 2.0 / 3) < 1e-12)
     // funnel + skewAudit on crafted frames
-    val f = Graft.funnel(
+    val f = Relational.funnel(
       Seq((1L, "view", 1L), (1L, "click", 2L)).toDF("user_id", "event_type", "ts_s"),
       Seq("view", "click")).orderBy("stage").collect()
     assert(f.map(_.getLong(1)).toSeq == Seq(1L, 1L))
-    val sk = Graft.skewAudit(Seq(1L, 1L, 2L).toDF("k"), "k", 1).collect()
+    val sk = Relational.skewAudit(Seq(1L, 1L, 2L).toDF("k"), "k", 1).collect()
     assert(sk.head.getLong(0) == 1L && sk.head.getLong(1) == 2L)
     // winsorizeStats, sourceOverlap, ivfHealth, annTopKFiltered,
     // retrievalMetrics10 ride real-data kernels spec-pinned elsewhere —
     // here just prove the facade wiring returns the kernel's shape
-    val w = Graft.winsorizeStats(spark,
+    val w = LlmOps.winsorizeStats(spark,
       (1L to 4L).map(v => ("s", v)).toDF("source", "v"), 0.25, 0.75).columns.toSeq
     assert(w == Seq("source", "n", "p_lo", "p_hi", "n_low", "n_high", "win_mean"))
     val emb = Tables.embeddings(spark, TestSpark.sf0001)
       .select(col("vec_id"), col("embedding"), col("label"))
-    assert(Graft.ivfHealth(spark, emb.select("vec_id", "embedding"), 4)
+    assert(LlmOps.ivfHealthOf(spark, emb.select("vec_id", "embedding"), 4)
       .columns.contains("imbalance"))
-    val fa = Graft.annTopKFiltered(spark, emb, emb.filter(col("vec_id") < 2), "label", 3)
+    val fa = LlmOps.filteredTopKOf(spark, emb, emb.filter(col("vec_id") < 2), "label", 3)
     assert(fa.columns.toSeq == Seq("qid", "rnk", "vid", "cosine") && fa.count() > 0)
     Hygiene.release(spark)
   }

@@ -132,8 +132,8 @@ class KMeansSpec extends AnyFunSuite {
     assert(m.k == 400)
     val assigned = KMeans.assign(spark, corpus, m)
     assert(assigned.count() == 500)
-    assert(assigned.agg(org.apache.spark.sql.functions.max("cluster")).head.getInt(0) < 400)
-    assert(assigned.agg(org.apache.spark.sql.functions.min("dist")).head.getLong(0) >= 0L)
+    assert(assigned.agg(org.apache.spark.sql.functions.max("cluster")).head().getInt(0) < 400)
+    assert(assigned.agg(org.apache.spark.sql.functions.min("dist")).head().getLong(0) >= 0L)
   }
 
   test("k larger than corpus: empty clusters keep their seed centroid") {

@@ -51,16 +51,11 @@ class LayoutSpec extends AnyFunSuite {
       .select(
         col("l_partkey").bitwiseAND(255).as("x"),
         col("l_orderkey").bitwiseAND(255).as("y"))
-    val z = base.withColumn(
-      "z", graft.queries.Relational.morton8(col("x"), col("y")))
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-layout").toString
     // the real write q44 plans for: one range shuffle on z, z-sorted rows,
     // bucket = top interleaved byte as the file boundary
-    z.withColumn("bucket", shiftright(col("z"), 12))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("z"))
-      .write.partitionBy("bucket").parquet(s"$tmp/zorder")
+    graft.sources.Io.writeZOrdered(base, s"$tmp/zorder", "x", "y")
     // the linear strawman: same file count, single sort key x
     base.repartitionByRange(16, col("x"), col("y"))
       .sortWithinPartitions(col("x"), col("y"))

@@ -37,8 +37,8 @@ class PropertySpec extends AnyFunSuite {
     } yield (xs, parts)
     forAllN(gen, n = 8) { case (xs, parts) =>
       val df = xs.toDF("v")
-      val a = df.repartition(1).agg(Parity.dsum(col("v"), 4)).head.getDouble(0)
-      val b = df.repartition(parts).agg(Parity.dsum(col("v"), 4)).head.getDouble(0)
+      val a = df.repartition(1).agg(Parity.dsum(col("v"), 4)).head().getDouble(0)
+      val b = df.repartition(parts).agg(Parity.dsum(col("v"), 4)).head().getDouble(0)
       assert(a == b)
     }
   }
