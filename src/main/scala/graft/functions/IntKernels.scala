@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DataTypes, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Exact integer squared Euclidean distance between two `array<bigint>`
   * vectors: sum((a_i - b_i)^2) over the common prefix, as a compiled

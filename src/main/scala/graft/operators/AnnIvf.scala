@@ -263,8 +263,13 @@ object AnnIvf {
       .withColumn("cluster", nearestCentroidCol(cs))
       .write.mode("overwrite").partitionBy("cluster")
       .parquet(L.dataDir(path, "vectors", tag))
-    // count ONLY the new directory's footers — the commit carries the total
-    val added = spark.read.parquet(L.dataDir(path, "vectors", tag)).count()
+    // count ONLY the new directory's footers, on the driver — the commit
+    // carries the total; tableRows lists one level, so it gets the
+    // `cluster=*` partition directories
+    val dir = new org.apache.hadoop.fs.Path(L.dataDir(path, "vectors", tag))
+    val clusters = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .globStatus(new org.apache.hadoop.fs.Path(dir, "cluster=*"))
+    val added = ArtifactManifest.tableRows(spark, clusters.map(_.getPath.toString).toIndexedSeq: _*)
     commitIndex(spark, path, v,
       snap.tables + ("vectors" -> (snap.tables.getOrElse("vectors", Nil) :+ tag)),
       resolved = Some(snap), addedRows = Some(added))

@@ -92,7 +92,7 @@ object AsOfJoin {
       rightTieBreak: String,
       payload: Seq[String],
       backward: Boolean,
-      toleranceSeconds: Option[Long] = None
+      toleranceSeconds: Option[Long]
   ): DataFrame = {
     val leftCols = left.columns.toSeq
     val tbType = right.schema(rightTieBreak).dataType

@@ -4,8 +4,9 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.util.LongAccumulator
 
 /** Driver-side job status/history for ParallelMap runs — the engine can
   * answer "what jobs ran, which inputs errored" about itself.
@@ -13,13 +14,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Rebuilds the reference's job table + status machine
   * (main_service/src/main_service/history.py:22-71 keeps per-job rows;
   * cluster_state.py:269-304 drives RUNNING -> COMPLETED/FAILED) as an
-  * in-driver registry fed two ways:
-  *   - ParallelMap calls the lifecycle hooks (started/completed/failed,
-  *     per-input outcomes from the attributed mode);
-  *   - a SparkListener correlates Spark-level job/task events back to the
-  *     pmap job via the `spark.jobGroup.id` property (every ParallelMap
-  *     mode tags its jobs with a `pmap-` group), contributing task counts
-  *     that the facade-level hooks cannot see.
+  * in-driver registry that each ParallelMap call keeps itself, as the
+  * reference's nodes report their own jobs' progress: the call moves its
+  * record through the lifecycle hooks (started/completed/failed, per-input
+  * outcomes from the attributed modes), adds the Spark job id of each
+  * submission, and its tasks count themselves in the record's
+  * [[TaskCounts]].
   *
   * Scale: one record per job (metadata only — like the reference's job
   * documents, never result payloads); per-input error detail is capped at
@@ -30,10 +30,10 @@ object JobTracker {
 
   val MaxErrorsPerJob = 1000
 
-  /** Retained job records; oldest TERMINAL records (and their stage
-    * correlations) are evicted past this, so a long-lived driver's
-    * registry stays bounded — like the reference's history table, which
-    * pages old jobs out to storage rather than keeping them in RAM. */
+  /** Retained job records; oldest TERMINAL records are evicted past
+    * this, so a long-lived driver's registry stays bounded — like the
+    * reference's history table, which pages old jobs out to storage
+    * rather than keeping them in RAM. */
   val MaxJobs = 10000
 
   sealed abstract class Status(val name: String)
@@ -44,6 +44,24 @@ object JobTracker {
 
   final case class InputError(inputIndex: Long, error: String)
 
+  /** A call's own task counts, kept by its tasks: each task calls
+    * [[countTask]] inside the closure that processes its slice, and on
+    * completion adds its busy nanoseconds to `busyNs` (whose `count` is
+    * then the finished tasks) and its retried attempts to `retried`. Spark
+    * merges a finished task's update before it hands that task's result to
+    * the job waiter (DAGScheduler.handleTaskCompletion) and drops a failed
+    * attempt's, so the counts are exact when a call returns. */
+  private[operators] final case class TaskCounts(busyNs: LongAccumulator, retried: LongAccumulator) {
+    def countTask(): Unit = {
+      val ctx = TaskContext.get()
+      val t0 = System.nanoTime()
+      ctx.addTaskCompletionListener[Unit] { _ =>
+        busyNs.add(System.nanoTime() - t0)
+        retried.add(ctx.attemptNumber().toLong)
+      }
+    }
+  }
+
   /** Mutable job record; synchronized on itself for field updates. */
   final class Record(val jobId: String, val mode: String, val nInputs: Long) {
     @volatile var status: Status = Running
@@ -52,14 +70,27 @@ object JobTracker {
     @volatile var nErrors: Long = 0
     @volatile var failure: Option[String] = None
     @volatile var sparkJobIds: List[Int] = Nil
-    @volatile var nTasks: Long = 0
-    @volatile var nFailedTasks: Long = 0
-    /** Sum of task wall-times (ms) — the engine's own "node-hours" meter. */
-    @volatile var taskTimeMs: Long = 0
+    /** Tasks the call planned: its slices, plus a nested call's inner slices. */
+    @volatile private[operators] var plannedTasks: Long = 0
+    private[operators] val counts = TaskCounts(new LongAccumulator, new LongAccumulator)
+    /** Finished tasks: a RUNNING call's count so far. */
+    def nTasks: Long = counts.busyNs.count
+    /** Retried attempts of finished tasks, plus, for a FAILED or CANCELLED
+      * call, its tasks that never finished. */
+    def nFailedTasks: Long = {
+      val unfinished = if (status == Failed || status == Cancelled) plannedTasks - nTasks else 0L
+      counts.retried.sum + math.max(0L, unfinished)
+    }
+    /** Sum of finished tasks' busy ms — the engine's own "node-hours" meter. */
+    def taskTimeMs: Long = counts.busyNs.sum / 1000000L
     /** Status transition history, oldest first: (status, at_ms). */
     @volatile var transitions: List[(String, Long)] =
       List((Running.name, startedAtMs))
     val inputErrors = new java.util.concurrent.ConcurrentLinkedQueue[InputError]()
+
+    private[operators] def submitted(jobIds: Seq[Int]): Unit = synchronized {
+      sparkJobIds = jobIds.toList ::: sparkJobIds
+    }
 
     /** Transition to a terminal state; returns whether THIS call won.
       * Terminal states are final (cancel/complete race) — and the caller
@@ -79,11 +110,6 @@ object JobTracker {
   }
 
   private val records = new ConcurrentHashMap[String, Record]()
-  // stageId -> pmap jobId, filled by the listener
-  private val stageToPmap = new ConcurrentHashMap[Int, String]()
-  // listener registration is per SparkContext: a stopped-and-recreated
-  // session must get a fresh listener, so track the application id
-  @volatile private var installedAppId: String = null
 
   private def evictIfFull(): Unit =
     if (records.size > MaxJobs) {
@@ -100,51 +126,17 @@ object JobTracker {
       val victims =
         (terminal.sortBy(_.startedAtMs) ++ running.sortBy(_.startedAtMs))
           .take(overBy)
-      victims.foreach { r =>
-        records.remove(r.jobId)
-        stageToPmap.entrySet().removeIf(e => e.getValue == r.jobId)
-      }
+      victims.foreach(r => records.remove(r.jobId))
     }
-
-  /** Register the correlating listener once per SparkContext (idempotent). */
-  def install(spark: SparkSession): Unit = synchronized {
-    val appId = spark.sparkContext.applicationId
-    if (installedAppId != appId) {
-      installedAppId = appId
-      // Spark job/stage ids restart at 0 in a fresh SparkContext: stale
-      // correlation entries from the previous app would mis-attribute the
-      // new app's tasks to old pmap records (inflating nTasks/taskTimeMs
-      // in jobs()/usageDaily()). The RECORDS survive — history spans
-      // sessions by design — only the id correlations reset.
-      stageToPmap.clear()
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = {
-          val group = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          group.filter(_.startsWith("pmap-")).foreach { g =>
-            Option(records.get(g)).foreach { r =>
-              e.stageIds.foreach(sid => stageToPmap.put(sid, g))
-              r.synchronized { r.sparkJobIds = e.jobId :: r.sparkJobIds }
-            }
-          }
-        }
-        override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-          Option(stageToPmap.get(e.stageId)).flatMap(g => Option(records.get(g))).foreach { r =>
-            r.synchronized {
-              r.nTasks += 1
-              if (e.reason != org.apache.spark.Success) r.nFailedTasks += 1
-              Option(e.taskInfo).foreach(ti => r.taskTimeMs += ti.duration)
-            }
-          }
-        }
-      })
-    }
-  }
 
   // ---- lifecycle hooks (called by ParallelMap) ----
 
-  private[operators] def started(jobId: String, mode: String, nInputs: Long): Record = {
+  /** A RUNNING record whose task counts are registered with `spark`. */
+  private[operators] def started(
+      spark: SparkSession, jobId: String, mode: String, nInputs: Long): Record = {
     val r = new Record(jobId, mode, nInputs)
+    spark.sparkContext.register(r.counts.busyNs)
+    spark.sparkContext.register(r.counts.retried)
     records.put(jobId, r)
     evictIfFull()
     r
@@ -227,7 +219,5 @@ object JobTracker {
       .toDF("job_id", "seq", "status", "at_ms")
   }
 
-  private[graft] def clearForTest(): Unit = {
-    records.clear(); stageToPmap.clear()
-  }
+  private[graft] def clearForTest(): Unit = records.clear()
 }

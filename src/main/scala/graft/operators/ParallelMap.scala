@@ -2,11 +2,12 @@ package graft.operators
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import scala.concurrent.ExecutionContext
+import scala.concurrent.{Await, ExecutionContext}
+import scala.concurrent.duration.Duration
 import scala.reflect.ClassTag
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.SparkEnv
+import org.apache.spark.{FutureAction, SparkEnv}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.serializer.{KryoSerializer, SerializerInstance}
 import org.apache.spark.sql.SparkSession
@@ -77,13 +78,14 @@ final case class InputTooBig(inputIndex: Long, estimatedBytes: Long, limitBytes:
   * stealing (P7) is the task scheduler; chunking (P2) is partition
   * planning; retries/heartbeats/ACKs are the Spark RPC + task-retry layer;
   * adaptive RAM (E6) is JVM-managed unified memory. Nested rpm-from-UDF
-  * (L4) is not expressible from executors — compose on the driver.
+  * (L4) cannot run on executors; `runNested` plans it as one two-stage job.
   *
-  * Every list mode but runWithLiveLogs runs one RDD plan (see `plan`): the
-  * driver shuffles the indexed inputs (the reference's hot-spot
-  * decorrelation, _remote_parallel_map.py:312-313), `parallelize` cuts
-  * them into contiguous slices, and one `map` applies `f` — one Spark job
-  * with one stage, no Catalyst planning and no shuffle.
+  * Every list mode but runNested runs one RDD plan (see `Call.plan`): the
+  * driver deals the indexed inputs to random slices (the reference's
+  * hot-spot decorrelation, _remote_parallel_map.py:312-313), each slice in
+  * input order, and one `map` applies `f` — one Spark job with one stage,
+  * no Catalyst planning and no shuffle. Each call keeps its own books in
+  * JobTracker: its tasks count themselves and it records its Spark jobs.
   *
   * Inputs/outputs are opaque to the engine (the reference moves pickled
   * blobs; SURVEY.md §1.2), so they travel as Kryo bytes through an explicit
@@ -208,57 +210,35 @@ object ParallelMap {
       c.deserializeStream(new ByteArrayInputStream(bytes)).asIterator.asInstanceOf[Iterator[T]]
   }
 
-  /** The (index, input) pairs as one RDD element per slice: the driver
-    * shuffles them (the reference client's hot-spot decorrelation,
-    * _remote_parallel_map.py:312-313 — inputs that cost alike because they
-    * sit side by side land on different tasks), cuts the shuffled order
-    * into `slices` contiguous slices and Kryo-encodes each slice. */
+  /** The (index, input) pairs as one RDD element per slice: each input
+    * goes to a random slice (the reference client's hot-spot
+    * decorrelation, _remote_parallel_map.py:312-313 — inputs that cost
+    * alike because they sit side by side land on different tasks), the
+    * slice sizes differ by at most one, each slice keeps its inputs in
+    * input order, and each slice is Kryo-encoded. O(n): one shuffle of
+    * slice labels and one pass that buckets the inputs by label. */
   private def sliced[I](spark: SparkSession, inputs: Seq[I], slices: Int): RDD[Array[Byte]] = {
     val in = inputs.toIndexedSeq
     val n = in.size
-    val order = Array.range(0, n)
+    val start = Array.tabulate(slices + 1)(s => (s.toLong * n / slices).toInt)
+    // input i goes to slice label(i): each slice's label once per input
+    // it holds, shuffled
+    val label = new Array[Int](n)
+    for (s <- 0 until slices; k <- start(s) until start(s + 1)) label(k) = s
     val rnd = java.util.concurrent.ThreadLocalRandom.current()
     for (i <- n - 1 to 1 by -1) {
       val j = rnd.nextInt(i + 1)
-      val t = order(i); order(i) = order(j); order(j) = t
+      val t = label(i); label(i) = label(j); label(j) = t
     }
+    val order = new Array[Int](n)
+    val next = start.clone()
+    for (i <- 0 until n) { order(next(label(i))) = i; next(label(i)) += 1 }
     val codec = Payload.codec()
     val encoded = (0 until slices).map { s =>
-      val from = (s.toLong * n / slices).toInt
-      val until = ((s + 1).toLong * n / slices).toInt
-      Payload.encode(codec, (from until until).iterator.map(k => (order(k).toLong, in(order(k)))))
+      val slice = (start(s) until start(s + 1)).iterator.map(order(_))
+      Payload.encode(codec, slice.map(i => (i.toLong, in(i))))
     }
     spark.sparkContext.parallelize(encoded, slices)
-  }
-
-  /** The plan behind every list mode but runWithLiveLogs: one `map` over
-    * the driver-shuffled slices applies `g` to each (index, input) pair
-    * and yields the slice's results as Kryo bytes — one element per
-    * partition, one stage, no shuffle. */
-  private def plan[I, R: ClassTag](
-      spark: SparkSession,
-      inputs: Seq[I],
-      slices: Int,
-      resources: Resources
-  )(g: (Long, I) => R): RDD[Array[Byte]] = {
-    val rdd = sliced(spark, inputs, slices).map { bytes =>
-      val codec = Payload.codec()
-      Payload.encode(codec, Payload.decode[(Long, I)](codec, bytes).map { case (i, x) => g(i, x) })
-    }
-    applyResources(spark, rdd, resources)
-  }
-
-  /** Run `plan` as one Spark job and decode every slice's results. */
-  private def collectPlan[I, R: ClassTag](
-      spark: SparkSession,
-      inputs: Seq[I],
-      maxParallelism: Option[Int],
-      resources: Resources
-  )(g: (Long, I) => R): Seq[R] = {
-    val slices = sliceCount(spark, inputs.size, maxParallelism, resources)
-    val parts = plan(spark, inputs, slices, resources)(g).collect()
-    val codec = Payload.codec()
-    parts.iterator.flatMap(Payload.decode[R](codec, _)).toVector
   }
 
   /** `f` on `x`, an exception re-raised with the input's attribution. */
@@ -303,11 +283,19 @@ object ParallelMap {
   /** The scope of one call, shared by every mode: a fresh `pmap-` job
     * group with its JobTracker record (RUNNING from construction), the
     * group and the resource request set around each Spark submission,
-    * and failures unwrapped to the attributed error and recorded. */
-  private final class Call(spark: SparkSession, mode: String, nInputs: Int, resources: Resources) {
+    * whose job id the record keeps, the plan's tasks counting themselves
+    * in the record, and failures unwrapped to the attributed error and
+    * recorded. */
+  private final class Call(
+      spark: SparkSession,
+      mode: String,
+      nInputs: Int,
+      maxParallelism: Option[Int],
+      resources: Resources
+  ) {
     val group: String = newGroup()
-    JobTracker.install(spark)
-    JobTracker.started(group, mode, nInputs)
+    private val record = JobTracker.started(spark, group, mode, nInputs)
+    val slices: Int = sliceCount(spark, nInputs, maxParallelism, resources)
 
     // what SparkContext.setJobGroup sets, plus the resource request
     private val props = Seq(
@@ -319,16 +307,51 @@ object ParallelMap {
       "graft.func.ram_gb" -> resources.funcRamGb.toString
     )
 
-    /** Run `body` with this call's job-local properties on the calling
+    /** Submit `job` with this call's job-local properties on the calling
       * thread (Spark copies them into a job when it is submitted), then
       * put back the caller's own values: a job group or resource property
-      * the caller set survives the call. */
-    def submitting[T](body: => T): T = {
+      * the caller set survives the call. The record keeps the job's id. */
+    def submit[T](job: => FutureAction[T]): FutureAction[T] = {
       val sc = spark.sparkContext
       val saved = props.map { case (k, _) => (k, sc.getLocalProperty(k)) }
       props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      try body
-      finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      val action =
+        try job
+        finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      record.submitted(action.jobIds)
+      action
+    }
+
+    /** The counts that `tasks` more planned tasks of this call add to;
+      * each task calls `countTask()` on them. */
+    def counting(tasks: Int): JobTracker.TaskCounts = {
+      record.plannedTasks += tasks
+      record.counts
+    }
+
+    /** The plan behind every list mode but runNested: one `map` over the
+      * call's slices applies `g` to each (index, input) pair and yields
+      * the slice's results as Kryo bytes — one element per partition, one
+      * stage, no shuffle. */
+    def plan[I, R: ClassTag](inputs: Seq[I])(g: (Long, I) => R): RDD[Array[Byte]] = {
+      val counts = counting(slices)
+      val rdd = sliced(spark, inputs, slices).map { bytes =>
+        counts.countTask()
+        val codec = Payload.codec()
+        Payload.encode(codec, Payload.decode[(Long, I)](codec, bytes).map { case (i, x) => g(i, x) })
+      }
+      applyResources(spark, rdd, resources)
+    }
+
+    /** Run `rdd` as one Spark job; every partition's element. A failed
+      * job throws its own exception, as `RDD.collect` does. */
+    def collect(rdd: RDD[Array[Byte]]): Seq[Array[Byte]] =
+      Await.result(submit(rdd.collectAsync()), Duration.Inf)
+
+    /** Run `plan` as one Spark job and decode every slice's results. */
+    def collectPlan[I, R: ClassTag](inputs: Seq[I])(g: (Long, I) => R): Seq[R] = {
+      val codec = Payload.codec()
+      collect(plan(inputs)(g)).iterator.flatMap(Payload.decode[R](codec, _)).toVector
     }
 
     def completed(errors: Seq[(Long, String)] = Nil): Unit = {
@@ -353,7 +376,7 @@ object ParallelMap {
       * and returned, or FAILED with the attributed error re-raised. */
     def blocking[T](body: => (T, Seq[(Long, String)])): T =
       try {
-        val (out, errors) = submitting(body)
+        val (out, errors) = body
         completed(errors)
         out
       } catch { case e: Throwable => throw failed(e) }
@@ -374,9 +397,8 @@ object ParallelMap {
   )(f: I => O): Seq[O] = {
     if (inputs.isEmpty) return Nil // empty short-circuit, no cluster contact
     guardSizes(inputs, f)
-    new Call(spark, "run", inputs.size, resources).blocking {
-      (collectPlan(spark, inputs, maxParallelism, resources)(attributed(f, _, _)), Nil)
-    }
+    val call = new Call(spark, "run", inputs.size, maxParallelism, resources)
+    call.blocking((call.collectPlan(inputs)(attributed(f, _, _)), Nil))
   }
 
   /** Like run but keeps the input index with each result and never throws:
@@ -391,10 +413,9 @@ object ParallelMap {
   )(f: I => O): Seq[(Long, Try[O])] = {
     if (inputs.isEmpty) return Nil
     guardSizes(inputs, f)
-    new Call(spark, "runAttributed", inputs.size, resources).blocking {
-      val raw = collectPlan(spark, inputs, maxParallelism, resources) { (i, x) =>
-        (i, outcome(f, x))
-      }
+    val call = new Call(spark, "runAttributed", inputs.size, maxParallelism, resources)
+    call.blocking {
+      val raw = call.collectPlan(inputs)((i, x) => (i, outcome(f, x)))
       (raw.map { case (i, r) => (i, toTry(r)) }, errorsOf(raw))
     }
   }
@@ -421,7 +442,7 @@ object ParallelMap {
     if (inputs.isEmpty) return Nil // no cluster contact, as in run()
     guardSizes(inputs, f)
     guardSizes(Seq.empty[J], g)
-    val slices = sliceCount(spark, inputs.size, maxParallelism, resources)
+    val call = new Call(spark, "runNested", inputs.size, maxParallelism, resources)
     // spread the EXPANDED inner inputs; fan-out sizes are skewed by nature
     // and the inner stage's parallelism must not inherit that — nor the
     // OUTER input count (3 outer inputs fanning to 1M inner ones want the
@@ -432,9 +453,11 @@ object ParallelMap {
     val innerSlices = math.min(
       maxParallelism.getOrElse(spark.sparkContext.defaultParallelism),
       resourceSlicesCap(spark, resources))
-    new Call(spark, "runNested", inputs.size, resources).blocking {
+    call.blocking {
+      val counts = call.counting(call.slices + innerSlices) // fan-out tasks, then inner tasks
       // inner inputs cross the shuffle as Kryo bytes, one record each
-      val fanned = sliced(spark, inputs, slices).flatMap { bytes =>
+      val fanned = sliced(spark, inputs, call.slices).flatMap { bytes =>
+        counts.countTask()
         val codec = Payload.codec()
         Payload.decode[(Long, I)](codec, bytes).flatMap { case (oi, x) =>
           val js =
@@ -447,6 +470,7 @@ object ParallelMap {
       }
       val mapped = applyResources(spark, fanned, resources).repartition(innerSlices)
         .mapPartitions { records =>
+          counts.countTask()
           val codec = Payload.codec()
           val out = records.flatMap(Payload.decode[(Long, Long, J)](codec, _)).map {
             case (oi, ii, j) =>
@@ -456,7 +480,7 @@ object ParallelMap {
           Iterator.single(Payload.encode(codec, out))
         }
       val codec = Payload.codec()
-      val out = applyResources(spark, mapped, resources).collect()
+      val out = call.collect(applyResources(spark, mapped, resources))
         .iterator.flatMap(Payload.decode[O](codec, _)).toVector
       (out, Nil)
     }
@@ -482,10 +506,9 @@ object ParallelMap {
   )(f: I => O): Seq[(Long, Try[O], String)] = {
     if (inputs.isEmpty) return Nil
     guardSizes(inputs, f)
-    new Call(spark, "runWithLogs", inputs.size, Resources()).blocking {
-      val raw = collectPlan(spark, inputs, maxParallelism, Resources()) { (i, x) =>
-        (i, outcomeWithLogs(f, x))
-      }
+    val call = new Call(spark, "runWithLogs", inputs.size, maxParallelism, Resources())
+    call.blocking {
+      val raw = call.collectPlan(inputs)((i, x) => (i, outcomeWithLogs(f, x)))
       (raw.map { case (i, (r, lg)) => (i, toTry(r), lg) },
         errorsOf(raw.map { case (i, (r, _)) => (i, r) }))
     }
@@ -546,8 +569,7 @@ object ParallelMap {
     * timing: a final sweep over the collected results fires any entry a
     * heartbeat did not beat to the finish line.
     *
-    * Inputs are chunked CONTIGUOUSLY (parallelize slices, the reference's
-    * proportional chunking) and, unlike every other mode, not shuffled, so
+    * Runs on `Call.plan`, whose slices hold their inputs in input order:
     * within-partition execution order is input order — deterministic log
     * interleaving per partition. */
   def runWithLiveLogs[I: ClassTag, O: ClassTag](
@@ -557,10 +579,6 @@ object ParallelMap {
   )(f: I => O)(onLog: (Long, String) => Unit): Seq[(Long, Try[O], String)] = {
     if (inputs.isEmpty) return Nil
     guardSizes(inputs, f)
-    val indexed = inputs.zipWithIndex.map { case (x, i) => (i.toLong, x) }
-    // contiguous and unshuffled (see above): its own parallelize, not
-    // `plan`, but the same slice formula as every other mode
-    val slices = sliceCount(spark, inputs.size, maxParallelism, Resources())
     val sc = spark.sparkContext
     val acc = new LogRelayAcc
     sc.register(acc, "graft.pmap.liveLogs")
@@ -580,16 +598,14 @@ object ParallelMap {
           }
         }
     }
+    val call = new Call(spark, "runWithLiveLogs", inputs.size, maxParallelism, Resources())
     sc.addSparkListener(listener)
-    try new Call(spark, "runWithLiveLogs", inputs.size, Resources()).blocking {
-      val raw = sc.parallelize(indexed, slices)
-        .map { case (idx, x) =>
-          val (r, logs) = outcomeWithLogs(f, x)
-          acc.add((idx, logs)) // visible to the next heartbeat mid-task
-          (idx, r, logs)
-        }
-        .collect()
-        .toSeq
+    try call.blocking {
+      val raw = call.collectPlan(inputs) { (idx, x) =>
+        val (r, logs) = outcomeWithLogs(f, x)
+        acc.add((idx, logs)) // visible to the next heartbeat mid-task
+        (idx, r, logs)
+      }
       // completeness sweep: anything no heartbeat delivered fires here
       // (post-job, but exactly-once is preserved via `fired`)
       fire(raw.map { case (i, _, lg) => (i, lg) })
@@ -604,11 +620,11 @@ object ParallelMap {
     * 703-707). A straggler partition does not block results from fast
     * partitions (ParallelMapSpec pins this).
     *
-    * Each slice of `plan` is submitted as its own single-task Spark job
-    * that reads its slice straight from the driver's `parallelize` (there
-    * is no shuffle to compute or share). The consumer's own thread drives
-    * submission: `stream` submits the first `window` slices, and each slice
-    * the iterator takes submits the next one, so at most `window` slices
+    * Each slice of `Call.plan` is submitted as its own single-task Spark job
+    * that reads its slice straight from the driver (there is no shuffle to
+    * compute or share). The consumer's own thread drives submission:
+    * `stream` submits the first `window` slices, and each slice the
+    * iterator takes submits the next one, so at most `window` slices
     * are in flight or buffered ahead of the consumer — the analog of the
     * reference's result-queue backpressure (worker_client.py:28,792-793).
     * Default 0 = number of partitions (full parallelism; driver may buffer
@@ -638,9 +654,9 @@ object ParallelMap {
   )(f: I => O): Iterator[(Long, O)] = {
     if (inputs.isEmpty) return Iterator.empty
     guardSizes(inputs, f)
-    val call = new Call(spark, mode, inputs.size, resources)
-    val parts = sliceCount(spark, inputs.size, maxParallelism, resources)
-    val rdd = plan(spark, inputs, parts, resources)((i, x) => (i, attributed(f, i, x)))
+    val call = new Call(spark, mode, inputs.size, maxParallelism, resources)
+    val parts = call.slices
+    val rdd = call.plan(inputs)((i, x) => (i, attributed(f, i, x)))
     val sc = spark.sparkContext
     // one entry per slice job: its results, or why it failed
     val queue = new java.util.concurrent.LinkedBlockingQueue[Try[Array[Byte]]]()
@@ -649,7 +665,7 @@ object ParallelMap {
       if (submitted < parts) {
         val p = submitted
         submitted += 1
-        try call.submitting {
+        try call.submit {
           sc.submitJob[Array[Byte], Array[Byte], Unit](
             rdd, _.next(), Seq(p), (_, bytes) => queue.put(Success(bytes)), ())
         }.onComplete(_.failed.foreach(e => queue.put(Failure(e))))(ExecutionContext.parasitic)
@@ -773,16 +789,14 @@ object ParallelMap {
     val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
     if (inputs.isEmpty) { fut.complete(Nil); return new PMapJob(spark, newGroup(), fut, cancelled) }
     guardSizes(inputs, f) // fail fast on the submitting thread, as the reference does
-    val call = new Call(spark, "detached", inputs.size, resources)
+    val call = new Call(spark, "detached", inputs.size, maxParallelism, resources)
     // the future decides the terminal state: a cancel that raced the
     // submission wins and the results are discarded (cancel() seals the
     // future first)
     val t = new Thread(() => {
       try {
         if (!cancelled.get()) {
-          val r = call.submitting {
-            collectPlan(spark, inputs, maxParallelism, resources)(attributed(f, _, _))
-          }
+          val r = call.collectPlan(inputs)(attributed(f, _, _))
           if (fut.complete(r)) call.completed()
         }
       } catch { case e: Throwable => if (fut.completeExceptionally(unwrap(e))) call.failed(e) }

@@ -295,9 +295,9 @@ object SnapshotLog {
     * copy per version. */
   def gc(s: SparkSession, root: String, kind: String, retain: Int = 1): Unit = {
     require(retain >= 1, s"retain must be >= 1, got $retain")
-    val cur = current(s, root, kind) // validates kind; throws if nothing valid serves
+    current(s, root, kind): Unit // validates kind; throws if nothing valid serves
     val parsed = listManifests(s, root).map { case (v, p) => (v, p, parse(s, p)) }
-    // `current` is the highest valid version, so every retained version is <= cur
+    // `current` is the highest valid version, so every retained version is <= it
     val retained = parsed
       .collect { case (v, _, Some(fields)) => toSnapshot(v, fields) }
       .takeRight(retain)

@@ -1984,15 +1984,9 @@ object LlmOps {
 
   // ---- embedding similarity ----
 
-  /** (vec_id, pos, v) long form. Exploding is how both the exact oracle and
-    * the distributed aggregates stay order-independent: every dot product
-    * is an exact DECIMAL sum, bit-identical at any parallelism. */
-  private def flat(s: SparkSession, d: String): DataFrame =
-    Tables
-      .embeddings(s, d)
-      .select(col("vec_id"), posexplode(col("embedding")))
-      .withColumnRenamed("pos", "pos0")
-      .select(col("vec_id"), (col("pos0") + 1).as("pos"), col("col").as("v"))
+  /** (vec_id, pos, v) long form. Exploding is how the exact oracle stays
+    * order-independent: every dot product is an exact DECIMAL sum,
+    * bit-identical at any parallelism. */
   private val flatSql =
     """SELECT vec_id, UNNEST(range(1, len(embedding) + 1)) AS pos,
               UNNEST(embedding) AS v FROM embeddings"""
@@ -2002,13 +1996,9 @@ object LlmOps {
   // converts via int128/10^k in floating point; past 2^53 it can differ
   // from the JVM's correctly-rounded BigDecimal conversion by an ulp).
   private val dec28 = DecimalType(28, 12)
-  private def dprod(a: Column, b: Column): Column =
-    sum((a.cast("double") * b.cast("double")).cast(dec28))
   private def dprodSql(a: String, b: String): String =
     s"SUM(CAST(CAST($a AS DOUBLE) * CAST($b AS DOUBLE) AS DECIMAL(28,12)))"
 
-  private def norms(s: SparkSession, d: String): DataFrame =
-    flat(s, d).groupBy("vec_id").agg(dprod(col("v"), col("v")).as("nrm"))
   private val normsSql =
     s"""SELECT vec_id, ${dprodSql("v", "v")} AS nrm FROM ($flatSql) GROUP BY vec_id"""
 

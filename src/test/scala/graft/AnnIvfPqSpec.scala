@@ -97,7 +97,6 @@ class AnnIvfPqSpec extends AnyFunSuite {
   }
 
   test("append encodes against the FROZEN quantizers; new vectors searchable, old results stable") {
-    import spark.implicits._
     // vec_id < 90: the generator is periodic mod 97 (vector 97 would be
     // byte-identical to vector 0 and win the zero-distance tie on id)
     val emb = corpus.filter(col("vec_id") < 90)
@@ -134,7 +133,6 @@ class AnnIvfPqSpec extends AnyFunSuite {
     // CHAOS: a crashed append — data fully written, manifest torn — must
     // not leak into a search (the snapshot-log invisibility rule), and
     // the next real append must not trip over the burned version number
-    import spark.implicits._
     corpus.filter(col("vec_id") === 0)
       .select((col("vec_id") + 500L).as("vec_id"), col("embedding"))
       .withColumn("cluster", lit(1))

@@ -264,6 +264,57 @@ class AnnIvfSpec extends AnyFunSuite {
     Hygiene.release(spark)
   }
 
+  test("appendIndex runs no Spark job after its write") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val emb = Tables.embeddings(spark, TestSpark.sf0001).select("vec_id", "embedding")
+    val half = substring(md5(col("vec_id").cast("string")), 1, 1) < "8"
+    val path = java.nio.file.Files.createTempDirectory("ivf-append-jobs").toString + "/ivf"
+    AnnIvf.buildIndex(spark, emb.filter(half), path, nlist = 4)
+    val sc = spark.sparkContext
+    val tag = s"append-${java.util.UUID.randomUUID()}"
+    // (job id, SQL execution id or "", tag) of every tagged job, in start order
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, String)]()
+    val writes = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("test.append.tag"))).foreach { t =>
+          jobs.add((e.jobId, e.properties.getProperty("spark.sql.execution.id", ""), t))
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart
+            if x.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          writes.add(x.executionId.toString)
+        case _ => ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("test.append.tag", tag)
+      AnnIvf.appendIndex(spark, emb.filter(!half), path)
+      // the listener bus delivers in order: once the marker job shows,
+      // every event of the append has been seen
+      sc.setLocalProperty("test.append.tag", s"$tag-end")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 10000
+      def markerSeen = scala.jdk.CollectionConverters.CollectionHasAsScala(jobs).asScala
+        .exists(_._3 == s"$tag-end")
+      while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(markerSeen, "marker job never reached the listener")
+      val appendJobs = scala.jdk.CollectionConverters.CollectionHasAsScala(jobs).asScala
+        .toSeq.filter(_._3 == tag)
+      val isWrite = (j: (Int, String, String)) => writes.contains(j._2)
+      assert(appendJobs.exists(isWrite), s"no write job among $appendJobs")
+      val afterWrite = appendJobs.dropWhile(j => !isWrite(j)).filterNot(isWrite)
+      assert(afterWrite.isEmpty, s"jobs ${afterWrite.map(_._1)} ran after the write")
+    } finally {
+      sc.setLocalProperty("test.append.tag", null)
+      sc.removeSparkListener(listener)
+    }
+    AnnIvf.validateIndex(spark, path)
+    Hygiene.release(spark)
+  }
+
   test("rebuild with retain=2 leaves the superseded generation readable until the next gc") {
     val emb = Tables.embeddings(spark, TestSpark.sf0001).select("vec_id", "embedding")
     val path = java.nio.file.Files.createTempDirectory("ivf-retain").toString + "/ivf"

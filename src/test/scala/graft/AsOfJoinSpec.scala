@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Row
 import graft.operators.AsOfJoin
 
 class AsOfJoinSpec extends AnyFunSuite {

@@ -120,7 +120,7 @@ class CrossJoinBoundSpec extends AnyFunSuite {
       case _            => false
     }
     conjuncts(cond).exists {
-      case e @ EqualTo(l, r) =>
+      case EqualTo(l, r) =>
         (l.isInstanceOf[Literal] && (isQueryId(r) || isSplitTag(r))) ||
           (r.isInstanceOf[Literal] && (isQueryId(l) || isSplitTag(l)))
       case b: BinaryComparison =>

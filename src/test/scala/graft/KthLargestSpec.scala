@@ -14,7 +14,7 @@ class KthLargestSpec extends AnyFunSuite {
     // the merge path both run; duplicates included deliberately
     val rows = for {
       key <- 0 to 4
-      i <- 0 until 500
+      _ <- 0 until 500
     } yield (key.toLong, math.floor(rnd.nextDouble() * 100) / 10.0)
     val df = rows.toDF("qid", "v").repartition(16)
     for (k <- Seq(1, 7, 50)) {
@@ -74,7 +74,7 @@ class KthLargestSpec extends AnyFunSuite {
     // often; group 9 has fewer rows than any k
     val rows = (for {
       key <- 0 to 4
-      i <- 0 until 400
+      _ <- 0 until 400
     } yield (key.toLong, rnd.nextInt(100000).toLong, math.floor(rnd.nextDouble() * 100) / 10.0)) ++
       Seq((9L, 3L, 1.0), (9L, 1L, 1.0))
     val df = rows.toDF("qid", "vid", "v").repartition(16)

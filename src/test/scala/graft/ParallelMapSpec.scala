@@ -579,6 +579,42 @@ class ParallelMapSpec extends AnyFunSuite {
       .asScala.filter(t => t.isAlive && t.getName.contains(group))
     assert(named.isEmpty, s"live threads ${named.map(_.getName)} of abandoned $group")
   }
+
+  test("every mode's task counts and Spark job ids are exact when the call returns") {
+    import graft.operators.JobTracker
+    // read right after each call, no wait: a finished task's counts land
+    // before its result reaches the caller
+    def check(mode: String, tasks: Long, jobs: Int)(call: => Any): Unit = {
+      JobTracker.clearForTest()
+      call
+      val r = JobTracker.record(onlyGroup()).get
+      assert(r.nTasks == tasks, s"$mode: n_tasks ${r.nTasks}, expected $tasks")
+      assert(r.sparkJobIds.size == jobs, s"$mode: spark_job_ids ${r.sparkJobIds}")
+      assert(r.nFailedTasks == 0L, s"$mode: n_failed_tasks ${r.nFailedTasks}")
+      assert(r.taskTimeMs > 0L, s"$mode: task_time_ms ${r.taskTimeMs} for a sleeping UDF")
+    }
+    val sleepy = (x: Int) => { Thread.sleep(5); x }
+    val in = 0 until 12
+    val three = Some(3) // three slices on local[4]
+    check("run", 3, 1)(ParallelMap.run(spark, in, three)(sleepy))
+    check("runAttributed", 3, 1)(ParallelMap.runAttributed(spark, in, three)(sleepy))
+    check("runWithLogs", 3, 1)(ParallelMap.runWithLogs(spark, in, three)(sleepy))
+    check("runWithLiveLogs", 3, 1)(
+      ParallelMap.runWithLiveLogs(spark, in, three)(sleepy)((_, _) => ()))
+    check("stream", 3, 3)(ParallelMap.stream(spark, in, three)(sleepy).toList)
+    // three fan-out tasks, then three inner tasks, in one job
+    check("runNested", 6, 1)(ParallelMap.runNested(spark, in, three)(x => Seq(x, x))(sleepy))
+    check("detached", 3, 1)(ParallelMap.runDetached(spark, in, three)(sleepy).result())
+    // a failed call counts the tasks that never finished as failed
+    JobTracker.clearForTest()
+    intercept[UdfFailure] {
+      ParallelMap.run(spark, in, three)(x => if (x == 4) throw new IllegalStateException("4") else x)
+    }
+    val r = JobTracker.record(onlyGroup()).get
+    assert(r.status == JobTracker.Failed)
+    assert(r.nFailedTasks >= 1L && r.nTasks + r.nFailedTasks == 3L,
+      s"n_tasks ${r.nTasks}, n_failed_tasks ${r.nFailedTasks} of 3")
+  }
 }
 
 /** Cross-thread ordering probe for the live-relay spec: local-mode

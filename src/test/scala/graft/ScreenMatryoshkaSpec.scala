@@ -58,7 +58,6 @@ class ScreenMatryoshkaSpec extends AnyFunSuite {
     // anchor: pad the front half with the back half zeroed — dims 1..32
     // ARE the geometry, so the truncated search must reproduce the
     // padded-full answer identically
-    import spark.implicits._
     val padded = emb.select(col("vec_id"),
       concat(slice(col("embedding"), 1, 32),
         array((1 to 32).map(_ => lit(0.0f)): _*)).as("embedding"))

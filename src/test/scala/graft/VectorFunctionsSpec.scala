@@ -77,7 +77,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, TestSpark.sf0001).select("vec_id", "embedding")
     val scale = VectorFunctions.int8Scale(col("embedding"))
     val q = VectorFunctions.int8Quantize(col("embedding"), scale)
-    val deq = VectorFunctions.int8Dequantize(q, scale)
     val checked = emb.select(
       col("vec_id"),
       (VectorFunctions.int8MaxError(col("embedding"), scale) <= scale * 0.5000001d).as("err_ok"),
