@@ -437,52 +437,18 @@ object AnnIvf {
     }
   }
 
-  /** Writer-side cross-batch cache for the streaming vector ingest —
-    * the LlmOps.DedupIndexHandle discipline applied to the IVF loop:
-    * one directory listing per batch as the staleness probe (catching a
-    * between-batches [[rebuildIndex]], whose new quantizer MUST be
-    * picked up), otherwise the cached snapshot and — crucially — the
-    * already-collected centroid matrix are reused: an append never
-    * changes the quantizer, so the post-commit update keeps the loaded
-    * centroids and only advances the snapshot. Dies with its stream
-    * incarnation; recovery re-resolves from disk. */
-  final class IngestHandle(path: String) {
-    import SnapshotLog.Snapshot
-    private var cached: Option[(Int, Snapshot, Seq[Array[Double]])] = None
-    private var probed: Int = 0
-    def resolve(spark: SparkSession): (Snapshot, Seq[Array[Double]]) = synchronized {
-      probed = L.latestVersion(spark, path)
-      cached match {
-        case Some((v, sn, cs)) if v == probed => (sn, cs)
-        case _ =>
-          val sn = L.current(spark, path, IndexKind)
-          val cdirs = sn.dirs(path, "centroids")
-          require(cdirs.nonEmpty, s"IVF index at $path references no centroid generation")
-          val cs = loadCentroids(spark, cdirs.head)
-          cached = Some((probed, sn, cs))
-          (sn, cs)
-      }
-    }
-    def nextVersionFromProbe: Int = synchronized { probed + 1 }
-    def committed(sn: Snapshot): Unit = synchronized {
-      cached = cached.map { case (_, _, cs) => (sn.version, sn, cs) }
-    }
-  }
+  /** The streaming vector ingest's cross-batch view of the index: the
+    * snapshot plus the collected centroid matrix. The per-batch probe
+    * catches a between-batches [[rebuildIndex]], whose new quantizer MUST
+    * be picked up; an append never changes the quantizer, so the writer's
+    * own commits keep the loaded centroids. */
+  private[graft] def ingestCache(path: String): SnapshotLog.Cached[Seq[Array[Double]]] =
+    new L.Cached[Seq[Array[Double]]](path, IndexKind, (spark, sn) => {
+      val cdirs = sn.dirs(path, "centroids")
+      require(cdirs.nonEmpty, s"IVF index at $path references no centroid generation")
+      loadCentroids(spark, cdirs.head)
+    }, keepOnCommit = true)
 
-  /** [[appendIndex]] as one micro-batch of a STREAMING vector ingest —
-    * the embedding twin of the dedup loop's ingestBatch protocol, same
-    * three steps: skip if this batchId's `last_batch` marker is already
-    * committed (the previous attempt fully landed; only the stream's
-    * checkpoint advance was lost); otherwise assign against the frozen
-    * quantizer into the idempotent `batch-<id>` directory (a replay
-    * rewrites the same tag) and commit one manifest referencing it with
-    * the marker. A crash before the commit leaves the directory
-    * unreferenced and invisible; after it, the replay skips. Batch ids
-    * are scoped to one stream checkpoint (single-writer), and a fresh
-    * incarnation replaying ids against an existing index is REFUSED
-    * before any write — the requireFreshBatchTag discipline. Through a
-    * `handle` the per-batch manifest reads and the centroid re-collect
-    * collapse to one directory listing (the r9 floor-trim discipline). */
   /** Why a vector may NOT enter the store, or NULL when admissible —
     * the INTRINSIC validity gate: null embedding, wrong dimensionality
     * for this index, or a non-finite element (a NaN-poisoned vector
@@ -519,44 +485,26 @@ object AnnIvf {
       .otherwise(lit(null).cast("string"))
   }
 
+  /** [[appendIndex]] as one micro-batch of a STREAMING vector ingest,
+    * exactly once under [[SnapshotLog.replayGate]]'s protocol with the
+    * `last_batch` marker: assign against the frozen quantizer into the
+    * idempotent `batch-<id>` directory and commit one manifest referencing
+    * it with the marker. Pass the stream's [[ingestCache]] as `cache`;
+    * without one the call resolves the index from disk. */
   def appendIndexBatch(
       spark: SparkSession,
       batch: DataFrame,
       path: String,
       batchId: Long,
-      handle: Option[IngestHandle] = None,
+      cache: Option[SnapshotLog.Cached[Seq[Array[Double]]]] = None,
       rejectDir: Option[String] = None
   ): Unit = {
-    val (snap, cs) = handle match {
-      case Some(h) => h.resolve(spark)
-      case None =>
-        val sn = L.current(spark, path, IndexKind)
-        (sn, loadCentroids(spark, sn.dirs(path, "centroids").head))
-    }
-    if (!snap.props.get("last_batch").contains(batchId.toString)) {
-      val tag = s"batch-$batchId"
-      // ids within one checkpoint are monotonic and every batch commit
-      // advances the marker, so an id below it is a fresh incarnation
-      // even when its tag has since been compacted away — the
-      // requireMonotonicBatchId discipline from the dedup loop
-      snap.props.get("last_batch").map(_.toLong).foreach { hw =>
-        require(
-          batchId > hw,
-          s"batch id $batchId is below the committed high-water mark $hw of $path: " +
-            "a new stream incarnation (fresh checkpoint) is replaying batch ids " +
-            "against an existing index — resume from the original checkpoint, or " +
-            "point the stream at a fresh index"
-        )
-      }
-      require(
-        !snap.tables.valuesIterator.exists(_.contains(tag)),
-        s"batch tag '$tag' is already committed in snapshot v${snap.version} of $path: " +
-          "a new stream incarnation (fresh checkpoint) is replaying batch ids " +
-          "against an existing index — resume from the original checkpoint, or " +
-          "point the stream at a fresh index"
-      )
-      // one source read per batch (the ingestBatch pin), gated by the
-      // intrinsic validity check BEFORE anything touches the store
+    val index = cache.getOrElse(ingestCache(path))
+    val (snap, cs) = index.resolve(spark)
+    val tag = s"batch-$batchId"
+    if (L.replayGate(snap, path, "IVF index", "last_batch", batchId, Some(tag))) {
+      // one source read per batch, gated by the intrinsic validity check
+      // BEFORE anything touches the store
       val pinned = batch
         .withColumn("__reject", vectorRejectReason(cs.head.length))
         .localCheckpoint(true)
@@ -584,33 +532,24 @@ object AnnIvf {
               "pass a reject ledger (rejectDir) to park malformed rows, or clean the feed"
           )
       }
+      // the pinned batch's count IS the written dir's count (deterministic
+      // write), and counting the checkpoint blocks costs no file reads
       val added = valid.count()
-      // an all-rejected (or empty) batch still advances the replay
-      // marker — the empty-admission discipline from the dedup loop —
+      // an all-rejected (or empty) batch still advances the replay marker
       // but commits NO vector directory: a zero-row partitionBy write
       // materializes no data files, and a tag over a fileless directory
       // would fail every later schema-inferring read of the store
-      val newSnap =
-        if (added == 0L)
-          commitIndex(spark, path,
-            handle.map(_.nextVersionFromProbe).getOrElse(L.nextVersion(spark, path)),
-            snap.tables, Map("last_batch" -> batchId.toString),
-            resolved = Some(snap), addedRows = Some(0L))
+      val tables =
+        if (added == 0L) snap.tables
         else {
           valid
             .withColumn("cluster", nearestCentroidCol(cs))
             .write.mode("overwrite").partitionBy("cluster")
             .parquet(L.dataDir(path, "vectors", tag))
-          commitIndex(spark, path,
-            handle.map(_.nextVersionFromProbe).getOrElse(L.nextVersion(spark, path)),
-            snap.tables + ("vectors" -> (snap.tables.getOrElse("vectors", Nil) :+ tag)),
-            Map("last_batch" -> batchId.toString), resolved = Some(snap),
-            // the pinned batch's count IS the written dir's count
-            // (deterministic write), and counting the checkpoint blocks
-            // costs no file reads
-            addedRows = Some(added))
+          snap.tables + ("vectors" -> (snap.tables.getOrElse("vectors", Nil) :+ tag))
         }
-      handle.foreach(_.committed(newSnap))
+      index.committed(spark, commitIndex(spark, path, index.nextVersion, tables,
+        Map("last_batch" -> batchId.toString), resolved = Some(snap), addedRows = Some(added)))
     }
   }
 
@@ -660,16 +599,15 @@ object AnnIvf {
   private def readVectors(spark: SparkSession, path: String, tags: Seq[String]): DataFrame =
     tags.map(t => spark.read.parquet(L.dataDir(path, "vectors", t))).reduce(_ unionByName _)
 
-  /** One manifest PUT. The `rows` prop is maintained INCREMENTALLY when
-    * the caller knows its delta (`addedRows`): an append's commit then
-    * costs `prior + added` — two longs — where the old form re-counted
-    * parquet footers across EVERY referenced vector directory, an
-    * O(generations-since-rebuild) walk that made the per-batch ingest
-    * floor creep one generation per batch (the measured ~3.0→3.9 s drift
-    * the r9 soak recorded). Full physical recounts remain exactly where
+  /** One manifest PUT, carrying the superseded snapshot's replay markers
+    * ([[SnapshotLog.prior]]). The `rows` prop is maintained
+    * INCREMENTALLY when the caller knows its delta (`addedRows`): an
+    * append's commit then costs `prior + added` — two longs — where a
+    * recount of the parquet footers across EVERY referenced vector
+    * directory would make the per-batch ingest floor creep one generation
+    * per batch. Full physical recounts remain exactly where
     * reconciliation belongs: bootstrap/rebuild (fresh single-generation
-    * store, `addedRows = None`) and [[validateIndex]]'s cold open —
-    * the dedup loop's carried-props discipline applied to counts. */
+    * store, `addedRows = None`) and [[validateIndex]]'s cold open. */
   private def commitIndex(
       spark: SparkSession,
       path: String,
@@ -679,23 +617,13 @@ object AnnIvf {
       resolved: Option[SnapshotLog.Snapshot] = None,
       addedRows: Option[Long] = None
   ): SnapshotLog.Snapshot = {
-    // carry the stream's replay-skip marker across non-stream commits
-    // (a manual appendIndex/rebuild between micro-batches must not erase
-    // it — the compactDedupIndex carry-forward discipline); the per-batch
-    // path hands in its already-resolved snapshot
-    val priorProps = resolved
-      .map(_.props)
-      .getOrElse(
-        try L.current(spark, path, IndexKind).props
-        catch { case _: Throwable => Map.empty[String, String] }
-      )
-    val carried = priorProps.view.filterKeys(_ == "last_batch").toMap
+    val prior = L.prior(spark, path, IndexKind, resolved)
     val rows = addedRows match {
-      case Some(a) if priorProps.contains("rows") => priorProps("rows").toLong + a
+      case Some(a) if prior.props.contains("rows") => prior.props("rows").toLong + a
       case _ => readVectors(spark, path, tables.getOrElse("vectors", Nil)).count()
     }
     L.commit(spark, path, IndexKind, v,
-      tables, carried ++ Map("rows" -> rows.toString) ++ extra)
+      tables, prior.markers ++ Map("rows" -> rows.toString) ++ extra)
   }
 
   /** Cold-open validation of a persisted index: quantizer artifact,

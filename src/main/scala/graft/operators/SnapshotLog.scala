@@ -5,8 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Versioned snapshot log for MUTABLE index artifacts — the table-format
   * commit discipline (Iceberg/Delta's, scaled down to a properties file)
-  * that [[graft.queries.LlmOps.ingestBatch]]'s scaladoc promised for
-  * object stores: readers resolve data through a manifest, never through
+  * for object stores: readers resolve data through a manifest, never through
   * a directory listing, so a commit is ONE small-file PUT and the
   * protocol needs no atomic rename anywhere.
   *
@@ -25,8 +24,7 @@ import org.apache.spark.sql.SparkSession
   *     fails its own checksum and readers fall back to the previous valid
   *     version — the failure mode of a non-atomic object-store PUT is
   *     "commit didn't happen", never "half a commit".
-  *   - Single writer per artifact (the same assumption the rename-based
-  *     r7 protocol documented); [[gc]] runs inside that writer, on the
+  *   - Single writer per artifact; [[gc]] runs inside that writer, on the
   *     compaction cadence, and retires unreferenced data directories,
   *     superseded manifests, and torn manifest files.
   *
@@ -37,7 +35,8 @@ import org.apache.spark.sql.SparkSession
   * Here torn state is structurally invisible, so recovery logic shrinks
   * to "retry the write"; the reference's analogous contract is the
   * exactly-once input-steal/ACK semantics its scenario tests pin
-  * (reference: tests/scenarios/test_input_steal_semantics.py).
+  * (reference: tests/scenarios/test_input_steal_semantics.py). Streaming
+  * writers run that contract through [[replayGate]].
   */
 object SnapshotLog {
   private val Prefix = "manifest.v"
@@ -47,7 +46,76 @@ object SnapshotLog {
   final case class Snapshot(version: Int, tables: Map[String, Seq[String]], props: Map[String, String]) {
     def dirs(root: String, table: String): Seq[String] =
       tables.getOrElse(table, Nil).map(tag => dataDir(root, table, tag))
+
+    /** The writers' replay markers (`last_batch`, `last_drain`): every
+      * commit carries them forward, so a compaction, rebuild or drain
+      * between micro-batches never erases another writer's replay skip. */
+    def markers: Map[String, String] = props.filter(_._1.startsWith("last_"))
   }
+
+  /** The snapshot a writer's next commit supersedes: `resolved` when the
+    * writer already holds it, else the current one on disk, or an empty
+    * version-0 snapshot when `root` has no valid manifest yet (a fresh
+    * root). Only that absence is tolerated: a failed read or a root of
+    * another kind propagates, because committing without the carried
+    * markers would make the stream's next committed replay re-append. */
+  def prior(s: SparkSession, root: String, kind: String, resolved: Option[Snapshot]): Snapshot =
+    resolved.getOrElse {
+      try current(s, root, kind)
+      catch { case _: ArtifactManifest.Missing => Snapshot(0, Map.empty, Map.empty) }
+    }
+
+  /** The exactly-once gate of one streamed micro-batch: true when batch
+    * `id` must run, false when it already committed. Every streaming
+    * writer on the log runs the same protocol:
+    *
+    *   1. SKIP if committed: the snapshot's `marker` property, committed
+    *      atomically with the data directories it describes (one manifest
+    *      file), equals `id` ⇒ the previous attempt fully committed and
+    *      only the stream's checkpoint advance was lost.
+    *   2. Otherwise compute against this snapshot and land outputs by
+    *      per-id OVERWRITE (verdict partitions, `<tag>` data directories):
+    *      a replay rewrites the same files.
+    *   3. COMMIT one manifest referencing the new directories with
+    *      `marker=<id>`. A crash before the commit replays into 2 against
+    *      the unchanged snapshot, where the partial write is unreferenced
+    *      and so invisible; a crash after it replays into the skip at 1.
+    *      A batch that adds nothing still commits the marker.
+    *
+    * Ids are scoped to ONE writer (one stream checkpoint, one drain
+    * sequence) and monotonic, and every commit advances the marker, so
+    * two inputs are refused BEFORE any write, where a fresh incarnation
+    * (new checkpoint) or a second writer would otherwise silently
+    * overwrite the original's outputs:
+    *   - an id below the marker's high-water mark — a genuine replay is
+    *     always of the marker id itself;
+    *   - a `tag` some table of the snapshot already lists: its overwrite
+    *     would destroy committed data and the append would list the tag
+    *     twice. This is safety code behind the first refusal (a replay
+    *     of the marker id skips before it).
+    * `what` names the artifact at `root` in both messages. */
+  def replayGate(
+      snap: Snapshot,
+      root: String,
+      what: String,
+      marker: String,
+      id: Long,
+      tag: Option[String] = None
+  ): Boolean =
+    !snap.props.get(marker).contains(id.toString) && {
+      val noun = marker.stripPrefix("last_")
+      val why = s"$noun ids are monotonic per writer, so this is a new stream incarnation " +
+        s"(fresh checkpoint) or a second writer replaying ids — resume from the original " +
+        s"checkpoint, or point the writer at a fresh $what"
+      snap.props.get(marker).map(_.toLong).foreach { hw =>
+        require(id > hw, s"$noun id $id is below the committed high-water mark $hw of the $what at $root: $why")
+      }
+      tag.foreach { t =>
+        require(!snap.tables.valuesIterator.exists(_.contains(t)),
+          s"$noun tag '$t' is already committed in snapshot v${snap.version} of the $what at $root: $why")
+      }
+      true
+    }
 
   /** Absolute path of one table data directory. */
   def dataDir(root: String, table: String, tag: String): String =
@@ -83,8 +151,8 @@ object SnapshotLog {
   def latestVersion(s: SparkSession, root: String): Int =
     listManifests(s, root).lastOption.map(_._1).getOrElse(0)
 
-  /** Version-keyed cached resolution for an artifact a LONG-LIVED reader
-    * (a streaming foreachBatch loop) consults on every batch: each `get`
+  /** Version-keyed cached resolution for an artifact a LONG-LIVED loop
+    * (a streaming foreachBatch) consults on every batch: each resolve
     * costs one directory listing ([[latestVersion]]); the full manifest
     * parse + `build` (frame construction, validation) re-runs ONLY when a
     * new manifest file has appeared — so an in-flight stream picks up a
@@ -95,25 +163,60 @@ object SnapshotLog {
     * valid snapshot below it and is then served from cache), and the
     * crashed writer's retry at a higher number re-keys it again —
     * torn state never turns into per-call rebuilds or errors
-    * (SnapshotLogSpec pins all three transitions). Thread-safe; one
-    * instance per (stream, artifact). */
-  final class Cached[T](root: String, kind: String, build: (SparkSession, Snapshot) => T) {
-    @volatile private var state: Option[(Int, T)] = None
-    def get(s: SparkSession): T = {
+    * (SnapshotLogSpec pins all three transitions).
+    *
+    * The writer half serves a loop that is the artifact's single writer:
+    * the resolve probe also prices its next commit ([[nextVersion]]), and
+    * [[committed]] installs the writer's own commit, which is current by
+    * the single-writer argument, so the next batch reads no manifest.
+    * `keepOnCommit` keeps the built value across those installs (for a
+    * writer whose commits never change what `build` derives); otherwise
+    * it is rebuilt from the new snapshot. NOT crash state: a cache lives
+    * and dies with its stream incarnation, and recovery re-resolves from
+    * disk. Thread-safe; one instance per (stream, artifact). */
+  final class Cached[T](
+      root: String,
+      kind: String,
+      build: (SparkSession, Snapshot) => T,
+      keepOnCommit: Boolean = false
+  ) {
+    @volatile private var state: Option[(Int, Snapshot, T)] = None
+    @volatile private var probed = 0
+
+    def get(s: SparkSession): T = resolve(s)._2
+
+    /** The current snapshot and its built value. */
+    def resolve(s: SparkSession): (Snapshot, T) = {
       val present = latestVersion(s, root)
+      probed = present
       state match {
-        case Some((v, t)) if v == present => t
+        case Some((v, sn, t)) if v == present => (sn, t)
         case _ =>
           synchronized {
             state match {
-              case Some((v, t)) if v == present => t
+              case Some((v, sn, t)) if v == present => (sn, t)
               case _ =>
-                val t = build(s, current(s, root, kind))
-                state = Some((present, t))
-                t
+                val sn = current(s, root, kind)
+                val t = build(s, sn)
+                state = Some((present, sn, t))
+                (sn, t)
             }
           }
       }
+    }
+
+    /** The version the writer's next commit must use: one past the highest
+      * manifest PRESENT at the last [[resolve]] (torn files count — their
+      * numbers are burned). Nothing else writes in between (single writer). */
+    def nextVersion: Int = probed + 1
+
+    /** Install the snapshot this writer just committed. */
+    def committed(s: SparkSession, sn: Snapshot): Unit = synchronized {
+      val t = state match {
+        case Some((_, _, t)) if keepOnCommit => t
+        case _ => build(s, sn)
+      }
+      state = Some((sn.version, sn, t))
     }
   }
 
@@ -284,8 +387,7 @@ object SnapshotLog {
     *
     * `retain = 1` (the default) keeps only the current snapshot — a
     * reader holding a pre-GC DataFrame across a compaction must
-    * re-resolve, same semantics as the r7 swap's immediate `.old` delete.
-    * A multi-reader deployment raises `retain` so a reader that resolved
+    * re-resolve. A multi-reader deployment raises `retain` so a reader that resolved
     * up to `retain - 1` commits ago still finds its directories on disk;
     * the retention window is then "`retain - 1` compactions of grace",
     * which the deployment sizes against its longest query. Data dirs

@@ -1125,8 +1125,7 @@ object LlmOps {
     * write-once manifest: readers resolve data directories through the
     * highest valid snapshot manifest, a commit is one small-file PUT, and
     * no step of any mutator renames anything — the protocol runs
-    * unchanged on a raw object store (the r8 residue item the rename
-    * publish left open). */
+    * unchanged on a raw object store. */
   private val DedupKind = "dedup-index"
 
   /** Write a fresh dedup index artifact pair under `path` as snapshot
@@ -1147,10 +1146,11 @@ object LlmOps {
     * driver ([[graft.operators.ArtifactManifest.tableRows]]) and submits
     * no Spark job; an unreadable footer (a truncated part file) fails the
     * commit instead of counting as zero rows. `extra` lets the streaming
-    * ingest land its batch marker atomically with the data it describes;
-    * an existing `last_batch` is carried forward by every OTHER mutator
-    * (append/compact between micro-batches must not erase the stream's
-    * replay-skip evidence).
+    * writers land their marker atomically with the data it describes;
+    * the superseded snapshot's markers ([[graft.operators.SnapshotLog
+    * .prior]]) ride through every commit, so a compaction or drain never
+    * erases the stream's `last_batch`, nor a batch the drain's
+    * `last_drain`.
     *
     * The recount is deliberately FULL, not incremental (prev + delta):
     * per-commit cost is O(directories since last compaction) footer
@@ -1169,18 +1169,6 @@ object LlmOps {
       resolved: Option[graft.operators.SnapshotLog.Snapshot] = None
   ): graft.operators.SnapshotLog.Snapshot = {
     val L = graft.operators.SnapshotLog
-    // the per-batch paths hand in the snapshot they already resolved;
-    // only cold mutators (saveDedupIndex on a fresh root) re-read.
-    // BOTH replay-skip markers ride through every other mutator: a
-    // compaction or drain must not erase the stream's last_batch, and a
-    // stream batch or compaction must not erase the drain's last_drain.
-    val markers = Set("last_batch", "last_drain")
-    val carried = resolved
-      .map(_.props.view.filterKeys(markers).toMap)
-      .getOrElse(
-        try L.current(s, path, DedupKind).props.view.filterKeys(markers).toMap
-        catch { case _: Throwable => Map.empty[String, String] }
-      )
     def rows(table: String) = graft.operators.ArtifactManifest
       .tableRows(s, tables(table).map(L.dataDir(path, table, _)): _*).toString
     L.commit(
@@ -1189,7 +1177,7 @@ object LlmOps {
       DedupKind,
       version,
       tables,
-      carried ++ Map(
+      L.prior(s, path, DedupKind, resolved).markers ++ Map(
         "simhash_bits" -> simhashBits.toString,
         "bands" -> (simhashBits / (hammingRadius + 1)).toString,
         "hash_rows" -> rows("hash"),
@@ -1202,10 +1190,9 @@ object LlmOps {
   private def dedupSnapshot(s: SparkSession, path: String): graft.operators.SnapshotLog.Snapshot =
     graft.operators.SnapshotLog.current(s, path, DedupKind)
 
-  /** Geometry-checked table frames off an ALREADY-RESOLVED snapshot — the
-    * trusted-read body shared by the per-batch paths, so one resolution
-    * serves the committed-check, the frames, and the commit's carried
-    * props instead of three separate manifest reads. */
+  /** Geometry-checked table frames off an ALREADY-RESOLVED snapshot —
+    * the trusted read of the per-batch paths: full row-count validation
+    * stays at stream start ([[loadDedupIndex]]). */
   private def trustedFrames(
       s: SparkSession,
       path: String,
@@ -1220,54 +1207,15 @@ object LlmOps {
     (read("hash", "th STRING"), read("bands", "doc_id BIGINT, simhash BIGINT, b INT, bv BIGINT"))
   }
 
-  /** Writer-side cross-batch snapshot cache for the streaming ingest
-    * loop — the r8 per-batch-floor trim: the stream is the index's
-    * SINGLE WRITER, so after its own commit the just-committed snapshot
-    * IS current. Per batch the handle spends ONE directory listing
-    * (SnapshotLog.latestVersion) to detect the only sanctioned
-    * out-of-loop mutation — a maintenance compaction between
-    * micro-batches — and otherwise serves the cached snapshot + table
-    * frames with no manifest read, no parse, and no data-dir re-listing;
-    * the probe's version also prices the next commit
-    * ([[nextVersionFromProbe]]), folding away the second listing
-    * `nextVersion` would spend. Geometry is re-checked on every true
-    * (re)load; full row-count validation stays at stream start
-    * (loadDedupIndex), the trusted-read discipline. NOT crash state: a
-    * handle lives and dies with its stream incarnation — recovery
-    * re-resolves from disk, which is the whole point of the snapshot
-    * log. */
-  private[graft] final class DedupIndexHandle(path: String) {
-    import graft.operators.SnapshotLog.Snapshot
-    private val L = graft.operators.SnapshotLog
-    private var cached: Option[(Int, Snapshot, DataFrame, DataFrame)] = None
-    private var probed: Int = 0
+  /** A streaming writer's cross-batch view of a dedup index: the snapshot
+    * plus its trusted (hash, bands) frames, re-read only when another
+    * mutator (a maintenance compaction between micro-batches) committed,
+    * and rebuilt over the writer's own commits. */
+  private[graft] type DedupCache = graft.operators.SnapshotLog.Cached[(DataFrame, DataFrame)]
 
-    /** (snapshot, hash frame, bands frame) at this batch's start. */
-    def resolve(s: SparkSession): (Snapshot, DataFrame, DataFrame) = synchronized {
-      probed = L.latestVersion(s, path)
-      cached match {
-        case Some((v, sn, h, b)) if v == probed => (sn, h, b)
-        case _ =>
-          val sn = L.current(s, path, DedupKind)
-          val (h, b) = trustedFrames(s, path, sn)
-          cached = Some((probed, sn, h, b))
-          (sn, h, b)
-      }
-    }
-
-    /** The version this batch's commit must use: one past the highest
-      * manifest PRESENT at the resolve probe (torn files count — their
-      * numbers are burned). Call only after [[resolve]] in the same
-      * batch; nothing else writes between them (single-writer). */
-    def nextVersionFromProbe: Int = synchronized { probed + 1 }
-
-    /** Install the snapshot this writer just committed: it is current by
-      * the single-writer argument, no disk round-trip needed. */
-    def committed(s: SparkSession, sn: Snapshot): Unit = synchronized {
-      val (h, b) = trustedFrames(s, path, sn)
-      cached = Some((sn.version, sn, h, b))
-    }
-  }
+  private[graft] def dedupCache(path: String): DedupCache =
+    new graft.operators.SnapshotLog.Cached[(DataFrame, DataFrame)](
+      path, DedupKind, (s, sn) => trustedFrames(s, path, sn))
 
   /** Reload a dedup index written by saveDedupIndex. Snapshot-validated:
     * kind, banding geometry (an index banded for a different Hamming
@@ -1304,16 +1252,12 @@ object LlmOps {
     * INSIDE the API — the rows are materialized on the executors before
     * the first file mutates — so the trap cannot reach callers; the
     * checkpoint is linear in the batch, the same cost class as the append
-    * itself. (An ingest that has already LANDED its accepted docs — the
-    * corpus write it performs anyway — pays nothing extra here beyond a
-    * re-read of the landed files.)
+    * itself.
     *
     * CRASH SAFETY is the snapshot log's: the batch's hash/band rows land
     * in fresh `append-v<N>` data directories that no reader resolves
-    * until the version-N manifest commits — the r7 protocol's careful
-    * bands-before-hash ordering and detect-then-re-append recovery both
-    * dissolve, because torn state is structurally invisible; recovery is
-    * simply "call append again". Duplicate rows from a retried append
+    * until the version-N manifest commits, so torn state is invisible and
+    * recovery is "call append again". Duplicate rows from a retried append
     * stay harmless by construction (admission dedups the hash side at
     * join time; duplicate band rows only repeat a candidate pair), and
     * compactDedupIndex's distinct() retires them on the normal
@@ -1322,25 +1266,25 @@ object LlmOps {
     val s = admitted.sparkSession
     val snap = dedupSnapshot(s, path)
     val kept = fingerprints(admitted).localCheckpoint(true) // the lineage cut
-    appendAndCommit(s, path, snap, kept,
-      s"append-v${graft.operators.SnapshotLog.nextVersion(s, path)}", Map.empty, None)
+    val v = graft.operators.SnapshotLog.nextVersion(s, path)
+    appendAndCommit(s, path, snap, kept, s"append-v$v", v, Map.empty): Unit
   }
 
   /** The one append-and-commit tail of every index mutator that adds
     * documents: write the index parts of `kept` (a PINNED fingerprint
     * frame — see [[fingerprints]] — so nothing here re-reads the index or
-    * the source) into `tag` directories, then commit one manifest that
-    * references them plus `marker`. An empty `kept` commits the marker
-    * alone: the batch happened, its replay must skip. */
+    * the source) into `tag` directories, then commit `version` referencing
+    * them plus `marker`. An empty `kept` commits the marker alone: the
+    * batch happened, its replay must skip. */
   private def appendAndCommit(
       s: SparkSession,
       path: String,
       snap: graft.operators.SnapshotLog.Snapshot,
       kept: DataFrame,
       tag: String,
-      marker: Map[String, String],
-      handle: Option[DedupIndexHandle]
-  ): Unit = {
+      version: Int,
+      marker: Map[String, String]
+  ): graft.operators.SnapshotLog.Snapshot = {
     val L = graft.operators.SnapshotLog
     val tables =
       if (kept.isEmpty) snap.tables
@@ -1351,100 +1295,81 @@ object LlmOps {
         Map("hash" -> (snap.tables.getOrElse("hash", Nil) :+ tag),
             "bands" -> (snap.tables.getOrElse("bands", Nil) :+ tag))
       }
-    val newSnap = commitDedupSnapshot(
-      s, path, handle.map(_.nextVersionFromProbe).getOrElse(L.nextVersion(s, path)),
-      tables, marker, resolved = Some(snap))
-    handle.foreach(_.committed(s, newSnap))
+    commitDedupSnapshot(s, path, version, tables, marker, resolved = Some(snap))
   }
 
-  /** ONE resolution serves a whole batch (committed-check, trusted
-    * frames, the commit's carried props); through a handle it is one
-    * cached directory listing instead of a manifest read. */
-  private def resolveIndex(
+  /** The one exactly-once body of the three dedup-index stream writers
+    * ([[ingestBatch]], [[pipelineBatch]], [[drainQuarantine]]), run under
+    * [[graft.operators.SnapshotLog.replayGate]]'s protocol for batch `id`
+    * under `marker` (`last_batch` or `last_drain`, tag `batch-<id>` or
+    * `drain-<id>`): resolve the index through `cache` (a fresh one
+    * resolves from disk), gate, pin the verdicts `score` computes against
+    * the resolved snapshot and frames, overwrite the verdict partition
+    * `out`, then append the `admit` rows' index parts and commit them
+    * with the marker.
+    *
+    * The verdicts are the pre-append view, pinned before any index file
+    * mutates: the verdict partition is their projection (fingerprint
+    * columns dropped) and the index parts their admitted rows, so nothing
+    * re-reads the index or fingerprints twice. Batch-sized pins, freed by
+    * the ContextCleaner when the foreachBatch closure returns (the
+    * Hygiene release path).
+    *
+    * `ledger` (a verdict-only stream's verdict directory) leaves the index
+    * read-only — possibly another writer's — so neither the marker nor
+    * the refusals could see the stream's history there: the gate reads
+    * the ledger under `<ledger>/_ledger` instead, and the batch commits
+    * there rather than into the index. */
+  private def runBatch(
       s: SparkSession,
       indexPath: String,
-      handle: Option[DedupIndexHandle]
-  ): (graft.operators.SnapshotLog.Snapshot, DataFrame, DataFrame) =
-    handle match {
-      case Some(h) => h.resolve(s)
-      case None =>
-        val sn = dedupSnapshot(s, indexPath)
-        val (h, b) = trustedFrames(s, indexPath, sn)
-        (sn, h, b)
+      cache: Option[DedupCache],
+      marker: String,
+      id: Long,
+      out: String,
+      admit: String,
+      ledger: Option[String] = None
+  )(score: (graft.operators.SnapshotLog.Snapshot, DataFrame, DataFrame) => DataFrame): Unit = {
+    val L = graft.operators.SnapshotLog
+    val index = cache.getOrElse(dedupCache(indexPath))
+    val (snap, (hash, bands)) = index.resolve(s)
+    val tag = s"${marker.stripPrefix("last_")}-$id"
+    val runs = ledger match {
+      case None => L.replayGate(snap, indexPath, "dedup index", marker, id, Some(tag))
+      case Some(dir) =>
+        L.replayGate(L.prior(s, ledgerRoot(dir), VerdictLedgerKind, None), ledgerRoot(dir),
+          "verdict ledger", marker, id)
     }
+    if (runs) {
+      val verdicts = score(snap, hash, bands).localCheckpoint(true)
+      verdicts.drop("th", "simhash").write.mode("overwrite").parquet(out)
+      ledger match {
+        case None =>
+          index.committed(s, appendAndCommit(s, indexPath, snap, verdicts.filter(col(admit)), tag,
+            index.nextVersion, Map(marker -> id.toString)))
+        case Some(dir) => ledgerCommit(s, dir, id)
+      }
+    }
+  }
 
-  /** One micro-batch of the streaming ingest-admission loop, as a
-    * CRASH-SAFE commit protocol — the foreachBatch body of
-    * [[graft.streaming.EventStream.ingestGuard]], factored here beside the
-    * index it mutates. The r7 version enumerated and UNDID a torn
-    * publish's renamed files before every replay; on the snapshot log the
-    * hazard that undo existed for — a replayed batch recomputing verdicts
-    * against an index already holding its own partial append, flagging
-    * its documents as duplicates OF THEMSELVES — cannot arise, because a
-    * partial append is unreferenced by any committed manifest and
-    * therefore invisible to the verdict read. The protocol is three
-    * steps:
-    *
-    *   1. SKIP if committed: the current snapshot's `last_batch` property
-    *      (committed atomically with the data directories it describes —
-    *      one manifest file) equals this batchId ⇒ the previous attempt
-    *      fully committed and only the stream's checkpoint advance was
-    *      lost; every on-disk effect is already in place, do nothing.
-    *   2. Verdicts against the current snapshot (always clean by
-    *      construction), landed by per-batch OVERWRITE into
-    *      `verdictDir/batch_id=<id>` (a partition directory: replay
-    *      rewrites the same files — exactly-once verdicts for downstream
-    *      readers, not at-least-once).
-    *   3. Write the admitted rows' hash/band parts into `batch-<id>` data
-    *      directories (mode overwrite — a replay rewrites the same tag
-    *      idempotently), then COMMIT one manifest referencing them with
-    *      `last_batch=<id>`. A crash before the commit replays into 2
-    *      against the unchanged previous snapshot; a crash after it
-    *      replays into the skip at 1. An EMPTY admitted set still commits
-    *      the marker — the batch happened, its replay must skip.
-    *
-    * One writer per index: batch ids are scoped to the stream's own
-    * checkpoint (same assumption the r7 loop made; a second concurrent
-    * ingest against one index needs a coordinator either way). */
+  /** One micro-batch of the streaming ingest-admission loop — the
+    * foreachBatch body of [[graft.streaming.EventStream.ingestGuard]],
+    * factored here beside the index it mutates: dedup verdicts land in
+    * `verdictDir/batch_id=<id>` and the kept docs extend the index, exactly
+    * once under [[runBatch]]. Each arrival is read and fingerprinted ONCE:
+    * the pin holds (doc_id, th, simhash), not the text. */
   private[graft] def ingestBatch(
       batch: DataFrame,
       indexPath: String,
       verdictDir: String,
       batchId: Long,
       maintainIndex: Boolean,
-      handle: Option[DedupIndexHandle] = None
-  ): Unit = {
-    val s = batch.sparkSession
-    val (snap, hash, bands) = resolveIndex(s, indexPath, handle)
-    val committed =
-      if (maintainIndex) snap.props.get("last_batch").contains(batchId.toString)
-      else !ledgerAdmits(s, verdictDir, batchId) // verdict-only: the _ledger governs
-    if (!committed) {
-      val tag = s"batch-$batchId"
-      // BEFORE the verdict write: the doomed batch must not stomp the
-      // original incarnation's verdict partition on its way to the refusal
-      if (maintainIndex) {
-        requireMonotonicBatchId(snap, batchId, indexPath)
-        requireFreshBatchTag(snap, tag, indexPath)
-      }
-      // each arrival is read and fingerprinted ONCE: the pin holds
-      // (doc_id, th, simhash), not the text, and every later consumer
-      // reads pinned blocks instead of re-running the source read
-      val fps = fingerprints(batch).localCheckpoint(true)
-      // ONE scored frame is the pre-append view: the verdict partition is
-      // its projection, the index parts its kept rows — no semi-join back
-      // to the arrivals, nothing fingerprinted twice. Batch-sized pins,
-      // freed by the ContextCleaner when the foreachBatch closure returns
-      // (the Hygiene release path).
-      val scored = scoreFingerprints(fps, hash, bands).localCheckpoint(true)
-      scored.select("doc_id", "dup_exact", "dup_near", "keep")
-        .write.mode("overwrite").parquet(s"$verdictDir/batch_id=$batchId")
-      if (maintainIndex)
-        appendAndCommit(s, indexPath, snap, scored.filter(col("keep")), tag,
-          Map("last_batch" -> batchId.toString), handle)
-      else ledgerCommit(s, verdictDir, batchId)
+      cache: Option[DedupCache] = None
+  ): Unit =
+    runBatch(batch.sparkSession, indexPath, cache, "last_batch", batchId,
+      s"$verdictDir/batch_id=$batchId", "keep", Option.when(!maintainIndex)(verdictDir)) {
+      (_, hash, bands) => scoreFingerprints(fingerprints(batch).localCheckpoint(true), hash, bands)
     }
-  }
 
   /** Routing for documents the quality LM cannot score (no in-vocabulary
     * token ⇒ NULL NLL) — see [[pipelineBatch]]. */
@@ -1457,10 +1382,10 @@ object LlmOps {
     case object Quarantine extends UnscorablePolicy
   }
 
-  /** One micro-batch of the FULL crawl-admission pipeline — ingestBatch's
-    * commit protocol with the admission decision widened from "not a
-    * duplicate" to the three gates a pretraining crawl actually applies
-    * before a document lands in the corpus:
+  /** One micro-batch of the FULL crawl-admission pipeline — ingestBatch
+    * with the admission decision widened from "not a duplicate" to the
+    * three gates a pretraining crawl actually applies before a document
+    * lands in the corpus:
     *
     *   1. dedup against the persisted index (d08/d16's verdict),
     *   2. eval-contamination against the frozen train gram set (d22's
@@ -1481,16 +1406,13 @@ object LlmOps {
     * column carries the route: admit / reject / quarantine.
     *
     * One verdict row per arrival carries all three gates' evidence plus
-    * the final `admit`, landed by per-batch overwrite (exactly-once).
-    * Only docs passing ALL gates extend the dedup index: the index is
-    * CORPUS membership, and a rejected doc never entered the corpus. (A
-    * crawler that instead wants "seen, don't refetch" semantics tracks
-    * that in its frontier, not in the corpus index — d20/domainQuota
-    * territory.) Crash safety is ingestBatch's protocol verbatim: the
-    * verdict read is pinned before any append mutates index files, data
-    * directories land before the one-manifest commit carrying
-    * `last_batch`, and a replay either recomputes against the unchanged
-    * snapshot or skips on the marker.
+    * the final `admit`, exactly once under [[runBatch]]. Only docs passing
+    * ALL gates extend the dedup index: the index is CORPUS membership, and
+    * a rejected doc never entered the corpus. (A crawler that instead
+    * wants "seen, don't refetch" semantics tracks that in its frontier,
+    * not in the corpus index — d20/domainQuota territory.) The arrivals
+    * are read three times (fingerprint, contamination, NLL), so they are
+    * pinned and the source read runs once.
     *
     * Scale: the three scorers are each stream-static joins/aggregates
     * linear in the batch and independent of corpus size (their gated
@@ -1507,35 +1429,13 @@ object LlmOps {
       batchId: Long,
       maintainIndex: Boolean,
       unscorable: UnscorablePolicy = UnscorablePolicy.Reject,
-      handle: Option[DedupIndexHandle] = None
-  ): Unit = {
-    val s = batch.sparkSession
-    val (snap, hash, bands) = resolveIndex(s, indexPath, handle)
-    val committed =
-      if (maintainIndex) snap.props.get("last_batch").contains(batchId.toString)
-      else !ledgerAdmits(s, verdictDir, batchId) // verdict-only: the _ledger governs
-    if (!committed) {
-      val tag = s"batch-$batchId"
-      // BEFORE the verdict write — the ingestBatch discipline
-      if (maintainIndex) {
-        requireMonotonicBatchId(snap, batchId, indexPath)
-        requireFreshBatchTag(snap, tag, indexPath)
-      }
-      // the arrivals are read three times (fingerprint, contamination,
-      // NLL): pin them so the source read runs once
-      val arrivals = batch.localCheckpoint(true)
-      // the pre-append view, carrying each arrival's fingerprints: the
-      // verdict partition is its projection, the index parts its admitted
-      // rows
-      val verdicts = gateVerdicts(arrivals, hash, bands, trainGrams, lmCounts, nllMax, unscorable)
-        .localCheckpoint(true)
-      verdicts.drop("th", "simhash").write.mode("overwrite").parquet(s"$verdictDir/batch_id=$batchId")
-      if (maintainIndex)
-        appendAndCommit(s, indexPath, snap, verdicts.filter(col("admit")), tag,
-          Map("last_batch" -> batchId.toString), handle)
-      else ledgerCommit(s, verdictDir, batchId)
+      cache: Option[DedupCache] = None
+  ): Unit =
+    runBatch(batch.sparkSession, indexPath, cache, "last_batch", batchId,
+      s"$verdictDir/batch_id=$batchId", "admit", Option.when(!maintainIndex)(verdictDir)) {
+      (_, hash, bands) =>
+        gateVerdicts(batch.localCheckpoint(true), hash, bands, trainGrams, lmCounts, nllMax, unscorable)
     }
-  }
 
   /** The three admission gates' verdict frame — one row per arrival with
     * its fingerprints (`th`, `simhash`), every gate's evidence, the final
@@ -1619,17 +1519,11 @@ object LlmOps {
     * payloads (`docs` — any superset; it is semi-joined down), since
     * verdict rows carry evidence, not text.
     *
-    * Exactly-once is the ingestBatch protocol with a drain-scoped
-    * marker: verdicts land in `<drainDir>/drain_id=<id>` (overwrite —
-    * replay rewrites), the admitted rows' index parts land under a
-    * `drain-<id>` tag, and ONE manifest commit carries
-    * `last_drain=<id>`. A crash before the commit re-runs the drain
-    * against the unchanged snapshot; after it, the same `drainId` is a
-    * no-op. Drain ids are monotonic per index (the batch-id discipline);
-    * a lower id is refused, and `last_batch` rides through untouched so
-    * the stream's replay skip survives a drain exactly as it survives a
-    * compaction. Run it BETWEEN micro-batches from the index's single
-    * writer (the compaction contract). */
+    * Exactly-once is [[runBatch]] under the drain-scoped `last_drain`
+    * marker: verdicts land in `<drainDir>/drain_id=<id>`, the admitted
+    * rows' index parts under a `drain-<id>` tag, and the stream's
+    * `last_batch` rides through untouched. Run it BETWEEN micro-batches
+    * from the index's single writer (the compaction contract). */
   private[graft] def drainQuarantine(
       docs: DataFrame,
       indexPath: String,
@@ -1639,130 +1533,50 @@ object LlmOps {
       verdictDir: String,
       drainDir: String,
       drainId: Long,
-      handle: Option[DedupIndexHandle] = None
+      cache: Option[DedupCache] = None
   ): Unit = {
     val s = docs.sparkSession
-    val (snap, hash, bands) = resolveIndex(s, indexPath, handle)
-    if (!snap.props.get("last_drain").contains(drainId.toString)) {
-      val tag = s"drain-$drainId"
-      snap.props.get("last_drain").map(_.toLong).foreach { hw =>
-        require(
-          drainId > hw,
-          s"drain id $drainId is below the committed high-water mark $hw of " +
-            s"$indexPath: drain ids are monotonic per index — a replayed or " +
-            "second-writer drain must not overwrite an earlier drain's verdicts"
-        )
-      }
-      requireFreshBatchTag(snap, tag, indexPath)
-      val parked = s.read.parquet(verdictDir)
-        .filter(col("verdict") === "quarantine")
-        .select("doc_id").distinct()
-      val drainDirExists = new org.apache.hadoop.fs.Path(drainDir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(drainDir))
-      // COMMITTED drains' decisions only: a drain partition is durable the
-      // moment its parquet write lands, but its admits reach the index only
-      // at the manifest commit that advances `last_drain`. Any partition
-      // with drain_id above the committed high-water — this id's own
-      // half-finished replay, OR an earlier drain that crashed between its
-      // verdict write and its commit and was never replayed under the same
-      // id — carries 'admit' rows whose index append never happened.
-      // Treating those as terminal would permanently exclude the doc from
-      // re-scoring while the audit trail claims it was admitted. So the
-      // terminal set is gated on drain_id <= last_drain, not =!= drainId.
-      val committedHw = snap.props.get("last_drain").map(_.toLong)
-      val decided =
-        if (drainDirExists && committedHw.isDefined)
-          s.read.parquet(drainDir)
-            .filter(col("drain_id") <= committedHw.get && col("verdict") =!= "quarantine")
-            .select("doc_id")
-        else s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
-      val eligible = parked.join(decided, Seq("doc_id"), "left_anti")
-      val arrivals = docs.join(eligible, Seq("doc_id"), "left_semi")
-        .localCheckpoint(true) // pipelineBatch's arrivals pin
-      val verdicts =
-        gateVerdicts(arrivals, hash, bands, trainGrams, lmCounts, nllMax,
-          UnscorablePolicy.Quarantine)
-          .localCheckpoint(true) // the pre-append view (pipelineBatch's)
-      verdicts.drop("th", "simhash").write.mode("overwrite").parquet(s"$drainDir/drain_id=$drainId")
-      appendAndCommit(s, indexPath, snap, verdicts.filter(col("admit")), tag,
-        Map("last_drain" -> drainId.toString), handle)
+    runBatch(s, indexPath, cache, "last_drain", drainId, s"$drainDir/drain_id=$drainId", "admit") {
+      (snap, hash, bands) =>
+        val parked = s.read.parquet(verdictDir)
+          .filter(col("verdict") === "quarantine")
+          .select("doc_id").distinct()
+        val drainDirExists = new org.apache.hadoop.fs.Path(drainDir)
+          .getFileSystem(s.sparkContext.hadoopConfiguration)
+          .exists(new org.apache.hadoop.fs.Path(drainDir))
+        // COMMITTED drains' decisions only: a drain partition is durable the
+        // moment its parquet write lands, but its admits reach the index only
+        // at the manifest commit that advances `last_drain`. Any partition
+        // with drain_id above the committed high-water — this id's own
+        // half-finished replay, OR an earlier drain that crashed between its
+        // verdict write and its commit and was never replayed under the same
+        // id — carries 'admit' rows whose index append never happened.
+        // Treating those as terminal would permanently exclude the doc from
+        // re-scoring while the audit trail claims it was admitted. So the
+        // terminal set is gated on drain_id <= last_drain, not =!= drainId.
+        val committedHw = snap.props.get("last_drain").map(_.toLong)
+        val decided =
+          if (drainDirExists && committedHw.isDefined)
+            s.read.parquet(drainDir)
+              .filter(col("drain_id") <= committedHw.get && col("verdict") =!= "quarantine")
+              .select("doc_id")
+          else s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
+        val eligible = parked.join(decided, Seq("doc_id"), "left_anti")
+        val arrivals = docs.join(eligible, Seq("doc_id"), "left_semi")
+          .localCheckpoint(true) // pipelineBatch's arrivals pin
+        gateVerdicts(arrivals, hash, bands, trainGrams, lmCounts, nllMax, UnscorablePolicy.Quarantine)
     }
   }
 
-  /** Batch ids are scoped to ONE stream checkpoint (the single-writer
-    * assumption both batch protocols document) — but the failure mode of
-    * violating it was silent: a new stream incarnation (fresh checkpoint
-    * dir) against an existing index restarts ids at 0, its
-    * `mode(overwrite)` then destroys the already-committed `batch-0`
-    * directory's fingerprints, and the `:+ tag` append lists the same tag
-    * twice (rows double-counted consistently — no reader ever notices).
-    * A genuine crash-replay never trips this: before the commit the tag
-    * is not yet in any committed manifest (overwrite is the idempotent
-    * retry), after it the `last_batch` marker short-circuits the whole
-    * batch. A committed tag reached with a DIFFERENT last_batch can only
-    * be a second writer or a checkpoint reset — refuse loudly. */
-  private def requireFreshBatchTag(
-      snap: graft.operators.SnapshotLog.Snapshot,
-      tag: String,
-      indexPath: String
-  ): Unit =
-    require(
-      !snap.tables.valuesIterator.exists(_.contains(tag)),
-      s"batch tag '$tag' is already committed in snapshot v${snap.version} of " +
-        s"$indexPath: a new stream incarnation (fresh checkpoint) is replaying " +
-        "batch ids against an existing index — resume from the original " +
-        "checkpoint, or point the stream at a fresh index"
-    )
-
-  /** The tag refusal's blind spot: a committed batch that admitted ZERO
-    * rows leaves no `batch-<id>` tag in any manifest (ingestBatch commits
-    * only the marker), so [[requireFreshBatchTag]] waves a fresh
-    * incarnation's replay of that id through and its `mode(overwrite)`
-    * silently stomps the original incarnation's verdict partition. But
-    * batch ids within one checkpoint are MONOTONIC, and every committed
-    * batch — empty or not — advances the manifest's `last_batch`
-    * high-water mark; so an incoming id BELOW the mark can only be a
-    * second writer or a checkpoint reset (a genuine replay is always of
-    * the marker batch itself, which the committed-skip already caught).
-    * Refuse before any write — the same discipline, id-shaped. */
-  private def requireMonotonicBatchId(
-      snap: graft.operators.SnapshotLog.Snapshot,
-      batchId: Long,
-      indexPath: String
-  ): Unit =
-    snap.props.get("last_batch").map(_.toLong).foreach { hw =>
-      require(
-        batchId > hw,
-        s"batch id $batchId is below the committed high-water mark $hw of " +
-          s"$indexPath: a new stream incarnation (fresh checkpoint) is replaying " +
-          "batch ids against an existing index — resume from the original " +
-          "checkpoint, or point the stream at a fresh index"
-      )
-    }
-
   private val VerdictLedgerKind = "verdict-ledger"
 
-  /** A `maintainIndex = false` stream commits NO manifest anywhere — the
-    * index is read-only under it (possibly another writer's), so neither
-    * the marker skip nor either refusal above can see its history, and a
-    * fresh incarnation silently overwrites the original's verdict
-    * partitions. This ledger is the missing durable state, kept where
-    * the verdict-only stream IS the single writer: a snapshot log under
-    * `<verdictDir>/_ledger` (underscore-hidden, so the verdict table's
-    * partition discovery never sees it) holding only the `last_batch`
-    * high-water mark. Commit ordering mirrors ingestBatch: verdicts
-    * land first, then the one-manifest ledger commit — a crash between
-    * them replays into an idempotent partition rewrite; after it, the
-    * skip. GC keeps the ledger at one live manifest per batch. */
+  /** The durable replay state of a `maintainIndex = false` stream, which
+    * commits NO index manifest (the index is read-only under it): a
+    * snapshot log under `<verdictDir>/_ledger` (underscore-hidden, so the
+    * verdict table's partition discovery never sees it) holding only the
+    * `last_batch` high-water mark, committed after the verdict partition
+    * lands. GC keeps the ledger at one live manifest per batch. */
   private def ledgerRoot(verdictDir: String): String = s"$verdictDir/_ledger"
-
-  private def ledgerLastBatch(s: SparkSession, verdictDir: String): Option[Long] =
-    try {
-      graft.operators.SnapshotLog
-        .current(s, ledgerRoot(verdictDir), VerdictLedgerKind)
-        .props.get("last_batch").map(_.toLong)
-    } catch { case _: graft.operators.ArtifactManifest.Missing => None }
 
   private def ledgerCommit(s: SparkSession, verdictDir: String, batchId: Long): Unit = {
     val L = graft.operators.SnapshotLog
@@ -1771,24 +1585,6 @@ object LlmOps {
       Map.empty, Map("last_batch" -> batchId.toString)): Unit
     L.gc(s, root, VerdictLedgerKind)
   }
-
-  /** The verdict-only twin of the committed-skip + monotonic refusal:
-    * returns true when the batch should RUN (not yet committed), throws
-    * on an id below the ledger's high-water mark. */
-  private def ledgerAdmits(s: SparkSession, verdictDir: String, batchId: Long): Boolean =
-    ledgerLastBatch(s, verdictDir) match {
-      case Some(hw) if hw == batchId => false // committed; only the checkpoint advance was lost
-      case Some(hw) =>
-        require(
-          batchId > hw,
-          s"batch id $batchId is below the verdict ledger's high-water mark $hw of " +
-            s"$verdictDir: a new stream incarnation (fresh checkpoint) is replaying " +
-            "batch ids over an existing verdict table — resume from the original " +
-            "checkpoint, or point the stream at a fresh verdict directory"
-        )
-        true
-      case None => true
-    }
 
   /** Compact an appended dedup index: distinct the hash table (appends
     * legitimately re-add a content hash the corpus already carries —

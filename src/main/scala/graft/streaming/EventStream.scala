@@ -162,7 +162,6 @@ object EventStream {
       }
       .start()
 
-  /** One maintenance step (the foreachBatch body, callable from specs). */
   /** Read a persisted store, or a typed empty frame ONLY when the store
     * genuinely does not exist yet (first batch). The existence probe is
     * explicit — a transient FS error, corrupt footer, or OOM-wrapped
@@ -177,6 +176,7 @@ object EventStream {
     if (!fs.exists(p)) empty else s.read.parquet(dir)
   }
 
+  /** One maintenance step (the foreachBatch body, callable from specs). */
   private[graft] def canonicalDedupBatch(
       batch: DataFrame, storeDir: String, verdictDir: String, batchId: Long): Unit = {
     val s = batch.sparkSession
@@ -458,9 +458,10 @@ object EventStream {
     *   - batch-INTERNAL duplicates are admitted together, as in d08 (the
     *     reference's incremental shape): dedupe within the pipe upstream
     *     via [[dedupStream]] if arrivals can repeat inside one horizon;
-    *   - CRASH SAFETY is [[graft.queries.LlmOps.ingestBatch]]'s commit
-    *     protocol on the [[graft.operators.SnapshotLog]] versioned
-    *     manifest: a kill anywhere inside a batch — mid-data-write,
+    *   - CRASH SAFETY is the exactly-once batch commit on the
+    *     [[graft.operators.SnapshotLog]] versioned manifest
+    *     ([[graft.operators.SnapshotLog.replayGate]]): a kill anywhere
+    *     inside a batch — mid-data-write,
     *     between data and manifest commit, after commit but before the
     *     checkpoint advances — replays to the SAME verdicts and exactly
     *     one logical index append (chaos-spec-pinned), with no rename
@@ -496,12 +497,12 @@ object EventStream {
     graft.queries.LlmOps.loadDedupIndex(docs.sparkSession, indexPath): Unit
     // cross-batch snapshot reuse: the loop is the single writer, so each
     // batch costs one staleness listing, not a manifest re-resolution
-    val handle = Some(new graft.queries.LlmOps.DedupIndexHandle(indexPath))
+    val cache = Some(graft.queries.LlmOps.dedupCache(indexPath))
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.queries.LlmOps.ingestBatch(batch, indexPath, verdictDir, batchId, maintainIndex, handle)
+        graft.queries.LlmOps.ingestBatch(batch, indexPath, verdictDir, batchId, maintainIndex, cache)
       }
       .start()
   }
@@ -894,9 +895,9 @@ object EventStream {
     * Static inputs are ARTIFACTS, not live recomputes: pass
     * loadDedupIndex's path, a loaded gram set, loadBigramLm's counts.
     * Streaming state: zero (three stream-static joins); crash safety:
-    * ingestBatch's snapshot-log protocol (chaos-spec-pinned there),
-    * applied to the widened verdict. Docs the LM cannot score route by
-    * the `unscorable` knob — reject (default) or park as `quarantine`
+    * the snapshot-log batch commit ingestGuard runs (chaos-spec-pinned
+    * there), applied to the widened verdict. Docs the LM cannot score
+    * route by the `unscorable` knob — reject (default) or park as `quarantine`
     * in the verdict column (LlmOps.UnscorablePolicy; never admitted
     * either way). */
   def crawlPipeline(
@@ -913,14 +914,14 @@ object EventStream {
   ): org.apache.spark.sql.streaming.StreamingQuery = {
     // full index validation once, at stream start (ingestGuard's rule)
     graft.queries.LlmOps.loadDedupIndex(docs.sparkSession, indexPath): Unit
-    val handle = Some(new graft.queries.LlmOps.DedupIndexHandle(indexPath))
+    val cache = Some(graft.queries.LlmOps.dedupCache(indexPath))
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.queries.LlmOps.pipelineBatch(
           batch, indexPath, trainGrams, lmCounts, nllMax, verdictDir, batchId,
-          maintainIndex, unscorable, handle)
+          maintainIndex, unscorable, cache)
       }
       .start()
   }
@@ -948,14 +949,14 @@ object EventStream {
     graft.queries.LlmOps.loadDedupIndex(docs.sparkSession, indexPath): Unit
     val grams = graft.queries.LlmOps.gramSetReader(gramsPath)
     grams.get(docs.sparkSession): Unit // validate the artifact at stream start
-    val handle = Some(new graft.queries.LlmOps.DedupIndexHandle(indexPath))
+    val cache = Some(graft.queries.LlmOps.dedupCache(indexPath))
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.queries.LlmOps.pipelineBatch(
           batch, indexPath, grams.get(batch.sparkSession), lmCounts, nllMax,
-          verdictDir, batchId, maintainIndex, unscorable, handle)
+          verdictDir, batchId, maintainIndex, unscorable, cache)
       }
       .start()
   }
@@ -966,7 +967,7 @@ object EventStream {
     * quantizer and appended as one immutable `batch-<id>` partitioned
     * directory + one manifest commit carrying the replay-skip marker
     * (AnnIvf.appendIndexBatch — crash-safe under the same snapshot-log
-    * protocol as the dedup loop: a torn append is unreferenced and
+    * batch commit as the dedup loop: a torn append is unreferenced and
     * invisible, a committed replay is a no-op, a fresh incarnation
     * replaying ids is refused). Searches against the index pick up each
     * batch as soon as its manifest commits — a live embedding store
@@ -1020,14 +1021,14 @@ object EventStream {
     val rejects = Option(rejectDir).filter(_.nonEmpty)
     // full validation once, at stream start (the ingestGuard rule)
     graft.operators.AnnIvf.validateIndex(emb.sparkSession, indexPath)
-    // cross-batch snapshot + centroid reuse (the r9 floor-trim discipline)
-    val handle = Some(new graft.operators.AnnIvf.IngestHandle(indexPath))
+    // cross-batch snapshot + centroid reuse
+    val cache = Some(graft.operators.AnnIvf.ingestCache(indexPath))
     emb.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.operators.AnnIvf.appendIndexBatch(
-          batch.sparkSession, batch, indexPath, batchId, handle, rejects)
+          batch.sparkSession, batch, indexPath, batchId, cache, rejects)
         if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
           graft.operators.AnnIvf.compactIndex(batch.sparkSession, indexPath, effectiveRetain)
       }

@@ -216,7 +216,7 @@ class AnnIvfSpec extends AnyFunSuite {
     val third = substring(md5(col("vec_id").cast("string")), 1, 1)
     val path = java.nio.file.Files.createTempDirectory("ivf-compact").toString + "/ivf"
     AnnIvf.buildIndex(spark, emb.filter(third < "6"), path, nlist = 16)
-    val handle = Some(new AnnIvf.IngestHandle(path))
+    val handle = Some(AnnIvf.ingestCache(path))
     AnnIvf.appendIndexBatch(spark, emb.filter(third >= "6" && third < "a"), path, 0L, handle)
     AnnIvf.appendIndexBatch(spark, emb.filter(third >= "a"), path, 1L, handle)
     assert(vectorDirs(path).size == 3, s"expected base + 2 batch dirs: ${vectorDirs(path)}")

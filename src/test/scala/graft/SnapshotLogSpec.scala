@@ -224,4 +224,62 @@ class SnapshotLogSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("replay gate: skip, run, refuse below the mark, refuse a committed tag — both markers") {
+    for ((marker, other) <- Seq("last_batch" -> "last_drain", "last_drain" -> "last_batch")) {
+      val noun = marker.stripPrefix("last_")
+      // the other writer's marker sits far above: it must not gate this one
+      val snap = L.Snapshot(4, Map("t" -> Seq(s"$noun-5", s"$noun-9")),
+        Map(marker -> "5", other -> "100"))
+      val fresh = L.Snapshot(0, Map.empty, Map.empty)
+      val cases: Seq[(L.Snapshot, Long, Either[String, Boolean])] = Seq(
+        (snap, 5L, Right(false)), // the marker id: committed, skip
+        (snap, 6L, Right(true)), // next id: run
+        (fresh, 0L, Right(true)), // a fresh root runs any id
+        (snap, 4L, Left("high-water mark")), // below the mark: refused
+        (snap, 9L, Left("already committed")) // above the mark, tag listed: refused
+      )
+      for ((sn, id, want) <- cases) {
+        val got =
+          try Right(L.replayGate(sn, "/idx", "test index", marker, id, Some(s"$noun-$id")))
+          catch { case e: IllegalArgumentException => Left(e.getMessage) }
+        (want, got) match {
+          case (Left(part), Left(msg)) =>
+            assert(msg.contains(part) && msg.contains("test index at /idx"), s"$marker id $id: $msg")
+          case _ => assert(got == want, s"$marker id $id")
+        }
+      }
+    }
+  }
+
+  test("Cached writer half: the probe prices the next commit; committed installs it") {
+    val root = tmp("cached-writer")
+    L.commit(spark, root, "k1", 1, Map.empty, Map("n" -> "1"))
+    // a torn file burns version 2: the next commit must use 3
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(root, "manifest.v2"), "junk".getBytes("UTF-8"))
+    var builds = 0
+    val cache = new L.Cached[String](root, "k1", (_, sn) => { builds += 1; sn.props("n") },
+      keepOnCommit = true)
+    val (s1, t1) = cache.resolve(spark)
+    assert(s1.version == 1 && t1 == "1" && cache.nextVersion == 3)
+    val s3 = L.commit(spark, root, "k1", cache.nextVersion, Map.empty, Map("n" -> "3"))
+    cache.committed(spark, s3)
+    // installed: served without a rebuild, and the kept value survives
+    val (sn, t) = cache.resolve(spark)
+    assert(sn == s3 && t == "1" && builds == 1 && cache.nextVersion == 4)
+  }
+
+  test("a commit's marker carry refuses a root of another kind instead of re-kinding it") {
+    import spark.implicits._
+    val root = tmp("rekind")
+    L.commit(spark, root, "k1", 1, Map.empty, Map("last_batch" -> "3"))
+    val (hash, bands) = graft.queries.LlmOps.dedupIndexOf(
+      Seq((1L, "alpha beta gamma")).toDF("doc_id", "text"))
+    intercept[ArtifactManifest.Mismatch] {
+      graft.queries.LlmOps.saveDedupIndex(hash, bands, root)
+    }
+    assert(L.current(spark, root, "k1").props("last_batch") == "3")
+    assert(L.latestVersion(spark, root) == 1, "the refused save still committed a manifest")
+  }
 }
